@@ -36,11 +36,6 @@ def curation_flags(
     include_rep=True appends the Gopher repetition flag (r5) IN the same
     scan — it is a pure column expression, so the funnel verbs ask for
     it here instead of paying a second text scan + id join."""
-    from ..queries_base import scan_fanout
-
-    # r6: the flag pack is a dozen regexes per row — fan out scans whose
-    # file layout under-parallelizes them (guide §2.5; no-op otherwise)
-    df = scan_fanout(df, key=id_col)
     t = F.col(text_col)
     words = F.split(F.regexp_replace(F.trim(t), r"\s+", " "), " ")
     n_tokens = F.size(words).cast("long")

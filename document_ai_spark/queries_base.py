@@ -11,68 +11,6 @@ from pyspark.sql import functions as F
 
 SHINGLE_W = 3
 
-# scan_fanout: repartition factor over defaultParallelism, and the input
-# size past which the fan-out shuffle is skipped (at that point the scan
-# has real per-slot volume and an extra full-data shuffle is not free).
-# factor=1 measured best on the sf0.1 tables at local[32]: the rows are
-# uniform (no skew for overpartitioning to smooth) and 4x tasks paid
-# ~2x in task/Arrow-batch overhead (bench_extra sweep, OPTIMIZATION_r06)
-FANOUT_FACTOR = 1
-FANOUT_MAX_BYTES_PER_SLOT = 256 * 1024 * 1024
-
-
-def scan_fanout(df, key: str | F.Column = "doc_id",
-                factor: int | None = None):
-    """Adaptive map-stage fan-out for heavy per-row compute (optimization
-    guide §2.5, "input skew: one huge unsplittable file ... repartition
-    immediately after the read").
-
-    The driver's testdata tables are ONE parquet file with ONE row group,
-    so every scan is a single task and all downstream per-row work
-    (regex packs, shingle md5s, the extraction kernel, numpy winnowing)
-    serializes on one core of a local[32] session. This helper
-    hash-repartitions by a deterministic key ONLY when the scan itself
-    cannot reach 2x-parallelism granularity AND the input is small
-    enough that the one-pass shuffle is cheap next to the per-row
-    compute it parallelizes:
-
-      - scans that already yield >= 2*parallelism splits: NO-OP (the
-        production many-files / many-row-groups layout);
-      - non-local or unreadable inputs: NO-OP (cluster scans get their
-        granularity from the table manifest);
-      - inputs bigger than FANOUT_MAX_BYTES_PER_SLOT per core: NO-OP
-        (scale-adaptive: the threshold grows with the cluster).
-
-    The repartition key is a real column (never rand() — guide §2.5's
-    retry-duplication warning), and the heavy derived expressions stay
-    ABOVE the exchange, so the shuffle carries the scan columns once
-    and the expensive work runs at factor*parallelism."""
-    import os
-    from urllib.parse import urlparse
-
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    try:
-        if df.rdd.getNumPartitions() >= 2 * par:
-            return df
-        files = df.inputFiles()
-    except Exception:
-        return df
-    total = 0
-    for f in files:
-        p = urlparse(f)
-        if p.scheme not in ("file", ""):
-            return df
-        try:
-            total += os.path.getsize(p.path)
-        except OSError:
-            return df
-    if total > FANOUT_MAX_BYTES_PER_SLOT * par:
-        return df
-    n = (factor if factor is not None else FANOUT_FACTOR) * par
-    key_col = F.col(key) if isinstance(key, str) else key
-    return df.repartition(n, key_col)
-
 
 def _norm_words(col: str | F.Column = "text") -> F.Column:
     """Frozen word split over a column name OR an expression (operators
@@ -127,11 +65,8 @@ def minhash_band_pairs(df, id_col: str = "doc_id",
             "need n_bands * rows_per_band == n_hashes, got "
             f"{n_bands} * {rows_per_band} != {n_hashes}"
         )
-    ids = scan_fanout(
-        df.select(F.col(id_col).alias("_id"),
-                  F.col(text_col).alias("text")),
-        key="_id",
-    )
+    ids = df.select(F.col(id_col).alias("_id"),
+                    F.col(text_col).alias("text"))
     # dedup shingles PER DOC (array_distinct) before exploding: the
     # min() signature is identical over a multiset or its distinct set,
     # and the per-doc form deletes what used to be a full shuffle of

@@ -40,7 +40,6 @@ from .queries_base import (
     minhash_band_pairs,
     N_BANDS,
     N_MINHASH,
-    scan_fanout,
 )
 
 # text-analysis operators live in queries_text; re-exported here so the
@@ -118,9 +117,7 @@ FROM aug
 # --------------------------------------------------------------------------
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r6: fan out the single-split documents scan so the shingle md5
-    # work runs at full width (guide §2.5; no-op on parallel layouts)
-    d = scan_fanout(_t(spark, sf_dir, "documents"))
+    d = _t(spark, sf_dir, "documents")
     # materialize `words` once per row — inlining the split() inside the
     # transform() lambda re-evaluates it per element (O(words^2) per doc).
     # Shingles dedup PER DOC (array_distinct) instead of a global
@@ -232,29 +229,24 @@ def q_ngram_jaccard_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     snip = d0.filter(F.col("doc_id") == 0).select(
         F.substring("text", 1, 120).alias("snip")
     )
-    # fan out only the corpus side (r6): the probe/eval subplans below
-    # are built from the RAW scan — behind the fan-out exchange their
-    # one-/three-row filters would each pay a full repartition stage.
-    # The % 50 == 7 injection never touches docs 0-2, so the probe and
-    # eval shingle sets are identical either way.
-    d = scan_fanout(d0).crossJoin(F.broadcast(snip)).select(
+    d = d0.crossJoin(F.broadcast(snip)).select(
         "doc_id",
         F.when(
             F.col("doc_id") % 50 == 7,
             F.concat(F.col("text"), F.lit(" "), F.col("snip")),
         ).otherwise(F.col("text")).alias("text"),
     )
-    sh = d.withColumn("words", _norm_words()).select(
-        "doc_id", F.array_distinct(_shingles(F.col("words"))).alias("sh")
-    )
-    sh_small = (
-        d0.filter(F.col("doc_id") <= _DECON_EVAL_MAX_ID)
-        .withColumn("words", _norm_words())
-        .select(
-            "doc_id",
-            F.array_distinct(_shingles(F.col("words"))).alias("sh"),
+
+    def doc_shingles(frame: DataFrame) -> DataFrame:
+        return frame.withColumn("words", _norm_words()).select(
+            "doc_id", F.array_distinct(_shingles(F.col("words"))).alias("sh")
         )
-    )
+
+    sh = doc_shingles(d)
+    # the probe/eval docs 0-2 come from the raw scan: the % 50 == 7
+    # injection never touches them, and it keeps the snip cross join
+    # (one broadcast stage each) out of the two small subplans
+    sh_small = doc_shingles(d0.filter(F.col("doc_id") <= _DECON_EVAL_MAX_ID))
     probe = sh_small.filter(F.col("doc_id") == 0).select(
         F.col("sh").alias("probe_sh")
     )
@@ -454,14 +446,13 @@ WHERE round(
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
-    # r6: fan out the single-split scan (guide §2.5) and read the 64
-    # hash bits from TWO conv()s of the md5 hex halves instead of 16
-    # per-nibble conv(substring) string ops — hi carries bits 63..32
-    # (first 8 hex chars, big-endian), lo bits 31..0, so
+    # r6: read the 64 hash bits from TWO conv()s of the md5 hex halves
+    # instead of 16 per-nibble conv(substring) string ops — hi carries
+    # bits 63..32 (first 8 hex chars, big-endian), lo bits 31..0, so
     # bit i = (lo-or-hi >> (i % 32)) & 1 reproduces the old
     # nibble-indexed read exactly (verified value-identical; each half
     # is < 2^32 so the BIGINT cast of conv() never overflows).
-    tok = scan_fanout(d).select(
+    tok = d.select(
         "doc_id", F.explode(_norm_words()).alias("token")
     ).filter(F.col("token") != "")
     h = F.md5(F.encode("token", "UTF-8"))
@@ -925,9 +916,7 @@ _BMP_SUFFIXES = ["", "a", "b", "c", "d", "e"]
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import image_features
 
-    # fan out the single-split scan: the per-row BMP decode is Python
-    # work that otherwise serializes on one task (guide §2.5)
-    d = scan_fanout(_t(spark, sf_dir, "documents"))
+    d = _t(spark, sf_dir, "documents")
     hx = F.concat(
         *[
             F.md5(F.encode(F.concat(F.col("text"), F.lit(s)), "UTF-8"))

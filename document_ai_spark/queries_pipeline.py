@@ -27,7 +27,6 @@ from .operators.extraction import extract_pages
 from .operators.metrics import cause_confusion
 from .operators.validation import validate_extracted
 from .queries import _t
-from .queries_base import scan_fanout
 
 _HEAD = (
     '<html><head><meta charset="utf-8"><title>t</title>'
@@ -55,16 +54,7 @@ def _norm_text() -> F.Column:
 
 def _article_pages(d: DataFrame, linkfarm_mod: int | None = None) -> DataFrame:
     """documents -> pages(url, warc_ts, html) with synthesized article HTML;
-    rows where doc_id % linkfarm_mod == 0 become link farms instead.
-
-    The scan is fanned out BEFORE the html is synthesized (r6, guide
-    §2.5): the testdata table is one file / one row group, so without
-    the repartition the whole extraction kernel downstream runs on ONE
-    task; fanning out here means the exchange carries the source text
-    once and the concat + kernel run at full width. extract_pages'
-    salted='auto' machinery is unchanged — it targets real page tables
-    whose row-group structure the footer probe can see."""
-    d = scan_fanout(d)
+    rows where doc_id % linkfarm_mod == 0 become link farms instead."""
     article = F.concat(
         F.lit(_HEAD + "<main><h2>"), _heading_expr(),
         F.lit("</h2><p>"), F.col("text"), F.lit("</p></main>"), F.lit(_TAIL),
@@ -120,7 +110,7 @@ FROM documents
 def q_extract_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF branch: one-line payload built by concat; kernel must return the
     exact line."""
-    d = scan_fanout(_t(spark, sf_dir, "documents"))
+    d = _t(spark, sf_dir, "documents")
     line = F.concat(
         F.lit("doc "), F.col("doc_id").cast("string"), F.lit(" "),
         F.substring(_norm_text(), 1, 40),

@@ -17,9 +17,12 @@ Word boxes are synthesized deterministically from the documents table with
 pure integer arithmetic (word position + word length), so Spark and the
 DuckDB oracle construct the identical geometry — no RNG, no external data.
 
-Scale shape: boxes are per-document; the key-box and candidate self-joins
-hash-partition on doc_id (uniform key, bounded fan-in per page), so the
-plan is two shuffles on doc_id regardless of corpus size. The in-kernel
+Scale shape: boxes are per-document; the key-box pick and the candidate
+argmin are min_by aggregates on (doc_id, key) that combine map-side, so
+each of the plan's two shuffles carries at most one row per (doc, key)
+per task, and the box side itself is never shuffled or broadcast. The
+key-box and candidate tables (<= docs x keys rows) are broadcast into
+the joins unconditionally, so they grow with the corpus. The in-kernel
 variant (operators/spatial.py) fuses the whole search into one
 applyInPandas pass per page — zero self-join — for pipelines that already
 group by document.
@@ -31,7 +34,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .queries import _t
-from .queries_base import scan_fanout
 from .queries_ml import _SQL_WORDS, _norm_words
 
 # layout constants (shared by both engines; see _word_boxes)
@@ -97,16 +99,14 @@ def _next_right_relational(
     order matching exactly (fuzzy_margin None) or by levenshtein <=
     fuzzy_margin; then the nearest-right y-overlapping candidate.
 
-    r6 plan shape (see plans/r06/next_right_word_2d_*.txt): the scan is
-    fanned out so the word-box explode runs at full width; the key-box
-    table kb (<= n_docs x n_keys rows) is materialized ONCE with
-    localCheckpoint — it feeds three joins, and as lazy lineage each
-    consumer re-ran the whole scan->explode->window subtree — and then
-    BROADCAST into the candidate join, so the full box side streams
-    map-side instead of being built into a corpus-sized broadcast
-    relation (the old plan broadcast every box of every document). The
-    sentinel joins broadcast kb/cand too: zero non-fanout exchanges."""
-    d = scan_fanout(d)
+    Plan shape (PLANS.md): the key-box table kb (<= n_docs x n_keys
+    rows) is materialized ONCE with localCheckpoint — it feeds three
+    joins, and as lazy lineage each consumer re-ran the whole
+    scan->explode->aggregate subtree — and then BROADCAST into the
+    candidate join, so the full box side streams map-side instead of
+    being built into a corpus-sized broadcast relation. The sentinel
+    joins broadcast kb/cand too: the only exchanges are those of the
+    two (doc_id, key) aggregates."""
     boxes = _word_boxes(d)
     spark = d.sparkSession
     keys_df = F.broadcast(
@@ -127,8 +127,7 @@ def _next_right_relational(
     # first-in-reading-order per (doc, key) as a min_by aggregate (r6):
     # `i` is unique per doc, so min_by(struct(boxes), i) is exactly the
     # old row_number()=1 window, but it partial-aggregates map-side with
-    # no sort, and the fan-out's doc_id partitioning already satisfies
-    # the final aggregate's clustering — zero extra exchange
+    # no sort, so its shuffle carries <= one row per (doc, key) per task
     kb = (
         kb0
         .groupBy("doc_id", "key")

@@ -24,7 +24,6 @@ from .queries_base import (
     _SQL_SHINGLES_FROM_WORDS,
     _SQL_WORDS,
     _SQL_WORDS_CTE,
-    scan_fanout,
 )
 
 # --------------------------------------------------------------------------
@@ -361,11 +360,8 @@ def winnow_fingerprints_df(d: DataFrame) -> DataFrame:
     the reusable form (q_winnow_fingerprint and the shared-passages /
     passage-excision suite branches build on it). doc_id keeps the
     input's type (r5: url-keyed extracted tables excise too)."""
-    # normalize with SQL expressions so both engines share one regex
-    # policy; fan out the single-split scan first — the numpy winnowing
-    # kernel is per-row Python work that otherwise serializes on one
-    # task (guide §2.5; no-op on parallel layouts)
-    norm = scan_fanout(d).select(
+    # normalize with SQL expressions so both engines share one regex policy
+    norm = d.select(
         "doc_id",
         F.substring(
             F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")),
@@ -603,9 +599,7 @@ GROUP BY counts.doc_id
 def q_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import MEDIA_SCHEMA, sample_frames
 
-    # fan out the single-split scan feeding the per-row Python frame
-    # sampler (guide §2.5; no-op on parallel layouts)
-    d = scan_fanout(_t(spark, sf_dir, "documents"))
+    d = _t(spark, sf_dir, "documents")
     media = d.select(
         F.col("doc_id").cast("string").alias("media_id"),
         F.lit("video").alias("kind"),

@@ -17,14 +17,12 @@ import os
 from pyspark.sql import SparkSession
 
 # Cap Arrow batch rows: html averages ~1-10 KB but giants reach MBs; the cap
-# bounds a batch's memory worst-case. Overridable per-run for measurement
-# (SPARK_GRAFT_ARROW_BATCH); see BENCH/BASELINE.md for the measured sweep.
-ARROW_MAX_RECORDS = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", "256"))
+# bounds a batch's memory worst-case (BENCH/BASELINE.md has the measured
+# sweep).
+ARROW_MAX_RECORDS = 256
 # 64-bit Arrow offsets for the binary html column: avoids 2 GiB chunk
 # overflow handling on wide batches of giant pages
-ARROW_LARGE_VARTYPES = os.environ.get(
-    "SPARK_GRAFT_LARGE_VARTYPES", "true"
-)
+ARROW_LARGE_VARTYPES = "true"
 
 
 def get_spark(
@@ -32,7 +30,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    warm: bool = True,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -86,7 +83,7 @@ def get_spark(
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if warm and not getattr(spark, "_das_warmed", False):
+    if not getattr(spark, "_das_warmed", False):
         _warm_session(spark)
         spark._das_warmed = True
     return spark

@@ -114,13 +114,11 @@ runtime — nothing in the query changes.
         """**Scale notes.** Shingling is pure column expressions
 (`transform`/`sequence` over a `words` array materialized once per row —
 inlining the split would be O(words^2) per doc; shingles dedup PER DOC
-via array_distinct, never a global DISTINCT shuffle). The leading
-Exchange is the r6 adaptive scan fan-out (queries_base.scan_fanout):
-the testdata table is one file / one row group, so without it every
-shingle md5 ran on ONE task; on a many-file production layout the
-fan-out is a no-op and the plan starts at the scan. The per-doc
-aggregation is one partial+final pass on a uniform key; the 8 minhash
-aggregates share two md5s per shingle via codegen CSE.
+via array_distinct, never a global DISTINCT shuffle). The plan starts
+at the scan. The per-doc aggregation is one partial+final pass on a
+uniform key; the two md5s per shingle and their 8-hex-char slices are
+projected below it, so each md5 runs once per row and the aggregate is
+8 plain min(column) buffers.
 """,
         "## minhash_lsh_pairs — candidate pairs without a self-join\n",
         "```\n" + plan(M.q_minhash_lsh_pairs(spark, sf),
@@ -136,29 +134,30 @@ parameters), so the rewrite strictly removes work.
 """,
         "## next_right_word_2d — 2-D spatial nearest join (J2)\n",
         "```\n" + plan(SP.q_next_right_word_2d(spark, sf)) + "\n```\n",
-        """**Scale notes.** r6 shape: ONE fanned-out scan feeds the box
-explode; the key-box table kb (<= n_docs x n_keys rows — for exact keys
+        """**Scale notes.** r6 shape: the scan feeds the box explode
+directly; the key-box table kb (<= n_docs x n_keys rows — for exact keys
 an `isin` filter, no join at all) is materialized once with
 localCheckpoint and BROADCAST into the candidate join, so the full box
 side streams map-side — the r5 plan instead built every box of every
 document into a broadcast relation and re-ran the explode three times
-(59-node plan, two SortMergeJoins; now broadcast-only joins and zero
-non-fanout exchanges — see plans/r06/next_right_word_2d_*.txt). The
-first-in-reading-order pick and the distance argmin are min_by
-aggregates over struct comparators (unique orderings, so identical to
-the old row_number()=1 windows), compiled as one partial+final
-SortAggregate inside the scan's doc_id partitioning — less machinery
-than the windows' double sort + WindowGroupLimit (measured 2.0 -> 1.2 s
-warm). At 100 TB kb stays
-broadcast-sized while the box side is never shuffled or broadcast at
-all. The fused in-kernel variant (operators/spatial.py) removes even
-the kb join for pipelines already grouped per page.
+(59-node plan, two SortMergeJoins; now broadcast-only joins — see
+plans/r06/next_right_word_2d_*.txt). The first-in-reading-order pick
+and the distance argmin are min_by aggregates over struct comparators
+(unique orderings, so identical to the old row_number()=1 windows),
+each one partial+final SortAggregate whose (doc_id, key) shuffle
+carries at most one row per (doc, key) per task — less machinery than
+the windows' double sort + WindowGroupLimit (measured 2.0 -> 1.2 s
+warm). The box side is never shuffled or broadcast; kb and the
+candidates hold up to docs x keys rows and are broadcast
+unconditionally, so at 100 TB they grow with the corpus. The fused
+in-kernel variant (operators/spatial.py) removes even the kb join for
+pipelines already grouped per page.
 """,
         "## simhash — columnar bit-vote aggregation\n",
         "```\n" + plan(M.q_simhash(spark, sf),
                        keep=["ReadSchema"]) + "\n```\n",
-        """**Scale notes.** Tokens explode JVM-side off the fanned-out
-scan (no Python); r6 reads the 64 hash bits from TWO conv()s of the md5
+        """**Scale notes.** Tokens explode JVM-side off the scan (no
+Python); r6 reads the 64 hash bits from TWO conv()s of the md5
 hex halves (hi = bits 63..32, lo = 31..0) instead of 16 per-nibble
 conv(substring) string ops — value-identical, pinned by the per-token
 spec test. The 64 bit-votes are one partial+final HashAggregate pass on

@@ -1,61 +1,38 @@
-"""Round-6 optimization guards: adaptive scan fan-out (queries_base.
-scan_fanout) and the session-creation warmup (session._warm_session)."""
+"""Round-6 optimization guards: scans read without a repartition, the
+session-creation warmup (session._warm_session) and the rewritten
+headline queries' oracle parity."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
-
-from document_ai_spark import queries_base
-from document_ai_spark.queries_base import scan_fanout
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_fanout_triggers_on_single_split_scan(spark):
-    """A one-file one-row-group table scans as a single task; fan-out
-    must repartition it to FANOUT_FACTOR * parallelism."""
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    assert d.rdd.getNumPartitions() == 1
-    par = spark.sparkContext.defaultParallelism
-    fanned = scan_fanout(d)
-    assert (
-        fanned.rdd.getNumPartitions()
-        == queries_base.FANOUT_FACTOR * par
-    )
+# the headline entries that once repartitioned their documents scan
+# before the per-row work (the deleted round-6 scan fan-out)
+SCAN_DIRECT = [
+    "extract_article", "extract_pdf", "minhash_signatures",
+    "ngram_jaccard_probe", "simhash", "winnow_fingerprint",
+    "text_metrics", "best_config", "next_right_word_2d",
+    "curation_funnel",
+]
 
 
-def test_fanout_noop_on_already_parallel_input(spark):
-    """Inputs that already give the scan >= 2x-parallelism granularity
-    must NOT pay a repartition."""
-    par = spark.sparkContext.defaultParallelism
-    wide = spark.range(1000).repartition(2 * par)
-    assert scan_fanout(wide, key="id") is wide
+def test_queries_read_scan_without_repartition(spark):
+    """Every query reads its scan directly: no explicit repartition
+    exchange (REPARTITION_BY_NUM) in the formatted physical plan — the
+    only exchanges left are the ones the operators themselves need."""
+    import __spark_entry__ as entrymod
 
-
-def test_fanout_noop_past_byte_cap(spark, monkeypatch):
-    """The fan-out is a small-input fix: past the per-core byte cap the
-    extra full-data shuffle is skipped (scale-adaptive posture)."""
-    monkeypatch.setattr(queries_base, "FANOUT_MAX_BYTES_PER_SLOT", 0)
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    assert scan_fanout(d) is d
-
-
-def test_fanout_preserves_rows(spark):
-    d = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "lang"
-    )
-    base = sorted((r.doc_id, r.lang) for r in d.collect())
-    fanned = sorted(
-        (r.doc_id, r.lang) for r in scan_fanout(d).collect()
-    )
-    assert fanned == base
-
-
-def test_fanout_key_accepts_column_expression(spark):
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    fanned = scan_fanout(d, key=F.col("doc_id") % 7)
-    assert fanned.count() == d.count()
+    qs = entrymod.queries()
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
+    fanned = [
+        q for q in SCAN_DIRECT
+        if "REPARTITION_BY_NUM" in qs[q](spark, SF)._jdf.queryExecution()
+        .explainString(mode.fromString("formatted"))
+    ]
+    assert fanned == []
 
 
 def test_session_is_warmed_once(spark):
