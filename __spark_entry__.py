@@ -50,13 +50,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pii_scrub": TX.q_pii_scrub,
         "training_mix": M.q_training_mix,
         "curation_funnel": M.q_curation_funnel,
-        "next_word_after_key": M.q_next_word_after_key,
+        "next_word_after_key": TX.q_next_word_after_key,
         "next_right_word_2d": SP.q_next_right_word_2d,
         "fuzzy_key_next_right": SP.q_fuzzy_key_next_right,
-        "winnow_fingerprint": M.q_winnow_fingerprint,
+        "winnow_fingerprint": TX.q_winnow_fingerprint,
         "best_config": SU.q_best_config,
         "media_features": M.q_media_features,
-        "frame_samples": M.q_frame_samples,
+        "frame_samples": TX.q_frame_samples,
         "relational_demo_suite": SU.q_relational_demo_suite,
         "text_metrics": SU.q_text_metrics,
         "embedding_near_dup_pairs": SU.q_embedding_near_dup_pairs,
@@ -97,7 +97,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash": M.q_simhash,
         "ann_lsh_buckets": M.q_ann_lsh_buckets,
         "dedup_clusters": M.q_dedup_clusters,
-        "top_terms": M.q_top_terms,
+        "top_terms": TX.q_top_terms,
     }
 
 
@@ -108,13 +108,13 @@ def oracle_sql() -> dict[str, str]:
         "pii_scrub": TX.SQL_PII_SCRUB,
         "training_mix": M.SQL_TRAINING_MIX,
         "curation_funnel": M.SQL_CURATION_FUNNEL,
-        "next_word_after_key": M.SQL_NEXT_WORD_AFTER_KEY,
+        "next_word_after_key": TX.SQL_NEXT_WORD_AFTER_KEY,
         "next_right_word_2d": SP.SQL_NEXT_RIGHT_WORD_2D,
         "fuzzy_key_next_right": SP.SQL_FUZZY_KEY_NEXT_RIGHT,
-        "winnow_fingerprint": M.SQL_WINNOW_FINGERPRINT,
+        "winnow_fingerprint": TX.SQL_WINNOW_FINGERPRINT,
         "best_config": SU.SQL_BEST_CONFIG,
         "media_features": M.SQL_MEDIA_FEATURES,
-        "frame_samples": M.SQL_FRAME_SAMPLES,
+        "frame_samples": TX.SQL_FRAME_SAMPLES,
         "relational_demo_suite": SU.SQL_RELATIONAL_DEMO_SUITE,
         "text_metrics": SU.SQL_TEXT_METRICS,
         "embedding_near_dup_pairs": SU.SQL_EMBEDDING_NEAR_DUP_PAIRS,
@@ -152,5 +152,5 @@ def oracle_sql() -> dict[str, str]:
         "simhash": M.SQL_SIMHASH,
         "ann_lsh_buckets": M.SQL_ANN_LSH_BUCKETS,
         "dedup_clusters": M.SQL_DEDUP_CLUSTERS,
-        "top_terms": M.SQL_TOP_TERMS,
+        "top_terms": TX.SQL_TOP_TERMS,
     }

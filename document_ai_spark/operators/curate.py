@@ -15,12 +15,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-LANG_PATTERNS = {
-    "en": r"\b(the|and|of|to|in|is)\b",
-    "de": r"\b(der|die|und|das|ist|nicht)\b",
-    "fr": r"\b(le|la|les|et|des|une)\b",
-    "es": r"\b(el|los|que|de|una|por)\b",
-}
+from ..queries_base import (
+    _norm_words,
+    gopher_signals,
+    lang_scores,
+    minhash_band_pairs,
+    n_punct,
+    pred_lang,
+    quality_ok,
+)
 
 
 def curation_flags(
@@ -37,62 +40,19 @@ def curation_flags(
     scan — it is a pure column expression, so the funnel verbs ask for
     it here instead of paying a second text scan + id join."""
     t = F.col(text_col)
-    words = F.split(F.regexp_replace(F.trim(t), r"\s+", " "), " ")
+    words = _norm_words(t)
     n_tokens = F.size(words).cast("long")
-    n_punct = F.size(
-        F.regexp_extract_all(t, F.lit(r"([.,;:!?])"), F.lit(1))
-    )
-    pass_quality = (
-        (n_tokens >= 20) & (n_tokens <= 100000)
-        & (n_punct * 10 <= n_tokens * 3)
-    )
-    n_alpha = F.size(F.filter(words, lambda w: w.rlike("^[A-Za-z]+$")))
-    mean_wl = (
-        F.length(F.regexp_replace(t, r"\s", "")).cast("double") / n_tokens
-    )
-    n_sym = F.size(
-        F.regexp_extract_all(t, F.lit(r"([#@\[\]{}<>|~^])"), F.lit(1))
-    )
-    n_stop = F.size(
-        F.regexp_extract_all(
-            F.lower(t), F.lit(r"\b(the|be|to|of|and|that|have|with)\b"),
-            F.lit(1),
-        )
-    )
-    pass_gopher = (
-        (n_tokens >= 50) & (mean_wl >= 3.0) & (mean_wl <= 10.0)
-        & (n_alpha * 10 >= n_tokens * 8) & (n_sym * 10 <= n_tokens)
-        & (n_stop >= 2)
-    )
     cols = [
         F.col(id_col),
         F.md5(F.encode(t, "UTF-8")).alias("_text_hash"),
         n_tokens.alias("n_tokens"),
-        pass_quality.alias("pass_quality"),
-        pass_gopher.alias("pass_gopher"),
+        quality_ok(n_tokens, n_punct(t)).alias("pass_quality"),
+        gopher_signals(t, words, n_tokens)["gopher_ok"].alias("pass_gopher"),
     ]
     if lang_col is not None:
-        low = F.lower(t)
-        s = {
-            k: F.size(F.regexp_extract_all(low, F.lit(pat), F.lit(1)))
-            for k, pat in LANG_PATTERNS.items()
-        }
-        s_zh = F.size(
-            F.regexp_extract_all(
-                t, F.lit(r"([\x{4e00}-\x{9fff}])"), F.lit(1)
-            )
+        cols.append(
+            (pred_lang(lang_scores(t)) == F.col(lang_col)).alias("pass_lang")
         )
-        pred_lang = (
-            F.when(
-                (s_zh > s["en"]) & (s_zh > s["de"]) & (s_zh > s["fr"])
-                & (s_zh > s["es"]), "zh")
-            .when((s["en"] >= s["de"]) & (s["en"] >= s["fr"])
-                  & (s["en"] >= s["es"]), "en")
-            .when((s["de"] >= s["fr"]) & (s["de"] >= s["es"]), "de")
-            .when(s["fr"] >= s["es"], "fr")
-            .otherwise("es")
-        )
-        cols.append((pred_lang == F.col(lang_col)).alias("pass_lang"))
     if include_rep:
         from .repetition import rep_pass_expr
 
@@ -117,11 +77,10 @@ def neardup_keeper_flags(
 
     The pair generator is the SHARED builder (queries_base.
     minhash_band_pairs): the funnel's DuckDB oracle composes
-    _sql_minhash_core, so one Spark-side construction must back both the
+    _SQL_MINHASH_CORE, so one Spark-side construction must back both the
     documents-table queries and this engine or the oracles silently
     drift. Components converge in O(log diameter) rounds of hash joins
     (operators/similarity.connected_components)."""
-    from ..queries_base import minhash_band_pairs
     from .similarity import dedup_clusters
 
     pairs = minhash_band_pairs(df, id_col=id_col, text_col=text_col)

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..queries_text import _winnow_text, winnow_fingerprints_df
+
 
 def shared_passage_pairs(
     fingerprints: DataFrame,
@@ -86,23 +88,6 @@ MIN_SPAN = 40  # shorter byte-identical runs are phrase reuse, not passages
 MIN_SHIFT_SUPPORT = 3
 
 
-def _norm_text(text_col: str = "text") -> F.Column:
-    """The winnowing normalization (queries_text spec) — spans index
-    into THIS string. The truncation cap is 1 << _POS_BITS by
-    CONSTRUCTION: winnowing positions are packed into the low
-    _POS_BITS of the (hash, pos) key, so any position that survives
-    packing must also index into this slice — sharing the constant
-    keeps the two spaces synchronized if the key layout ever changes."""
-    from ..queries_text import _POS_BITS
-
-    return F.substring(
-        F.lower(
-            F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")
-        ),
-        1, 1 << _POS_BITS,
-    )
-
-
 def _common_prefix_len(x: F.Column, y: F.Column) -> F.Column:
     """Length of the common prefix of two strings: one zip_with pass
     over the char arrays (each split evaluates ONCE per row —
@@ -147,8 +132,6 @@ def shared_passage_spans(
 
     `_norm` lets excise_shared_passages pass its already-materialized
     normalized corpus so the two stages share one copy."""
-    from ..queries_text import winnow_fingerprints_df
-
     if _norm is not None:
         norm = _norm
     else:
@@ -159,7 +142,7 @@ def shared_passage_spans(
         # the raw table per use
         norm = df.select(
             F.col(id_col).alias("doc_id"),
-            _norm_text(text_col).alias("t"),
+            _winnow_text(text_col).alias("t"),
         ).localCheckpoint(eager=True)
     fp = winnow_fingerprints_df(
         df.select(
@@ -287,7 +270,7 @@ def excise_shared_passages(
     complement of the spans); untouched docs and pair keepers get the
     normalized text unchanged with n_spans = 0."""
     norm = df.select(
-        F.col(id_col).alias("doc_id"), _norm_text(text_col).alias("t")
+        F.col(id_col).alias("doc_id"), _winnow_text(text_col).alias("t")
     ).localCheckpoint(eager=True)
     # spans are tiny (victims x merged intervals) and consumed by both
     # the segment builder and the removal stats — materialize

@@ -34,7 +34,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Append the FEATURE_COLS — cheap, language-agnostic shape
     statistics (the classic quality-classifier feature set), all
     column expressions over one materialized words array."""
-    from ..queries_base import _norm_words
+    from ..queries_base import _norm_words, n_nonspace, n_punct
 
     # NULL text degrades to the empty document (the other quality paths'
     # posture); un-coalesced NULLs would propagate into the feature
@@ -44,28 +44,25 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     n = F.size("_w").cast("double")
     nz = F.greatest(n, F.lit(1.0))
     # NOTE: each quality signal keeps its OWN stopword alternation by
-    # design (LANG_PATTERNS, gopher's evidence list, this one) — the
-    # oracle-checked twins freeze the other two, so do not "unify" them
+    # design — queries_base.LANG_PATTERNS, QUALITY_STOPWORDS and
+    # GOPHER_STOPWORDS, and this classifier-only one. The oracle-checked
+    # twins freeze the queries_base lists, so do not "unify" them
     n_stop = F.size(
         F.regexp_extract_all(
             F.lower(t), F.lit(r"\b(the|be|to|of|and|a|in|that)\b"), F.lit(1)
         )
     ).cast("double")
-    n_punct = F.size(
-        F.regexp_extract_all(t, F.lit(r"([.,;:!?])"), F.lit(1))
-    ).cast("double")
+    n_pun = n_punct(t).cast("double")
     n_digit = F.length(F.regexp_replace(t, r"[^0-9]", "")).cast("double")
     n_upper = F.length(F.regexp_replace(t, r"[^A-Z]", "")).cast("double")
-    n_char = F.greatest(
-        F.length(F.regexp_replace(t, r"\s", "")).cast("double"), F.lit(1.0)
-    )
+    n_char = F.greatest(n_nonspace(t).cast("double"), F.lit(1.0))
     dup = (n - F.size(F.array_distinct("_w")).cast("double")) / nz
     return d.select(
         *df.columns,
         n.alias("f_n_tokens"),
         (n_char / nz).alias("f_mean_wl"),
         (n_stop / nz).alias("f_stop_ratio"),
-        (n_punct / nz).alias("f_punct_ratio"),
+        (n_pun / nz).alias("f_punct_ratio"),
         (n_digit / n_char).alias("f_digit_ratio"),
         (n_upper / n_char).alias("f_upper_ratio"),
         dup.alias("f_dup_ratio"),

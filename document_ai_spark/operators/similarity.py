@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..queries_base import cosine
+
 N_LISTS = 16
 N_PROBE = 6
 # the coarse quantizer is fit on a driver-bounded sample: at 10^12 vectors
@@ -144,17 +146,9 @@ def ivf_topk(embeddings: DataFrame, probes: DataFrame, k: int = 10,
         .join(F.broadcast(probe_lists), "list_id")
         .filter(F.col("vec_id") != F.col("probe_id"))
     )
-    dv = F.transform("embedding", lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(dv, F.col("_pv"), lambda a, b: a * b),
-        F.lit(0.0), lambda a, v: a + v,
-    )
-    na = F.sqrt(F.aggregate(dv, F.lit(0.0), lambda a, v: a + v * v))
-    nb = F.sqrt(
-        F.aggregate(F.col("_pv"), F.lit(0.0), lambda a, v: a + v * v)
-    )
     ranked = cand.select(
-        "probe_id", "vec_id", F.round(dot / (na * nb), 6).alias("cosine")
+        "probe_id", "vec_id",
+        cosine(F.col("embedding"), F.col("_pv")).alias("cosine"),
     )
     wk = W.partitionBy("probe_id").orderBy(F.col("cosine").desc(), "vec_id")
     return (

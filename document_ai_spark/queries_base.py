@@ -1,8 +1,28 @@
-"""Shared word/shingle normalization used across the query modules —
-ONE frozen policy in both engines (Spark expression + DuckDB SQL twin):
-split(regexp_replace(trim(text), '\\s+', ' '), ' ').
-Inline the split into per-element lambdas and both engines go O(words^2)
-per document — always materialize `words` once.
+"""Shared expressions of the query modules — each defined ONCE per
+engine, as a Spark Column builder next to its DuckDB SQL twin, so a
+Spark expression can never drift from the oracle string that checks it:
+
+  - whitespace normalization and the frozen word split:
+    split(regexp_replace(trim(text), '\\s+', ' '), ' ');
+  - word 3-gram shingles and the md5-slice MinHash signature;
+  - the language-ID scores and the pred_lang CASE;
+  - the quality inputs (punctuation, stopwords, non-space chars) and the
+    frozen quality_ok rule;
+  - the Gopher rule pack;
+  - the rounded array cosine.
+
+Call sites compose these builders rather than copy them. Builders take
+the text / `words` Column as an argument, so each call site keeps its own
+plan (inline `words` in a one-scan flag projection, a materialized
+`words` column elsewhere). Inline the split into per-element lambdas and
+both engines go O(words^2) per document — always materialize `words`
+once. The SQL fragments read a column named `text` (and `words` where
+noted).
+
+Each rule keeps its OWN stopword alternation (QUALITY_STOPWORDS,
+GOPHER_STOPWORDS, LANG_PATTERNS here; the classifier's in
+operators/quality_clf) — their oracles freeze them, so they are never
+merged.
 """
 
 from __future__ import annotations
@@ -12,11 +32,17 @@ from pyspark.sql import functions as F
 SHINGLE_W = 3
 
 
-def _norm_words(col: str | F.Column = "text") -> F.Column:
-    """Frozen word split over a column name OR an expression (operators
-    that pre-process the text, e.g. a NULL-coalesce, pass the Column)."""
+def _norm_text(col: str | F.Column = "text") -> F.Column:
+    """Frozen whitespace normalization over a column name OR an
+    expression (operators that pre-process the text, e.g. a
+    NULL-coalesce, pass the Column)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.split(F.regexp_replace(F.trim(c), r"\s+", " "), " ")
+    return F.regexp_replace(F.trim(c), r"\s+", " ")
+
+
+def _norm_words(col: str | F.Column = "text") -> F.Column:
+    """Frozen word split of the normalized text."""
+    return F.split(_norm_text(col), " ")
 
 
 def _shingles(words: F.Column) -> F.Column:
@@ -33,8 +59,255 @@ def _shingles(words: F.Column) -> F.Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
+_SQL_NORM_TEXT = "regexp_replace(trim(text), '\\s+', ' ', 'g')"
+_SQL_WORDS = f"str_split({_SQL_NORM_TEXT}, ' ')"
+_SQL_WORDS_CTE = f"SELECT doc_id, {_SQL_WORDS} AS words FROM documents"
+_SQL_SHINGLES_FROM_WORDS = """
+    CASE WHEN len(words) >= 3 THEN
+      list_transform(range(1, len(words) - 1),
+        i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2])
+    ELSE [] END
+"""
+
+
+# --------------------------------------------------------------------------
+# Language ID: per-language stopword hit counts + a CJK character count;
+# the prediction is the arg-max (CJK must win strictly, ties fall through
+# en > de > fr > es).
+# --------------------------------------------------------------------------
+
+LANG_PATTERNS = {
+    "en": r"\b(the|and|of|to|in|is)\b",
+    "de": r"\b(der|die|und|das|ist|nicht)\b",
+    "fr": r"\b(le|la|les|et|des|une)\b",
+    "es": r"\b(el|los|que|de|una|por)\b",
+}
+_ZH_CHAR = r"([\x{4e00}-\x{9fff}])"
+
+
+def lang_scores(text: F.Column) -> dict[str, F.Column]:
+    """{en, de, fr, es, zh} -> INT hit counts (callers cast / alias)."""
+    low = F.lower(text)
+    s = {
+        k: F.size(F.regexp_extract_all(low, F.lit(pat), F.lit(1)))
+        for k, pat in LANG_PATTERNS.items()
+    }
+    s["zh"] = F.size(F.regexp_extract_all(text, F.lit(_ZH_CHAR), F.lit(1)))
+    return s
+
+
+def pred_lang(s: dict[str, F.Column]) -> F.Column:
+    """The language CASE over lang_scores (or columns holding them)."""
+    en, de, fr, es, zh = (s[k] for k in ("en", "de", "fr", "es", "zh"))
+    return (
+        F.when((zh > en) & (zh > de) & (zh > fr) & (zh > es), "zh")
+        .when((en >= de) & (en >= fr) & (en >= es), "en")
+        .when((de >= fr) & (de >= es), "de")
+        .when(fr >= es, "fr")
+        .otherwise("es")
+    )
+
+
+_SQL_LANG_SCORES = ",\n".join(
+    [
+        f"len(regexp_extract_all(lower(text), '{pat}', 1)) AS s_{k}"
+        for k, pat in LANG_PATTERNS.items()
+    ]
+    + [f"len(regexp_extract_all(text, '{_ZH_CHAR}', 1)) AS s_zh"]
+)
+_SQL_PRED_LANG = """CASE
+    WHEN s_zh > s_en AND s_zh > s_de AND s_zh > s_fr AND s_zh > s_es THEN 'zh'
+    WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es THEN 'en'
+    WHEN s_de >= s_fr AND s_de >= s_es THEN 'de'
+    WHEN s_fr >= s_es THEN 'fr'
+    ELSE 'es' END"""
+
+
+# --------------------------------------------------------------------------
+# Quality score inputs and the frozen quality rule.
+# --------------------------------------------------------------------------
+
+QUALITY_STOPWORDS = r"\b(the|a|of|and|to|in|is)\b"
+
+
+def n_punct(text: F.Column) -> F.Column:
+    return F.size(F.regexp_extract_all(text, F.lit(r"([.,;:!?])"), F.lit(1)))
+
+
+def n_stopwords(text: F.Column) -> F.Column:
+    return F.size(
+        F.regexp_extract_all(
+            F.lower(text), F.lit(QUALITY_STOPWORDS), F.lit(1)
+        )
+    )
+
+
+def n_nonspace(text: F.Column) -> F.Column:
+    return F.length(F.regexp_replace(text, r"\s", ""))
+
+
+def quality_ok(tokens: F.Column, punct: F.Column) -> F.Column:
+    """The frozen quality rule over token and punctuation counts."""
+    return (tokens >= 20) & (tokens <= 100000) & (punct * 10 <= tokens * 3)
+
+
+_SQL_N_PUNCT = "len(regexp_extract_all(text, '([.,;:!?])', 1))"
+_SQL_N_STOPWORDS = (
+    f"len(regexp_extract_all(lower(text), '{QUALITY_STOPWORDS}', 1))"
+)
+_SQL_N_NONSPACE = "length(regexp_replace(text, '\\s', '', 'g'))"
+_SQL_QUALITY_OK = (
+    "n_tokens >= 20 AND n_tokens <= 100000 AND n_punct * 10 <= n_tokens * 3"
+)
+
+
+# --------------------------------------------------------------------------
+# Gopher-style rule pack (Rae et al. 2021 §A1.1-style heuristics, the
+# rules that make sense for single-paragraph docs): mean word length
+# bounds, symbol-to-word ratio, alpha-word fraction, minimum stopword
+# evidence.
+# --------------------------------------------------------------------------
+
+GOPHER_STOPWORDS = r"\b(the|be|to|of|and|that|have|with)\b"
+
+
+def gopher_signals(
+    text: F.Column, words: F.Column, n_words: F.Column
+) -> dict[str, F.Column]:
+    """n_alpha / mean_wl / n_sym / n_stop and the gopher_ok rule over
+    them; `n_words` is the caller's size(words) column."""
+    g = {
+        "n_alpha": F.size(F.filter(words, lambda w: w.rlike("^[A-Za-z]+$"))),
+        "mean_wl": n_nonspace(text).cast("double") / n_words,
+        "n_sym": F.size(
+            F.regexp_extract_all(text, F.lit(r"([#@\[\]{}<>|~^])"), F.lit(1))
+        ),
+        "n_stop": F.size(
+            F.regexp_extract_all(
+                F.lower(text), F.lit(GOPHER_STOPWORDS), F.lit(1)
+            )
+        ),
+    }
+    g["gopher_ok"] = (
+        (n_words >= 50)
+        & (g["mean_wl"] >= 3.0) & (g["mean_wl"] <= 10.0)
+        & (g["n_alpha"] * 10 >= n_words * 8)
+        & (g["n_sym"] * 10 <= n_words)
+        & (g["n_stop"] >= 2)
+    )
+    return g
+
+
+# over (text, words); n_words = len(words)
+_SQL_GOPHER_SIGNALS = rf"""
+    len(list_filter(words, w -> regexp_full_match(w, '[A-Za-z]+'))) AS n_alpha,
+    {_SQL_N_NONSPACE} AS n_nonspace,
+    len(regexp_extract_all(text, '([#@\[\]{{}}<>|~^])', 1)) AS n_sym,
+    len(regexp_extract_all(lower(text), '{GOPHER_STOPWORDS}', 1)) AS n_stop"""
+_SQL_GOPHER_OK = """n_words >= 50
+    AND CAST(n_nonspace AS DOUBLE) / n_words >= 3.0
+    AND CAST(n_nonspace AS DOUBLE) / n_words <= 10.0
+    AND n_alpha * 10 >= n_words * 8
+    AND n_sym * 10 <= n_words
+    AND n_stop >= 2"""
+
+
+# --------------------------------------------------------------------------
+# Array cosine, rounded to 6 dp in both engines (ranking happens on the
+# rounded value).
+# --------------------------------------------------------------------------
+
+
+def cosine(a: F.Column, b: F.Column) -> F.Column:
+    av = F.transform(a, lambda x: x.cast("double"))
+    bv = F.transform(b, lambda x: x.cast("double"))
+    dot = F.aggregate(
+        F.zip_with(av, bv, lambda x, y: x * y), F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    na = F.sqrt(F.aggregate(av, F.lit(0.0), lambda acc, v: acc + v * v))
+    nb = F.sqrt(F.aggregate(bv, F.lit(0.0), lambda acc, v: acc + v * v))
+    return F.round(dot / (na * nb), 6)
+
+
+def _sql_cosine(a: str, b: str) -> str:
+    """DuckDB twin of cosine() over two array expressions."""
+    return f"""round(
+      list_sum(list_transform(list_zip(
+        list_transform({a}, x -> CAST(x AS DOUBLE)),
+        list_transform({b}, x -> CAST(x AS DOUBLE))),
+        pr -> pr[1] * pr[2]))
+      / (sqrt(list_sum(list_transform({a},
+           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+         * sqrt(list_sum(list_transform({b},
+           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)"""
+
+
 N_MINHASH = 8
 N_BANDS = 4  # 2 hashes per band
+
+
+def minhash_signatures(df, id_col: str = "doc_id",
+                       n_hashes: int = N_MINHASH):
+    """(id, text) frame -> (id, mh_0..mh_{n-1}) md5-slice MinHash
+    signatures — the ONE construction behind queries_ml's
+    minhash_signatures entry and minhash_band_pairs; its DuckDB twin is
+    _SQL_MINHASH_CORE.
+
+    mh_j = min over the doc's DISTINCT word 3-gram shingles of the
+    (j%4)-th 8-hex-char slice of md5('j//4:'||shingle): one md5 per four
+    hash slots (the four words of one md5 are independent uniform bits),
+    and lexicographic MIN over a fixed-width lowercase-hex slice equals
+    numeric MIN of that 32-bit word."""
+    # `words` is materialized once per row — inlining the split() inside
+    # the shingle transform() re-evaluates it per element (O(words^2)).
+    # Shingles dedup PER DOC (array_distinct) before exploding: MIN() is
+    # identical over a multiset or its distinct set, and a global
+    # .distinct() on the exploded rows would be a full shuffle of raw
+    # shingle text (~W x corpus bytes) for zero information. The groupBy
+    # below map-side-combines straight off the scan: only the minima of
+    # each doc cross the wire.
+    sh = df.withColumn("words", _norm_words()).select(
+        id_col,
+        F.explode(
+            F.array_distinct(_shingles(F.col("words")))
+        ).alias("shingle"),
+    )
+    # the slices are PROJECTED below the aggregate so each md5 is
+    # computed once per row by construction, and the aggregate itself is
+    # n plain min(column) buffers
+    slice_cols = []
+    for k in range((n_hashes + 3) // 4):
+        h = F.md5(
+            F.encode(
+                F.concat_ws(":", F.lit(str(k)), "shingle"), "UTF-8"
+            )
+        )
+        slice_cols += [
+            F.substring(h, r * 8 + 1, 8).alias(f"_s{4 * k + r}")
+            for r in range(4)
+            if 4 * k + r < n_hashes
+        ]
+    return sh.select(id_col, *slice_cols).groupBy(id_col).agg(
+        *[F.min(f"_s{j}").alias(f"mh_{j}") for j in range(n_hashes)]
+    )
+
+
+_SQL_MINHASH_CORE = """
+  SELECT doc_id, {mins}
+  FROM (SELECT DISTINCT doc_id,
+               unnest({shingles}) AS shingle
+        FROM ({words}))
+  GROUP BY doc_id
+""".format(
+    mins=",\n".join(
+        f"MIN(substr(md5('{j // 4}' || ':' || shingle), "
+        f"{(j % 4) * 8 + 1}, 8)) AS mh_{j}"
+        for j in range(N_MINHASH)
+    ),
+    shingles=_SQL_SHINGLES_FROM_WORDS,
+    words=_SQL_WORDS_CTE,
+)
 
 
 def minhash_band_pairs(df, id_col: str = "doc_id",
@@ -43,10 +316,10 @@ def minhash_band_pairs(df, id_col: str = "doc_id",
                        n_bands: int = N_BANDS,
                        rows_per_band: int | None = None):
     """Generic MinHash + LSH candidate-pair builder over any
-    (id, text) frame — ONE construction (8-hex-char md5-slice minima,
+    (id, text) frame — ONE construction (minhash_signatures,
     `rows_per_band` consecutive hashes concatenated per band) shared by
     the documents-table queries (queries_ml) and the curation engine
-    (operators/curate), so the DuckDB oracle twin (_sql_minhash_core)
+    (operators/curate), so the DuckDB oracle twin (_SQL_MINHASH_CORE)
     can never drift from one copy while the other is updated. Returns
     (doc_a, doc_b) candidate pairs from the bucketed band pair-explode
     (r5: no self-join; never all-pairs).
@@ -67,47 +340,7 @@ def minhash_band_pairs(df, id_col: str = "doc_id",
         )
     ids = df.select(F.col(id_col).alias("_id"),
                     F.col(text_col).alias("text"))
-    # dedup shingles PER DOC (array_distinct) before exploding: the
-    # min() signature is identical over a multiset or its distinct set,
-    # and the per-doc form deletes what used to be a full shuffle of
-    # raw shingle text (a global .distinct() on the exploded rows) —
-    # at corpus scale that shuffle moves ~W x corpus bytes for zero
-    # information. The groupBy below then map-side-combines straight
-    # off the scan: only 8 minima per doc cross the wire.
-    sh = ids.withColumn("words", _norm_words()).select(
-        "_id",
-        F.explode(
-            F.array_distinct(_shingles(F.col("words")))
-        ).alias("shingle"),
-    )
-    # one md5 per FOUR hash slots (r5): h_k = md5('k:'||shingle); mh_j is
-    # the (j%4)-th 8-hex-char slice of h_{j//4}. Lexicographic MIN over a
-    # fixed-width lowercase-hex slice equals numeric MIN of that 32-bit
-    # word, so each slice is a valid minhash (the four words of one md5
-    # are independent uniform bits). 4x fewer md5 evaluations per shingle
-    # and 4x smaller minima / band keys on the shuffle wire. r6: the
-    # slices are PROJECTED below the aggregate so each md5 is computed
-    # once per row by construction (the r5 form relied on codegen CSE
-    # inside the aggregate expressions) and the aggregate itself is 8
-    # plain min(column) buffers — simpler generated code. The DuckDB
-    # oracle twin (queries_ml._sql_minhash_core) slices the same md5
-    # hex identically.
-    slice_cols = []
-    for k in range((n_hashes + 3) // 4):
-        h = F.md5(
-            F.encode(
-                F.concat_ws(":", F.lit(str(k)), "shingle"), "UTF-8"
-            )
-        )
-        slice_cols += [
-            F.substring(h, r * 8 + 1, 8).alias(f"_s{4 * k + r}")
-            for r in range(4)
-            if 4 * k + r < n_hashes
-        ]
-    sliced = sh.select("_id", *slice_cols)
-    sig = sliced.groupBy("_id").agg(
-        *[F.min(f"_s{j}").alias(f"mh_{j}") for j in range(n_hashes)]
-    )
+    sig = minhash_signatures(ids, "_id", n_hashes)
     bands = sig.select(
         "_id",
         F.posexplode(
@@ -133,7 +366,7 @@ def minhash_band_pairs(df, id_col: str = "doc_id",
     # exchanges; this form evaluates signatures ONCE and shuffles 8
     # short band rows per doc). Sorted-array pairing makes
     # doc_a < doc_b by construction — identical pair SET to the
-    # oracle's SQL self-join (_sql_minhash_core keeps the join form;
+    # oracle's SQL self-join (its band CTEs keep the join form;
     # DuckDB evaluates its CTE once). Skew note: a bucket of k docs
     # emits its k(k-1)/2 pairs from one row — the same k^2 blowup the
     # join form had on the same key, neither spreads a hot bucket.
@@ -168,12 +401,3 @@ def minhash_band_pairs(df, id_col: str = "doc_id",
         .distinct()
     )
 
-
-_SQL_WORDS = "str_split(regexp_replace(trim(text), '\\s+', ' ', 'g'), ' ')"
-_SQL_WORDS_CTE = f"SELECT doc_id, {_SQL_WORDS} AS words FROM documents"
-_SQL_SHINGLES_FROM_WORDS = """
-    CASE WHEN len(words) >= 3 THEN
-      list_transform(range(1, len(words) - 1),
-        i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2])
-    ELSE [] END
-"""

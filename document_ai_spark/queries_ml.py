@@ -2,13 +2,14 @@
 (exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding cosine), similarity
 search (brute-force + LSH-bucketed ANN + IVF + recall evaluation), dedup
 clustering, the curation funnel, and multimodal feature queries. Text
-analysis lives in queries_text (re-exported here); shared word/shingle
-normalization in queries_base.
+analysis lives in queries_text; the shared expressions (normalization,
+shingles, the MinHash signature, cosine, the rule packs) in queries_base.
 
 Oracle-parity tricks:
   - Hashing uses md5 hex strings (identical in Spark and DuckDB); MinHash
-    takes the lexicographic MIN of md5(seed||':'||shingle) so no cross-engine
-    integer conversion is needed.
+    takes the lexicographic MIN of 8-hex-char slices of
+    md5(seed||':'||shingle) so no cross-engine integer conversion is
+    needed.
   - Shingles come from the same frozen normalization in both engines:
     split(regexp_replace(trim(text), '\\s+', ' '), ' ').
   - Cosine/Jaccard are rounded to 6 dp in both engines and ranked on the
@@ -32,51 +33,18 @@ from pyspark.sql import types as T
 
 from .queries import _t
 from .queries_base import (
-    _norm_words,
     _shingles,
+    _SQL_MINHASH_CORE,
     _SQL_SHINGLES_FROM_WORDS,
     _SQL_WORDS,
-    _SQL_WORDS_CTE,
+    _norm_words,
+    _sql_cosine,
+    cosine,
     minhash_band_pairs,
+    minhash_signatures,
     N_BANDS,
-    N_MINHASH,
 )
-
-# text-analysis operators live in queries_text; re-exported here so the
-# driver contract and existing imports keep one stable surface
-from .queries_text import (  # noqa: E402,F401
-    _KGRAM,
-    _LANG_PATTERNS,
-    _RK_BASE,
-    _RK_MOD,
-    _WINDOW,
-    _winnow_np,
-    REP_THRESHOLD,
-    SQL_CHAR_ENTROPY,
-    SQL_DUP_NGRAM_RATIO,
-    SQL_FINGERPRINT,
-    SQL_FRAME_SAMPLES,
-    SQL_LANG_ID,
-    SQL_NEXT_WORD_AFTER_KEY,
-    SQL_PII_SCRUB,
-    SQL_QUALITY_GOPHER,
-    SQL_QUALITY_SCORE,
-    SQL_TOKEN_COUNT,
-    SQL_TOP_TERMS,
-    SQL_WINNOW_FINGERPRINT,
-    q_char_entropy,
-    q_dup_ngram_ratio,
-    q_fingerprint,
-    q_frame_samples,
-    q_lang_id,
-    q_next_word_after_key,
-    q_pii_scrub,
-    q_quality_gopher,
-    q_quality_score,
-    q_token_count,
-    q_top_terms,
-    q_winnow_fingerprint,
-)
+from .queries_text import SQL_LANG_ID, SQL_QUALITY_GOPHER, SQL_QUALITY_SCORE
 
 # --------------------------------------------------------------------------
 # Exact dedup: md5-hash groupBy, keeper = min doc_id per hash.
@@ -117,38 +85,9 @@ FROM aug
 # --------------------------------------------------------------------------
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    # materialize `words` once per row — inlining the split() inside the
-    # transform() lambda re-evaluates it per element (O(words^2) per doc).
-    # Shingles dedup PER DOC (array_distinct) instead of a global
-    # .distinct() on the exploded rows: MIN() is identical over a
-    # multiset, and the per-doc form removes a full shuffle of raw
-    # shingle text — the groupBy map-side-combines off the scan (same
-    # change as queries_base.minhash_band_pairs; oracle unchanged)
-    sh = d.withColumn("words", _norm_words()).select(
-        "doc_id",
-        F.explode(F.array_distinct(_shingles(F.col("words")))).alias(
-            "shingle"
-        ),
-    )
-    # md5-hex-SLICE minima (r5, same construction as queries_base.
-    # minhash_band_pairs): mh_j = min over shingles of the (j%4)-th
-    # 8-hex-char slice of md5('j//4:'||shingle) — one md5 per four hash
-    # slots, fixed-width hex so lexicographic MIN == numeric MIN.
-    # r6: slices projected below the aggregate (each md5 computed once
-    # per row by construction; the agg is 8 plain min(column) buffers).
-    slice_cols = []
-    for k in range(N_MINHASH // 4):
-        h = F.md5(
-            F.encode(F.concat_ws(":", F.lit(str(k)), "shingle"), "UTF-8")
-        )
-        slice_cols += [
-            F.substring(h, r * 8 + 1, 8).alias(f"_s{4 * k + r}")
-            for r in range(4)
-        ]
-    sig = sh.select("doc_id", *slice_cols).groupBy("doc_id").agg(
-        *[F.min(f"_s{j}").alias(f"mh_{j}") for j in range(N_MINHASH)]
-    )
+    """The shared md5-slice signature (queries_base.minhash_signatures)
+    plus its LSH band keys."""
+    sig = minhash_signatures(_t(spark, sf_dir, "documents"))
     for b in range(N_BANDS):
         sig = sig.withColumn(
             f"band_{b}", F.concat(F.col(f"mh_{2 * b}"), F.col(f"mh_{2 * b + 1}"))
@@ -156,26 +95,11 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sig
 
 
-def _sql_minhash_core() -> str:
-    mins = ",\n".join(
-        f"MIN(substr(md5('{j // 4}' || ':' || shingle), "
-        f"{(j % 4) * 8 + 1}, 8)) AS mh_{j}"
-        for j in range(N_MINHASH)
-    )
-    return f"""
-  SELECT doc_id, {mins}
-  FROM (SELECT DISTINCT doc_id,
-               unnest({_SQL_SHINGLES_FROM_WORDS}) AS shingle
-        FROM ({_SQL_WORDS_CTE}))
-  GROUP BY doc_id
-"""
-
-
 SQL_MINHASH_SIGNATURES = f"""
 SELECT doc_id, mh_0, mh_1, mh_2, mh_3, mh_4, mh_5, mh_6, mh_7,
        mh_0 || mh_1 AS band_0, mh_2 || mh_3 AS band_1,
        mh_4 || mh_5 AS band_2, mh_6 || mh_7 AS band_3
-FROM ({_sql_minhash_core()})
+FROM ({_SQL_MINHASH_CORE})
 """
 
 
@@ -194,7 +118,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_MINHASH_LSH_PAIRS = f"""
-WITH sig AS ({_sql_minhash_core()}),
+WITH sig AS ({_SQL_MINHASH_CORE}),
 bands AS (
   SELECT doc_id, 0 AS band_no, mh_0 || mh_1 AS band_key FROM sig
   UNION ALL SELECT doc_id, 1, mh_2 || mh_3 FROM sig
@@ -305,31 +229,15 @@ FROM sh, probe, ev
 # Embedding cosine: brute-force top-k vs probe vector (vec_id 0)
 # --------------------------------------------------------------------------
 
-def _cosine_to_probe(e: DataFrame, probe: DataFrame) -> DataFrame:
-    dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    pv = F.transform(F.col("probe_vec"), lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(dv, pv, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(
-        F.aggregate(dv, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-    nb = F.sqrt(
-        F.aggregate(pv, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-    return e.crossJoin(F.broadcast(probe)).select(
-        "vec_id", F.round(dot / (na * nb), 6).alias("cosine")
-    )
-
-
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     probe = e.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("probe_vec")
     )
-    cos = _cosine_to_probe(e, probe)
+    cos = e.crossJoin(F.broadcast(probe)).select(
+        "vec_id",
+        cosine(F.col("embedding"), F.col("probe_vec")).alias("cosine"),
+    )
     return (
         cos.filter(F.col("vec_id") != 0)
         .orderBy(F.col("cosine").desc(), "vec_id")
@@ -337,21 +245,11 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_ANN_COSINE_TOPK = """
+SQL_ANN_COSINE_TOPK = f"""
 WITH probe AS (SELECT embedding AS probe_vec FROM embeddings
                WHERE vec_id = 0),
 cos AS (
-  SELECT vec_id,
-         round(
-           list_sum(list_transform(list_zip(
-             list_transform(embedding, x -> CAST(x AS DOUBLE)),
-             list_transform(probe_vec, x -> CAST(x AS DOUBLE))),
-             p -> p[1] * p[2]))
-           / (sqrt(list_sum(list_transform(embedding,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-              * sqrt(list_sum(list_transform(probe_vec,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
-             AS cosine
+  SELECT vec_id, {_sql_cosine("embedding", "probe_vec")} AS cosine
   FROM embeddings, probe)
 SELECT vec_id, cosine FROM cos WHERE vec_id <> 0
 ORDER BY cosine DESC, vec_id LIMIT 20
@@ -386,45 +284,22 @@ def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # block on label to bound the pair explosion (the scale-out analog
     # buckets by LSH signature instead)
-    da = F.transform(F.col("emb_a"), lambda x: x.cast("double"))
-    db = F.transform(F.col("emb_b"), lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(da, db, lambda x, y: x * y), F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(F.aggregate(da, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(db, F.lit(0.0), lambda acc, v: acc + v * v))
     return (
         a.join(b, (F.col("lab_a") == F.col("lab_b"))
                & (F.col("id_a") < F.col("id_b")))
-        .withColumn("cosine", F.round(dot / (na * nb), 6))
+        .withColumn("cosine", cosine(F.col("emb_a"), F.col("emb_b")))
         .filter(F.col("cosine") > NEAR_DUP_COS)
         .select("id_a", "id_b", "cosine")
     )
 
 
 SQL_EMBEDDING_NEAR_DUPS = f"""
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(
-         list_sum(list_transform(list_zip(
-           list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-           list_transform(b.embedding, x -> CAST(x AS DOUBLE))),
-           p -> p[1] * p[2]))
-         / (sqrt(list_sum(list_transform(a.embedding,
-              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-            * sqrt(list_sum(list_transform(b.embedding,
-              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cosine
-FROM embeddings a JOIN embeddings b
-  ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE round(
-         list_sum(list_transform(list_zip(
-           list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-           list_transform(b.embedding, x -> CAST(x AS DOUBLE))),
-           p -> p[1] * p[2]))
-         / (sqrt(list_sum(list_transform(a.embedding,
-              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-            * sqrt(list_sum(list_transform(b.embedding,
-              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) > {NEAR_DUP_COS}
+SELECT id_a, id_b, cosine
+FROM (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+             {_sql_cosine("a.embedding", "b.embedding")} AS cosine
+      FROM embeddings a JOIN embeddings b
+        ON a.label = b.label AND a.vec_id < b.vec_id)
+WHERE cosine > {NEAR_DUP_COS}
 """
 
 
@@ -571,22 +446,24 @@ def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.mapInPandas(_ann_bucket_batches, schema=_ANN_BUCKET_SCHEMA)
 
 
-def _sql_plane_dot(p: int) -> str:
-    return (
-        "list_sum(list_transform(range(1, len(embedding) + 1), d -> "
-        f"CAST(round(embedding[d] * {_Q_SCALE}) AS BIGINT) * "
-        f"((({p} * {_PLANE_A} + (d - 1) * {_PLANE_B}) % {_PLANE_MOD}) "
-        f"- {_PLANE_OFF})))"
-    )
+def _sql_plane_bucket(n_planes: int) -> str:
+    """DuckDB twin of _plane_bucket_col over `embedding`."""
+    def dot(p: int) -> str:
+        return (
+            "list_sum(list_transform(range(1, len(embedding) + 1), d -> "
+            f"CAST(round(embedding[d] * {_Q_SCALE}) AS BIGINT) * "
+            f"((({p} * {_PLANE_A} + (d - 1) * {_PLANE_B}) % {_PLANE_MOD}) "
+            f"- {_PLANE_OFF})))"
+        )
+
+    return "CAST(" + " + ".join(
+        f"CASE WHEN {dot(p)} > 0 THEN {1 << p} ELSE 0 END"
+        for p in range(n_planes)
+    ) + " AS INT)"
 
 
 SQL_ANN_LSH_BUCKETS = (
-    "SELECT vec_id, CAST("
-    + " + ".join(
-        f"CASE WHEN {_sql_plane_dot(p)} > 0 THEN {1 << p} ELSE 0 END"
-        for p in range(N_PLANES)
-    )
-    + " AS INT) AS bucket FROM embeddings"
+    f"SELECT vec_id, {_sql_plane_bucket(N_PLANES)} AS bucket FROM embeddings"
 )
 
 
@@ -596,17 +473,23 @@ SQL_ANN_LSH_BUCKETS = (
 # filter — same output shape as q_embedding_near_dups but no label oracle.
 # --------------------------------------------------------------------------
 
-def _bucket_col(emb_col: F.Column) -> F.Column:
-    """The LSH bucket as a pure column expression — identical integer math
-    to _ann_bucket_batches (quantize, integer planes, sign bits) but with
-    no Python UDF and no join back to the embeddings, so a self-join side
-    costs ONE scan. Exact-integer arithmetic keeps it equal to the numpy
-    path bit for bit."""
-    q = F.transform(
+def _quantize(emb_col: F.Column) -> F.Column:
+    return F.transform(
         emb_col, lambda x: F.round(x.cast("double") * _Q_SCALE).cast("long")
     )
+
+
+def _plane_bucket_col(emb_col: F.Column, n_planes: int) -> F.Column:
+    """Sign bits of the first `n_planes` integer hyperplanes as a pure
+    column expression — the LSH bucket (N_PLANES) and the IVF coarse
+    list (N_IVF_PLANES). Identical integer math to _ann_bucket_batches
+    (quantize, integer planes, sign bits) but with no Python UDF and no
+    join back to the embeddings, so a self-join side costs ONE scan.
+    Exact-integer arithmetic keeps it equal to the numpy path bit for
+    bit."""
+    q = _quantize(emb_col)
     bucket = F.lit(0)
-    for pl in range(N_PLANES):
+    for pl in range(n_planes):
         dot = F.aggregate(
             F.transform(
                 q,
@@ -628,23 +511,18 @@ def q_embedding_near_dups_lsh(spark: SparkSession,
     # bucket as a column expression (one scan per join side) — joining the
     # mapInPandas bucket table back to embeddings doubled every side's scan
     eb = e.select(
-        "vec_id", "embedding", _bucket_col(F.col("embedding")).alias("bucket")
+        "vec_id", "embedding",
+        _plane_bucket_col(F.col("embedding"), N_PLANES).alias("bucket"),
     )
     a = eb.select(F.col("vec_id").alias("id_a"), "bucket",
                   F.col("embedding").alias("emb_a"))
     bb = eb.select(F.col("vec_id").alias("id_b"),
                    F.col("bucket").alias("bucket_b"),
                    F.col("embedding").alias("emb_b"))
-    da = F.transform(F.col("emb_a"), lambda x: x.cast("double"))
-    db = F.transform(F.col("emb_b"), lambda x: x.cast("double"))
-    dot = F.aggregate(F.zip_with(da, db, lambda x, y: x * y), F.lit(0.0),
-                      lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(da, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(db, F.lit(0.0), lambda acc, v: acc + v * v))
     return (
         a.join(bb, (F.col("bucket") == F.col("bucket_b"))
                & (F.col("id_a") < F.col("id_b")))
-        .withColumn("cosine", F.round(dot / (na * nb), 6))
+        .withColumn("cosine", cosine(F.col("emb_a"), F.col("emb_b")))
         .filter(F.col("cosine") > NEAR_DUP_COS)
         .select("id_a", "id_b", "cosine")
     )
@@ -654,15 +532,7 @@ SQL_EMBEDDING_NEAR_DUPS_LSH = f"""
 WITH buckets AS ({SQL_ANN_LSH_BUCKETS}),
 cand AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         round(
-           list_sum(list_transform(list_zip(
-             list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-             list_transform(b.embedding, x -> CAST(x AS DOUBLE))),
-             p -> p[1] * p[2]))
-           / (sqrt(list_sum(list_transform(a.embedding,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-              * sqrt(list_sum(list_transform(b.embedding,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cosine
+         {_sql_cosine("a.embedding", "b.embedding")} AS cosine
   FROM buckets ba
   JOIN buckets bb ON ba.bucket = bb.bucket AND ba.vec_id < bb.vec_id
   JOIN embeddings a ON a.vec_id = ba.vec_id
@@ -690,31 +560,6 @@ IVF_K = 10
 IVF_PROBE_IDS = (0, 1, 2)  # r4: a probe TABLE, not one driver vector
 
 
-def _ivf_list_col(emb_col: F.Column) -> F.Column:
-    """Coarse list id from the first N_IVF_PLANES integer hyperplanes —
-    identical arithmetic to _bucket_col, fewer planes."""
-    q = F.transform(
-        emb_col, lambda x: F.round(x.cast("double") * _Q_SCALE).cast("long")
-    )
-    list_id = F.lit(0)
-    for pl in range(N_IVF_PLANES):
-        dot = F.aggregate(
-            F.transform(
-                q,
-                lambda x, i: x * (
-                    (F.lit(pl * _PLANE_A) + i * _PLANE_B) % _PLANE_MOD
-                    - _PLANE_OFF
-                ),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        list_id = list_id + F.when(dot > 0, F.lit(1 << pl)).otherwise(
-            F.lit(0)
-        )
-    return list_id.cast("int")
-
-
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-k for a probe TABLE (vecs 0-2): deterministic
     hyperplane coarse quantizer + integer-sum centroids + per-probe
@@ -729,11 +574,8 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     eq = e.select(
         "vec_id",
         "embedding",
-        F.transform(
-            "embedding",
-            lambda x: F.round(x.cast("double") * _Q_SCALE).cast("long"),
-        ).alias("vq"),
-        _ivf_list_col(F.col("embedding")).alias("list_id"),
+        _quantize(F.col("embedding")).alias("vq"),
+        _plane_bucket_col(F.col("embedding"), N_IVF_PLANES).alias("list_id"),
     )
     probes = eq.filter(F.col("vec_id").isin(*IVF_PROBE_IDS)).select(
         F.col("vec_id").alias("probe_id"),
@@ -773,16 +615,9 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = cand.join(
         F.broadcast(probes.select("probe_id", "probe_vec")), "probe_id"
     )
-    dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    pv = F.transform(F.col("probe_vec"), lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(dv, pv, lambda a, b: a * b), F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(F.aggregate(dv, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(pv, F.lit(0.0), lambda acc, v: acc + v * v))
     cos = j.select(
-        "probe_id", "vec_id", F.round(dot / (na * nb), 6).alias("cosine")
+        "probe_id", "vec_id",
+        cosine(F.col("embedding"), F.col("probe_vec")).alias("cosine"),
     )
     wk = W.partitionBy("probe_id").orderBy(F.col("cosine").desc(), "vec_id")
     return (
@@ -800,10 +635,7 @@ WITH eq AS (
          list_transform(range(1, len(embedding) + 1),
                         d -> CAST(round(embedding[d] * {_Q_SCALE}) AS BIGINT))
              AS vq,
-         CAST({" + ".join(
-             f"CASE WHEN {_sql_plane_dot(p)} > 0 THEN {1 << p} ELSE 0 END"
-             for p in range(N_IVF_PLANES)
-         )} AS INT) AS list_id
+         {_sql_plane_bucket(N_IVF_PLANES)} AS list_id
   FROM embeddings),
 probes AS (
   SELECT vec_id AS probe_id, vq AS pvq, embedding AS probe_vec
@@ -829,15 +661,7 @@ cand AS (SELECT probe_id, vec_id, embedding FROM eq
          JOIN top_lists USING (list_id) WHERE vec_id <> probe_id),
 cos AS (
   SELECT c.probe_id, c.vec_id,
-         round(
-           list_sum(list_transform(list_zip(
-             list_transform(c.embedding, x -> CAST(x AS DOUBLE)),
-             list_transform(p.probe_vec, x -> CAST(x AS DOUBLE))),
-             pr -> pr[1] * pr[2]))
-           / (sqrt(list_sum(list_transform(c.embedding,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-              * sqrt(list_sum(list_transform(p.probe_vec,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cosine
+         {_sql_cosine("c.embedding", "p.probe_vec")} AS cosine
   FROM cand c JOIN probes p ON c.probe_id = p.probe_id)
 SELECT probe_id, vec_id, cosine FROM cos
 QUALIFY row_number() OVER (PARTITION BY probe_id
@@ -858,7 +682,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_DEDUP_CLUSTERS = f"""
-WITH RECURSIVE sig AS ({_sql_minhash_core()}),
+WITH RECURSIVE sig AS ({_SQL_MINHASH_CORE}),
 bands AS (
   SELECT doc_id, 0 AS band_no, mh_0 || mh_1 AS band_key FROM sig
   UNION ALL SELECT doc_id, 1, mh_2 || mh_3 FROM sig
@@ -1105,16 +929,9 @@ def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # exact per-probe top-k (the ground truth)
     j = e.crossJoin(F.broadcast(probes))
-    dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    pv = F.transform(F.col("probe_vec"), lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(dv, pv, lambda a, b: a * b), F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(F.aggregate(dv, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(pv, F.lit(0.0), lambda acc, v: acc + v * v))
     cos = j.filter(F.col("vec_id") != F.col("probe_id")).select(
-        "probe_id", "vec_id", F.round(dot / (na * nb), 6).alias("cosine")
+        "probe_id", "vec_id",
+        cosine(F.col("embedding"), F.col("probe_vec")).alias("cosine"),
     )
     wk = W.partitionBy("probe_id").orderBy(F.col("cosine").desc(), "vec_id")
     brute = (
@@ -1123,7 +940,8 @@ def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("probe_id", "vec_id")
     )
     buckets = e.select(
-        "vec_id", _bucket_col(F.col("embedding")).alias("bucket")
+        "vec_id",
+        _plane_bucket_col(F.col("embedding"), N_PLANES).alias("bucket"),
     )  # column-expression buckets: one scan per use, no UDF round-trip
     probe_buckets = buckets.filter(
         F.col("vec_id").isin(*RECALL_PROBE_IDS)
@@ -1168,15 +986,7 @@ WITH probes AS (
   WHERE vec_id IN ({_RECALL_PROBE_LIST})),
 cos AS (
   SELECT p.probe_id, e.vec_id,
-         round(
-           list_sum(list_transform(list_zip(
-             list_transform(e.embedding, x -> CAST(x AS DOUBLE)),
-             list_transform(p.probe_vec, x -> CAST(x AS DOUBLE))),
-             pr -> pr[1] * pr[2]))
-           / (sqrt(list_sum(list_transform(e.embedding,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-              * sqrt(list_sum(list_transform(p.probe_vec,
-                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cosine
+         {_sql_cosine("e.embedding", "p.probe_vec")} AS cosine
   FROM embeddings e, probes p WHERE e.vec_id <> p.probe_id),
 brute AS (
   SELECT probe_id, vec_id FROM cos

@@ -27,6 +27,7 @@ from .operators.extraction import extract_pages
 from .operators.metrics import cause_confusion
 from .operators.validation import validate_extracted
 from .queries import _t
+from .queries_base import _norm_text, _SQL_NORM_TEXT, _SQL_WORDS
 
 _HEAD = (
     '<html><head><meta charset="utf-8"><title>t</title>'
@@ -46,10 +47,6 @@ def _heading_expr() -> F.Column:
         F.lit("Doc "), F.col("doc_id").cast("string"),
         F.lit(" heading title words"),
     )
-
-
-def _norm_text() -> F.Column:
-    return F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
 
 
 def _article_pages(d: DataFrame, linkfarm_mod: int | None = None) -> DataFrame:
@@ -81,7 +78,7 @@ def _article_pages(d: DataFrame, linkfarm_mod: int | None = None) -> DataFrame:
 # Expected main_text for an article page, as SQL (DuckDB dialect).
 _SQL_EXPECTED_ARTICLE = (
     "'Doc ' || CAST(doc_id AS VARCHAR) || ' heading title words' || "
-    "chr(10) || chr(10) || regexp_replace(trim(text), '\\s+', ' ', 'g')"
+    f"chr(10) || chr(10) || {_SQL_NORM_TEXT}"
 )
 
 
@@ -135,10 +132,10 @@ def q_extract_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_EXTRACT_PDF = """
+SQL_EXTRACT_PDF = f"""
 SELECT doc_id,
        'doc ' || CAST(doc_id AS VARCHAR) || ' ' ||
-       substr(regexp_replace(trim(text), '\\s+', ' ', 'g'), 1, 40)
+       substr({_SQL_NORM_TEXT}, 1, 40)
            AS main_text,
        true AS parse_ok,
        'binary' AS charset
@@ -224,12 +221,12 @@ def q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_EXTRACT_SPANS = """
+SQL_EXTRACT_SPANS = f"""
 WITH base AS (
   SELECT doc_id,
          length('Doc ' || CAST(doc_id AS VARCHAR) || ' heading title words')
              AS hlen,
-         length(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS tlen
+         length({_SQL_NORM_TEXT}) AS tlen
   FROM documents)
 SELECT doc_id, CAST(0 AS BIGINT) AS span_id, CAST(0 AS BIGINT) AS start,
        CAST(hlen AS BIGINT) AS "end", 'heading' AS kind
@@ -262,11 +259,11 @@ def q_extract_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # doc-dependent features are the h2 heading length (24 + digits of doc_id)
 # and the paragraph (normalized text length / word count, accepted by R1
 # iff >= 10 words, which also drives the h2's R2 promotion)
-SQL_EXTRACT_BLOCKS = """
+SQL_EXTRACT_BLOCKS = f"""
 WITH f AS (
   SELECT doc_id,
-         length(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS p_len,
-         len(str_split(regexp_replace(trim(text), '\\s+', ' ', 'g'), ' '))
+         length({_SQL_NORM_TEXT}) AS p_len,
+         len({_SQL_WORDS})
              AS p_words
   FROM documents)
 SELECT doc_id, block_id, tag, depth, text_len, link_text_len, n_words,

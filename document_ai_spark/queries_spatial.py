@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .queries import _t
-from .queries_ml import _SQL_WORDS, _norm_words
+from .queries_base import _SQL_WORDS, _norm_words
 
 # layout constants (shared by both engines; see _word_boxes)
 WORDS_PER_LINE = 8

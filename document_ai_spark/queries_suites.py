@@ -19,7 +19,8 @@ Merges:
     (section, k, v_num, v_str) rows.
   - text_metrics: lang-ID + quality score + token counts + repetition
     ratio as ONE corpus scan (strictly better than 4 scans at 100 TB —
-    all are column expressions over the same normalized `words` array).
+    all are column expressions over the same normalized `words` array;
+    the rule expressions are queries_base's shared builders).
   - best_config: the tuning sweep's global and by-lang sections from ONE
     GROUPING SETS aggregation (was two full corpus sweeps).
   - embedding_near_dup_pairs: label-blocked baseline + LSH-bucketed scale
@@ -60,8 +61,20 @@ from .queries import (
 from .queries_base import (
     _norm_words,
     _shingles,
+    _SQL_LANG_SCORES,
+    _SQL_N_NONSPACE,
+    _SQL_N_PUNCT,
+    _SQL_N_STOPWORDS,
+    _SQL_PRED_LANG,
+    _SQL_QUALITY_OK,
     _SQL_SHINGLES_FROM_WORDS,
     _SQL_WORDS,
+    lang_scores,
+    n_nonspace,
+    n_punct,
+    n_stopwords,
+    pred_lang,
+    quality_ok,
 )
 from .queries_ml import (
     SQL_EMBEDDING_NEAR_DUPS,
@@ -69,7 +82,6 @@ from .queries_ml import (
     q_embedding_near_dups,
     q_embedding_near_dups_lsh,
 )
-from .queries_text import _LANG_PATTERNS, REP_THRESHOLD
 
 # --------------------------------------------------------------------------
 # Relational demo suite — 8 small demos, one tagged union.
@@ -651,7 +663,7 @@ def _sql_passage_excision() -> str:
         MIN_SHIFT_SUPPORT,
         MIN_SPAN,
     )
-    from .queries_text import _POS_BITS, sql_winnow_fingerprint
+    from .queries_text import _SQL_WINNOW_TEXT, sql_winnow_fingerprint
 
     inj = f"""(SELECT doc_id,
        text || CASE WHEN doc_id % 40 = 3
@@ -663,8 +675,7 @@ def _sql_passage_excision() -> str:
     return rf"""
 WITH nrm AS (
   SELECT doc_id,
-         substr(lower(regexp_replace(trim(text), '\s+', ' ', 'g')),
-                1, {1 << _POS_BITS}) AS t
+         {_SQL_WINNOW_TEXT} AS t
   FROM {inj}),
 fp AS ({sql_winnow_fingerprint(inj)}),
 fpm AS (SELECT doc_id, fingerprint, MIN(pos) AS pos
@@ -924,47 +935,37 @@ FROM ({_SQL_REPETITION})
 
 # --------------------------------------------------------------------------
 # Text metrics — lang-ID, quality, token counts, repetition in ONE scan.
+#
+# REP_THRESHOLD (within-document repetition, MassiveText-style: fraction of
+# duplicated word 3-grams) is a deployment parameter (MassiveText flags at
+# ~0.2+); the default is 0.01 because the driver's synthetic docs top out
+# near 0.04-0.08 dup ratio — a 0.3 flag would pass vacuously on zero
+# flagged docs (27-287 docs flag at 0.01 across SFs).
 # --------------------------------------------------------------------------
+
+REP_THRESHOLD = 0.01
 
 
 def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lang_id + quality_score + token_count + dup_ngram_ratio widened
-    into one documents scan: every metric is a column expression over the
-    same materialized `words` array (the separate queries each re-scanned
-    the corpus — this is the plan you'd actually run at 100 TB)."""
+    """Language-ID scores, the quality score, whitespace and BPE-ish
+    token counts and the duplicated-3-gram ratio from one documents scan:
+    every metric is a column expression over the same materialized
+    `words` array (separate queries would each re-scan the corpus — this
+    is the plan you'd actually run at 100 TB)."""
     d = _t(spark, sf_dir, "documents").withColumn("words", _norm_words())
-    low = F.lower(F.col("text"))
-    scores = [
-        F.size(F.regexp_extract_all(low, F.lit(pat), F.lit(1)))
-        .cast("long")
-        .alias(f"s_{k}")
-        for k, pat in _LANG_PATTERNS.items()
-    ]
-    zh = F.size(
-        F.regexp_extract_all(
-            F.col("text"), F.lit(r"([\x{4e00}-\x{9fff}])"), F.lit(1)
-        )
-    ).cast("long")
+    t = F.col("text")
+    scores = lang_scores(t)
     base = d.select(
         "doc_id",
         "lang",
-        *scores,
-        zh.alias("s_zh"),
+        *[c.cast("long").alias(f"s_{k}") for k, c in scores.items()],
         F.size("words").cast("long").alias("n_tokens"),
-        F.size(
-            F.regexp_extract_all(F.col("text"), F.lit(r"([.,;:!?])"), F.lit(1))
-        ).cast("long").alias("n_punct"),
-        F.size(
-            F.regexp_extract_all(
-                low, F.lit(r"\b(the|a|of|and|to|in|is)\b"), F.lit(1)
-            )
-        ).cast("long").alias("n_stopwords"),
-        F.length(F.regexp_replace("text", r"\s", "")).cast("long").alias(
-            "n_nonspace"
-        ),
+        n_punct(t).cast("long").alias("n_punct"),
+        n_stopwords(t).cast("long").alias("n_stopwords"),
+        n_nonspace(t).cast("long").alias("n_nonspace"),
         F.size(
             F.regexp_extract_all(
-                low, F.lit(r"([a-z]+|[0-9]+|[^a-z0-9\s])"), F.lit(1)
+                F.lower(t), F.lit(r"([a-z]+|[0-9]+|[^a-z0-9\s])"), F.lit(1)
             )
         ).cast("long").alias("bpe_tokens"),
         _shingles(F.col("words")).alias("sh"),
@@ -977,39 +978,13 @@ def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             " + (instr('0123456789abcdef', substr(md5(text), 2, 1)) - 1)"
         ).cast("long").alias("split_v"),
     )
-    best = (
-        F.when(
-            (F.col("s_zh") > F.col("s_en"))
-            & (F.col("s_zh") > F.col("s_de"))
-            & (F.col("s_zh") > F.col("s_fr"))
-            & (F.col("s_zh") > F.col("s_es")),
-            "zh",
-        )
-        .when(
-            (F.col("s_en") >= F.col("s_de"))
-            & (F.col("s_en") >= F.col("s_fr"))
-            & (F.col("s_en") >= F.col("s_es")),
-            "en",
-        )
-        .when(
-            (F.col("s_de") >= F.col("s_fr"))
-            & (F.col("s_de") >= F.col("s_es")),
-            "de",
-        )
-        .when(F.col("s_fr") >= F.col("s_es"), "fr")
-        .otherwise("es")
-    )
     n_sh = F.size("sh")
     n_dup = n_sh - F.size(F.array_distinct("sh"))
     return base.select(
         "doc_id",
         "lang",
-        "s_en",
-        "s_de",
-        "s_fr",
-        "s_es",
-        "s_zh",
-        best.alias("pred_lang"),
+        *[f"s_{k}" for k in scores],
+        pred_lang({k: F.col(f"s_{k}") for k in scores}).alias("pred_lang"),
         "n_tokens",
         "n_punct",
         "n_stopwords",
@@ -1019,11 +994,7 @@ def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.col("n_nonspace").cast("double") / F.col("n_tokens"), 6
         ).alias("avg_word_len"),
-        (
-            (F.col("n_tokens") >= 20)
-            & (F.col("n_tokens") <= 100000)
-            & (F.col("n_punct") * 10 <= F.col("n_tokens") * 3)
-        ).alias("quality_ok"),
+        quality_ok(F.col("n_tokens"), F.col("n_punct")).alias("quality_ok"),
         "bpe_tokens",
         n_sh.cast("long").alias("n_ngrams"),
         F.round(
@@ -1044,20 +1015,11 @@ WITH b AS (
   SELECT doc_id, lang, text, {_SQL_WORDS} AS words FROM documents),
 s AS (
   SELECT doc_id, lang,
-    len(regexp_extract_all(lower(text), '\b(the|and|of|to|in|is)\b', 1))
-        AS s_en,
-    len(regexp_extract_all(lower(text), '\b(der|die|und|das|ist|nicht)\b', 1))
-        AS s_de,
-    len(regexp_extract_all(lower(text), '\b(le|la|les|et|des|une)\b', 1))
-        AS s_fr,
-    len(regexp_extract_all(lower(text), '\b(el|los|que|de|una|por)\b', 1))
-        AS s_es,
-    len(regexp_extract_all(text, '([\x{{4e00}}-\x{{9fff}}])', 1)) AS s_zh,
+    {_SQL_LANG_SCORES},
     len(words) AS n_tokens,
-    len(regexp_extract_all(text, '([.,;:!?])', 1)) AS n_punct,
-    len(regexp_extract_all(lower(text), '\b(the|a|of|and|to|in|is)\b', 1))
-        AS n_stopwords,
-    length(regexp_replace(text, '\s', '', 'g')) AS n_nonspace,
+    {_SQL_N_PUNCT} AS n_punct,
+    {_SQL_N_STOPWORDS} AS n_stopwords,
+    {_SQL_N_NONSPACE} AS n_nonspace,
     len(regexp_extract_all(lower(text), '([a-z]+|[0-9]+|[^a-z0-9\s])', 1))
         AS bpe_tokens,
     {_SQL_SHINGLES_FROM_WORDS} AS sh,
@@ -1065,17 +1027,11 @@ s AS (
       + (instr('0123456789abcdef', substr(md5(text), 2, 1)) - 1) AS split_v
   FROM b)
 SELECT doc_id, lang, s_en, s_de, s_fr, s_es, s_zh,
-  CASE
-    WHEN s_zh > s_en AND s_zh > s_de AND s_zh > s_fr AND s_zh > s_es THEN 'zh'
-    WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es THEN 'en'
-    WHEN s_de >= s_fr AND s_de >= s_es THEN 'de'
-    WHEN s_fr >= s_es THEN 'fr'
-    ELSE 'es' END AS pred_lang,
+  {_SQL_PRED_LANG} AS pred_lang,
   n_tokens, n_punct, n_stopwords,
   round(CAST(n_stopwords AS DOUBLE) / n_tokens, 6) AS stopword_ratio,
   round(CAST(n_nonspace AS DOUBLE) / n_tokens, 6) AS avg_word_len,
-  n_tokens >= 20 AND n_tokens <= 100000 AND n_punct * 10 <= n_tokens * 3
-      AS quality_ok,
+  {_SQL_QUALITY_OK} AS quality_ok,
   bpe_tokens,
   CAST(len(sh) AS BIGINT) AS n_ngrams,
   round(CASE WHEN len(sh) > 0
@@ -1110,12 +1066,10 @@ def q_best_config(spark: SparkSession, sf_dir: str) -> DataFrame:
     old by-lang query — then melted and ranked per (lang, metric). One
     corpus pass instead of two."""
     d = _t(spark, sf_dir, "documents")
-    n_tokens = F.size(_norm_words()).cast("long")
-    n_punct = F.size(
-        F.regexp_extract_all(F.col("text"), F.lit(r"([.,;:!?])"), F.lit(1))
-    ).cast("long")
     base = d.select(
-        "lang", n_tokens.alias("n_tokens"), n_punct.alias("n_punct")
+        "lang",
+        F.size(_norm_words()).cast("long").alias("n_tokens"),
+        n_punct(F.col("text")).cast("long").alias("n_punct"),
     )
     grid = F.broadcast(
         spark.range(N_CONFIGS).select(
@@ -1128,11 +1082,7 @@ def q_best_config(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg_pass = (F.col("n_tokens") >= F.col("min_tok")) & (
         F.col("n_punct") * 10 <= F.col("n_tokens") * F.col("max_p")
     )
-    frozen_pass = (
-        (F.col("n_tokens") >= 20)
-        & (F.col("n_tokens") <= 100000)
-        & (F.col("n_punct") * 10 <= F.col("n_tokens") * 3)
-    )
+    frozen_pass = quality_ok(F.col("n_tokens"), F.col("n_punct"))
     j.withColumn("cfg_pass", cfg_pass).withColumn(
         "frozen_pass", frozen_pass
     ).createOrReplaceTempView("_cfg_sweep_all")
@@ -1175,7 +1125,7 @@ SQL_BEST_CONFIG = rf"""
 WITH base AS (
   SELECT lang,
          len({_SQL_WORDS}) AS n_tokens,
-         len(regexp_extract_all(text, '([.,;:!?])', 1)) AS n_punct
+         {_SQL_N_PUNCT} AS n_punct
   FROM documents),
 grid AS (
   SELECT CAST(i AS INT) AS config_id,
@@ -1186,8 +1136,7 @@ j AS (
   SELECT *,
          n_tokens >= min_tok AND n_punct * 10 <= n_tokens * max_p
              AS cfg_pass,
-         n_tokens >= 20 AND n_tokens <= 100000
-             AND n_punct * 10 <= n_tokens * 3 AS frozen_pass
+         {_SQL_QUALITY_OK} AS frozen_pass
   FROM base, grid),
 log AS (
   -- GROUPING(), not COALESCE: a genuine NULL-lang data group must not

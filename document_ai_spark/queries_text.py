@@ -1,10 +1,12 @@
 """Text-analysis operators over the documents table: language-ID, quality
-scoring (basic + Gopher rule pack), token counting, fingerprints (min-k +
-winnowing), heavy hitters, character entropy, repetition ratio, PII
-detect/redact, and the 1-D find-next-right-word KV query.
+scoring (basic + Gopher rule pack), fingerprints (min-k + winnowing),
+heavy hitters, line dedup, character entropy, PII detect/redact, frame
+sampling, and the 1-D find-next-right-word KV query.
 
 Every query here is DuckDB-oracle-checked; the parity tricks are
-documented in queries_ml's module docstring (shared policy).
+documented in queries_ml's module docstring (shared policy). The rule
+expressions (language scores, quality inputs, Gopher pack) and the text
+normalization are the shared builders of queries_base.
 """
 
 from __future__ import annotations
@@ -19,105 +21,63 @@ from pyspark.sql import types as T
 
 from .queries import _t
 from .queries_base import (
+    _norm_text,
     _norm_words,
     _shingles,
+    _SQL_GOPHER_OK,
+    _SQL_GOPHER_SIGNALS,
+    _SQL_LANG_SCORES,
+    _SQL_N_NONSPACE,
+    _SQL_N_PUNCT,
+    _SQL_N_STOPWORDS,
+    _SQL_NORM_TEXT,
+    _SQL_PRED_LANG,
+    _SQL_QUALITY_OK,
     _SQL_SHINGLES_FROM_WORDS,
     _SQL_WORDS,
     _SQL_WORDS_CTE,
+    gopher_signals,
+    lang_scores,
+    n_nonspace,
+    n_punct,
+    n_stopwords,
+    pred_lang,
+    quality_ok,
 )
 
 # --------------------------------------------------------------------------
-# Text analysis: language-ID heuristic, quality score, token counts,
-# min-k fingerprint
+# Text analysis: language-ID heuristic, quality score, min-k fingerprint
 # --------------------------------------------------------------------------
-
-_LANG_PATTERNS = {
-    "en": r"\b(the|and|of|to|in|is)\b",
-    "de": r"\b(der|die|und|das|ist|nicht)\b",
-    "fr": r"\b(le|la|les|et|des|une)\b",
-    "es": r"\b(el|los|que|de|una|por)\b",
-}
-
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
-    low = F.lower(F.col("text"))
-    scores = {
-        k: F.size(F.regexp_extract_all(low, F.lit(pat), F.lit(1)))
-        for k, pat in _LANG_PATTERNS.items()
-    }
-    zh = F.size(
-        F.regexp_extract_all(F.col("text"), F.lit(r"([\x{4e00}-\x{9fff}])"),
-                             F.lit(1))
-    )
+    scores = lang_scores(F.col("text"))
     d2 = d.select(
         "doc_id", "lang",
-        scores["en"].cast("long").alias("s_en"),
-        scores["de"].cast("long").alias("s_de"),
-        scores["fr"].cast("long").alias("s_fr"),
-        scores["es"].cast("long").alias("s_es"),
-        zh.cast("long").alias("s_zh"),
-    )
-    best = (
-        F.when(
-            (F.col("s_zh") > F.col("s_en")) & (F.col("s_zh") > F.col("s_de"))
-            & (F.col("s_zh") > F.col("s_fr")) & (F.col("s_zh") > F.col("s_es")),
-            "zh",
-        )
-        .when(
-            (F.col("s_en") >= F.col("s_de")) & (F.col("s_en") >= F.col("s_fr"))
-            & (F.col("s_en") >= F.col("s_es")),
-            "en",
-        )
-        .when(
-            (F.col("s_de") >= F.col("s_fr")) & (F.col("s_de") >= F.col("s_es")),
-            "de",
-        )
-        .when(F.col("s_fr") >= F.col("s_es"), "fr")
-        .otherwise("es")
+        *[c.cast("long").alias(f"s_{k}") for k, c in scores.items()],
     )
     return d2.select(
-        "doc_id", "lang", F.col("s_en"), F.col("s_de"), F.col("s_fr"),
-        F.col("s_es"), F.col("s_zh"), best.alias("pred_lang"),
+        "doc_id", "lang", *[f"s_{k}" for k in scores],
+        pred_lang({k: F.col(f"s_{k}") for k in scores}).alias("pred_lang"),
     )
 
 
-SQL_LANG_ID = r"""
+SQL_LANG_ID = f"""
 WITH s AS (
-  SELECT doc_id, lang,
-    len(regexp_extract_all(lower(text), '\b(the|and|of|to|in|is)\b', 1))
-        AS s_en,
-    len(regexp_extract_all(lower(text), '\b(der|die|und|das|ist|nicht)\b', 1))
-        AS s_de,
-    len(regexp_extract_all(lower(text), '\b(le|la|les|et|des|une)\b', 1))
-        AS s_fr,
-    len(regexp_extract_all(lower(text), '\b(el|los|que|de|una|por)\b', 1))
-        AS s_es,
-    len(regexp_extract_all(text, '([\x{4e00}-\x{9fff}])', 1)) AS s_zh
+  SELECT doc_id, lang, {_SQL_LANG_SCORES}
   FROM documents)
 SELECT doc_id, lang, s_en, s_de, s_fr, s_es, s_zh,
-  CASE
-    WHEN s_zh > s_en AND s_zh > s_de AND s_zh > s_fr AND s_zh > s_es THEN 'zh'
-    WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es THEN 'en'
-    WHEN s_de >= s_fr AND s_de >= s_es THEN 'de'
-    WHEN s_fr >= s_es THEN 'fr'
-    ELSE 'es' END AS pred_lang
+  {_SQL_PRED_LANG} AS pred_lang
 FROM s
 """
 
 
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
-    words = _norm_words()
-    n_tokens = F.size(words)
-    stop_hits = F.size(
-        F.regexp_extract_all(
-            F.lower("text"), F.lit(r"\b(the|a|of|and|to|in|is)\b"), F.lit(1)
-        )
-    )
-    punct = F.size(
-        F.regexp_extract_all(F.col("text"), F.lit(r"([.,;:!?])"), F.lit(1))
-    )
+    t = F.col("text")
+    n_tokens = F.size(_norm_words())
+    stop_hits = n_stopwords(t)
+    punct = n_punct(t)
     return d.select(
         "doc_id",
         n_tokens.cast("long").alias("n_tokens"),
@@ -126,58 +86,26 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(stop_hits.cast("double") / n_tokens, 6).alias(
             "stopword_ratio"
         ),
-        F.round(
-            F.length(F.regexp_replace("text", r"\s", "")).cast("double")
-            / n_tokens,
-            6,
-        ).alias("avg_word_len"),
-        (
-            (n_tokens >= 20)
-            & (n_tokens <= 100000)
-            & (punct * 10 <= n_tokens * 3)
-        ).alias("quality_ok"),
+        F.round(n_nonspace(t).cast("double") / n_tokens, 6).alias(
+            "avg_word_len"
+        ),
+        quality_ok(n_tokens, punct).alias("quality_ok"),
     )
 
 
-SQL_QUALITY_SCORE = rf"""
+SQL_QUALITY_SCORE = f"""
 WITH b AS (
   SELECT doc_id,
     len({_SQL_WORDS}) AS n_tokens,
-    len(regexp_extract_all(text, '([.,;:!?])', 1)) AS n_punct,
-    len(regexp_extract_all(lower(text), '\b(the|a|of|and|to|in|is)\b', 1))
-        AS n_stopwords,
-    length(regexp_replace(text, '\s', '', 'g')) AS n_nonspace
+    {_SQL_N_PUNCT} AS n_punct,
+    {_SQL_N_STOPWORDS} AS n_stopwords,
+    {_SQL_N_NONSPACE} AS n_nonspace
   FROM documents)
 SELECT doc_id, n_tokens, n_punct, n_stopwords,
        round(CAST(n_stopwords AS DOUBLE) / n_tokens, 6) AS stopword_ratio,
        round(CAST(n_nonspace AS DOUBLE) / n_tokens, 6) AS avg_word_len,
-       n_tokens >= 20 AND n_tokens <= 100000 AND n_punct * 10 <= n_tokens * 3
-           AS quality_ok
+       {_SQL_QUALITY_OK} AS quality_ok
 FROM b
-"""
-
-
-def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    ws_tokens = F.size(_norm_words())
-    bpe_ish = F.size(
-        F.regexp_extract_all(
-            F.lower("text"), F.lit(r"([a-z]+|[0-9]+|[^a-z0-9\s])"), F.lit(1)
-        )
-    )
-    return d.select(
-        "doc_id",
-        ws_tokens.cast("long").alias("ws_tokens"),
-        bpe_ish.cast("long").alias("bpe_tokens"),
-    )
-
-
-SQL_TOKEN_COUNT = rf"""
-SELECT doc_id,
-       len({_SQL_WORDS}) AS ws_tokens,
-       len(regexp_extract_all(lower(text), '([a-z]+|[0-9]+|[^a-z0-9\s])', 1))
-           AS bpe_tokens
-FROM documents
 """
 
 
@@ -355,19 +283,21 @@ def _winnow_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
+def _winnow_text(text_col: str = "text") -> F.Column:
+    """The winnowing normalization — winnow positions (and the passage
+    spans of operators/passages) index into THIS string. The truncation
+    cap is 1 << _POS_BITS by CONSTRUCTION: positions are packed into the
+    low _POS_BITS of the (hash, pos) key, so any position that survives
+    packing also indexes into this slice."""
+    return F.substring(F.lower(_norm_text(text_col)), 1, 1 << _POS_BITS)
+
+
 def winnow_fingerprints_df(d: DataFrame) -> DataFrame:
     """(doc_id, text, ...) -> (doc_id, pos, fingerprint) winnowed rows —
     the reusable form (q_winnow_fingerprint and the shared-passages /
     passage-excision suite branches build on it). doc_id keeps the
     input's type (r5: url-keyed extracted tables excise too)."""
-    # normalize with SQL expressions so both engines share one regex policy
-    norm = d.select(
-        "doc_id",
-        F.substring(
-            F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")),
-            1, 1 << _POS_BITS,
-        ).alias("t"),
-    )
+    norm = d.select("doc_id", _winnow_text().alias("t"))
     id_type = d.schema["doc_id"].dataType
     schema = T.StructType(
         [T.StructField("doc_id", id_type)]
@@ -380,6 +310,7 @@ def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winnow_fingerprints_df(_t(spark, sf_dir, "documents"))
 
 
+_SQL_WINNOW_TEXT = f"substr(lower({_SQL_NORM_TEXT}), 1, {1 << _POS_BITS})"
 _SQL_WINNOW_TERMS = " + ".join(
     f"cp[i+{j}] * {p}" for j, p in enumerate(_RK_POWS)
 )
@@ -391,8 +322,7 @@ def sql_winnow_fingerprint(src: str = "documents") -> str:
     return rf"""
 WITH s AS (
   SELECT doc_id,
-         substr(lower(regexp_replace(trim(text), '\s+', ' ', 'g')),
-                1, {1 << _POS_BITS}) AS t
+         {_SQL_WINNOW_TEXT} AS t
   FROM {src}),
 cps AS (
   SELECT doc_id,
@@ -557,9 +487,8 @@ FROM kept GROUP BY doc_id
 
 def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
     ch = d.select(
-        "doc_id", F.explode(F.split(norm, "")).alias("c")
+        "doc_id", F.explode(F.split(_norm_text(), "")).alias("c")
     ).filter(F.col("c") != "")
     counts = ch.groupBy("doc_id", "c").agg(F.count(F.lit(1)).alias("n"))
     tot = counts.groupBy("doc_id").agg(F.sum("n").alias("total"))
@@ -571,11 +500,9 @@ def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_CHAR_ENTROPY = r"""
+SQL_CHAR_ENTROPY = f"""
 WITH ch AS (
-  SELECT doc_id,
-         unnest(str_split(regexp_replace(trim(text), '\s+', ' ', 'g'), ''))
-             AS c
+  SELECT doc_id, unnest(str_split({_SQL_NORM_TEXT}, '')) AS c
   FROM documents),
 counts AS (
   SELECT doc_id, c, COUNT(*) AS n FROM ch WHERE c <> '' GROUP BY doc_id, c),
@@ -644,75 +571,41 @@ FROM f
 
 
 # --------------------------------------------------------------------------
-# Gopher-style quality rule pack (Rae et al. 2021 §A1.1-style heuristics,
-# the rules that make sense for single-paragraph synthetic docs): mean word
-# length bounds, symbol-to-word ratio, alpha-word fraction, minimum
-# stopword evidence. One scan, all rules as column expressions.
+# Gopher-style quality rule pack (queries_base.gopher_signals): one scan,
+# all rules as column expressions.
 # --------------------------------------------------------------------------
 
 def q_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     words = _norm_words()
     n_words = F.size(words)
-    n_alpha_words = F.size(
-        F.filter(words, lambda w: w.rlike("^[A-Za-z]+$"))
-    )
-    mean_wl = (
-        F.length(F.regexp_replace("text", r"\s", "")).cast("double")
-        / n_words
-    )
-    n_sym = F.size(
-        F.regexp_extract_all(F.col("text"), F.lit(r"([#@\[\]{}<>|~^])"),
-                             F.lit(1))
-    )
-    n_stop = F.size(
-        F.regexp_extract_all(
-            F.lower("text"),
-            F.lit(r"\b(the|be|to|of|and|that|have|with)\b"), F.lit(1),
-        )
-    )
+    g = gopher_signals(F.col("text"), words, n_words)
     return d.select(
         "doc_id",
         n_words.cast("long").alias("n_words"),
-        F.round(mean_wl, 6).alias("mean_word_len"),
-        F.round(n_alpha_words.cast("double") / n_words, 6).alias(
+        F.round(g["mean_wl"], 6).alias("mean_word_len"),
+        F.round(g["n_alpha"].cast("double") / n_words, 6).alias(
             "alpha_word_ratio"
         ),
-        F.round(n_sym.cast("double") / n_words, 6).alias("symbol_ratio"),
-        n_stop.cast("long").alias("n_stopwords"),
-        (
-            (n_words >= 50)
-            & (mean_wl >= 3.0) & (mean_wl <= 10.0)
-            & (n_alpha_words * 10 >= n_words * 8)
-            & (n_sym * 10 <= n_words)
-            & (n_stop >= 2)
-        ).alias("gopher_ok"),
+        F.round(g["n_sym"].cast("double") / n_words, 6).alias(
+            "symbol_ratio"
+        ),
+        g["n_stop"].cast("long").alias("n_stopwords"),
+        g["gopher_ok"].alias("gopher_ok"),
     )
 
 
-SQL_QUALITY_GOPHER = rf"""
-WITH b AS (
-  SELECT doc_id,
-         len({_SQL_WORDS}) AS n_words,
-         len(list_filter({_SQL_WORDS},
-                         w -> regexp_full_match(w, '[A-Za-z]+')))
-             AS n_alpha,
-         length(regexp_replace(text, '\s', '', 'g')) AS n_nonspace,
-         len(regexp_extract_all(text, '([#@\[\]{{}}<>|~^])', 1)) AS n_sym,
-         len(regexp_extract_all(lower(text),
-             '\b(the|be|to|of|and|that|have|with)\b', 1)) AS n_stop
-  FROM documents)
+SQL_QUALITY_GOPHER = f"""
+WITH w AS (SELECT doc_id, text, {_SQL_WORDS} AS words FROM documents),
+b AS (
+  SELECT doc_id, len(words) AS n_words, {_SQL_GOPHER_SIGNALS}
+  FROM w)
 SELECT doc_id, n_words,
        round(CAST(n_nonspace AS DOUBLE) / n_words, 6) AS mean_word_len,
        round(CAST(n_alpha AS DOUBLE) / n_words, 6) AS alpha_word_ratio,
        round(CAST(n_sym AS DOUBLE) / n_words, 6) AS symbol_ratio,
        n_stop AS n_stopwords,
-       n_words >= 50
-         AND CAST(n_nonspace AS DOUBLE) / n_words >= 3.0
-         AND CAST(n_nonspace AS DOUBLE) / n_words <= 10.0
-         AND n_alpha * 10 >= n_words * 8
-         AND n_sym * 10 <= n_words
-         AND n_stop >= 2 AS gopher_ok
+       {_SQL_GOPHER_OK} AS gopher_ok
 FROM b
 """
 
@@ -770,54 +663,3 @@ SELECT doc_id,
            '{_IPV4_RE}', '<IP>', 'g'), 1, 60) AS scrubbed_prefix
 FROM inj
 """
-
-
-
-
-# --------------------------------------------------------------------------
-# Within-document repetition signal (MassiveText-style repetition filter):
-# fraction of duplicated word 3-grams per doc. High ratio = boilerplate /
-# generated spam. Pure column expressions on the shared shingle builder.
-# REP_THRESHOLD is a deployment parameter (MassiveText flags at ~0.2+);
-# the default is 0.01 because the driver's synthetic docs top out near
-# 0.04-0.08 dup ratio — a 0.3 flag would pass vacuously on zero flagged
-# docs (27-287 docs flag at 0.01 across SFs).
-# --------------------------------------------------------------------------
-
-REP_THRESHOLD = 0.01
-
-
-def q_dup_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    sh = d.withColumn("words", _norm_words()).select(
-        "doc_id", _shingles(F.col("words")).alias("sh")
-    )
-    n = F.size("sh")
-    n_uniq = F.size(F.array_distinct("sh"))
-    return sh.select(
-        "doc_id",
-        n.cast("long").alias("n_ngrams"),
-        F.round(
-            F.when(n > 0, (n - n_uniq).cast("double") / n).otherwise(0.0), 6
-        ).alias("dup_ratio"),
-        ((n > 0)
-         & ((n - n_uniq).cast("double") > n * REP_THRESHOLD))
-        .alias("repetitive"),
-    )
-
-
-SQL_DUP_NGRAM_RATIO = f"""
-WITH sh AS (SELECT doc_id, {_SQL_SHINGLES_FROM_WORDS} AS sh
-            FROM ({_SQL_WORDS_CTE}))
-SELECT doc_id,
-       CAST(len(sh) AS BIGINT) AS n_ngrams,
-       round(CASE WHEN len(sh) > 0
-             THEN CAST(len(sh) - len(list_distinct(sh)) AS DOUBLE) / len(sh)
-             ELSE 0.0 END, 6) AS dup_ratio,
-       len(sh) > 0 AND CAST(len(sh) - len(list_distinct(sh)) AS DOUBLE)
-                       > len(sh) * {REP_THRESHOLD}
-           AS repetitive
-FROM sh
-"""
-
-

@@ -106,9 +106,10 @@ def test_excision_cap_shares_pos_bits():
     import inspect
 
     from document_ai_spark.operators import passages
-    from document_ai_spark.queries_text import _POS_BITS
+    from document_ai_spark.queries_text import _POS_BITS, _winnow_text
 
-    src = inspect.getsource(passages._norm_text)
+    assert passages._winnow_text is _winnow_text
+    src = inspect.getsource(_winnow_text)
     assert "_POS_BITS" in src and "1 << 24" not in src
     assert _POS_BITS == 24  # the packed-key layout the spans assume
 

@@ -124,7 +124,7 @@ def test_winnow_numpy_matches_pure_python_spec():
     """The vectorized winnowing kernel must equal a direct transcription of
     the spec (per-char Horner hash + per-window argmin with (value, pos)
     tie-break, each selected position recorded once)."""
-    from document_ai_spark.queries_ml import (
+    from document_ai_spark.queries_text import (
         _KGRAM,
         _RK_BASE,
         _RK_MOD,

@@ -81,7 +81,6 @@ def test_nfd_strip_accents(spark):
 
 
 def test_lang_id_discriminates_real_text(spark):
-    from document_ai_spark.queries_ml import _LANG_PATTERNS  # noqa: F401
     import tempfile, os
     import pyarrow as pa, pyarrow.parquet as pq
 
@@ -103,14 +102,14 @@ def test_lang_id_discriminates_real_text(spark):
         }),
         os.path.join(td, "documents.parquet"),
     )
-    from document_ai_spark.queries_ml import q_lang_id
+    from document_ai_spark.queries_text import q_lang_id
 
     got = {r.doc_id: r.pred_lang for r in q_lang_id(spark, td).collect()}
     assert got == {1: "en", 2: "de", 3: "fr", 4: "es", 5: "zh"}
 
 
 def test_winnow_fingerprint_properties(spark):
-    from document_ai_spark.queries_ml import _winnow_np
+    from document_ai_spark.queries_text import _winnow_np
 
     def fps(s):
         pos, fp = _winnow_np(s)

@@ -11,7 +11,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from document_ai_spark.queries_ml import (
+from document_ai_spark.queries_text import (
     _KGRAM,
     _RK_BASE,
     _RK_MOD,
