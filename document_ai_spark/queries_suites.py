@@ -938,7 +938,7 @@ FROM ({_SQL_REPETITION})
 #
 # REP_THRESHOLD (within-document repetition, MassiveText-style: fraction of
 # duplicated word 3-grams) is a deployment parameter (MassiveText flags at
-# ~0.2+); the default is 0.01 because the driver's synthetic docs top out
+# ~0.2+); the default is 0.01 because the synthetic test corpus tops out
 # near 0.04-0.08 dup ratio — a 0.3 flag would pass vacuously on zero
 # flagged docs (27-287 docs flag at 0.01 across SFs).
 # --------------------------------------------------------------------------
