@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # known two-level public suffixes for the zero-join heuristic (the
 # bundled PSL snapshot is the real path; this backstops hosts that
 # match no PSL rule, and deployments that deleted the snapshot file)
@@ -79,7 +81,7 @@ def psl_table(spark):
     rules = load_psl_rules()
     if not rules:
         return None
-    return spark.createDataFrame(rules, ["suffix", "kind"])
+    return local_frame(spark, rules, "suffix string, kind string")
 
 
 def url_host(url: Column) -> Column:

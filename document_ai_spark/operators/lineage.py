@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from ..sources.io import append_rows, write_extracted
 from .extraction import capped_scan_splits, extract_pages
 
@@ -92,7 +93,7 @@ def _append_lineage_rows(spark, rows, schema, path: str) -> None:
     filesystem URIs (hdfs://, s3a://, ...) go through the Spark writer —
     the driver-direct pyarrow fast path only works on the local FS."""
     if not _local_fs_path(path):
-        append_rows(spark.createDataFrame(rows, schema=schema), path)
+        append_rows(local_frame(spark, rows, schema), path)
         return
     import os
     import uuid as _uuid

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 CAUSES = [
     "parse_failed",
     "pdf_parse_failed",
@@ -37,9 +39,7 @@ def cause_confusion(pred: DataFrame, truth: DataFrame) -> DataFrame:
     /root/reference/performances.py:40-50,143-150).
     """
     spark = pred.sparkSession
-    causes_dim = spark.createDataFrame(
-        [(c,) for c in CAUSES], ["cause"]
-    )
+    causes_dim = local_frame(spark, [(c,) for c in CAUSES], "cause string")
     joined = pred.select(
         "url", F.col("causes").alias("pred_causes")
     ).join(
@@ -155,7 +155,7 @@ def error_rows(pred: DataFrame, truth: DataFrame) -> DataFrame:
     /root/reference/performances.py:82-93): for every (url, cause) where
     prediction and truth disagree, emit the disagreement kind."""
     spark = pred.sparkSession
-    causes_dim = spark.createDataFrame([(c,) for c in CAUSES], ["cause"])
+    causes_dim = local_frame(spark, [(c,) for c in CAUSES], "cause string")
     joined = pred.select("url", F.col("causes").alias("pred_causes")).join(
         truth.select("url", F.col("causes").alias("true_causes")), "url"
     )

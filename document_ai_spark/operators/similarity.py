@@ -7,10 +7,11 @@
   the full corpus (brute force stays as the small-N baseline in
   queries_ml.q_ann_cosine_topk).
 
-- Connected components by iterative min-label propagation: turns dedup
-  candidate pairs (MinHash/LSH, embedding near-dups) into duplicate
-  clusters with O(log n) rounds of self-joins — the shuffle-friendly way;
-  no driver-side union-find, no graph library.
+- Connected components: turns dedup candidate pairs (MinHash/LSH,
+  embedding near-dups) into duplicate clusters. A graph of at most
+  DRIVER_CC_MAX_EDGES edges is labelled by a driver-side union-find; a
+  larger one by iterative min-label propagation with pointer jumping,
+  O(log n) rounds of shuffle-friendly self-joins. No graph library.
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..queries_base import cosine
+from ..session import local_frame
 
 N_LISTS = 16
 N_PROBE = 6
@@ -101,7 +103,8 @@ def ivf_topk(embeddings: DataFrame, probes: DataFrame, k: int = 10,
     model, assigned = build_ivf_index(embeddings, n_lists, seed,
                                       fit_fraction)
     spark = embeddings.sparkSession
-    cent = spark.createDataFrame(
+    cent = local_frame(
+        spark,
         [
             (i, [float(x) for x in c])
             for i, c in enumerate(model.clusterCenters())
@@ -197,14 +200,16 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     node id.
 
     Adaptive size gate (same philosophy as the extraction path's
-    adaptive salting): the edge set is materialized and counted anyway,
-    and an LSH candidate graph is usually minuscule next to the corpus
-    — at or below `driver_threshold` edges the component labels come
-    from a driver-side union-find (microseconds) instead of paying
-    O(log d) rounds of scheduler latency; above it, the distributed
-    loop runs. Both paths compute the identical min-label fixpoint and
-    are cross-checked in tests (pass driver_threshold=0 to force the
-    distributed path). Rounds reported for the driver path: 0."""
+    adaptive salting): the edge set is materialized once, and an LSH
+    candidate graph is usually minuscule next to the corpus. One
+    collect of at most `driver_threshold + 1` edges decides: a graph
+    that fits is labelled by a driver-side union-find (microseconds)
+    and returned as an Arrow-built local frame, instead of paying
+    O(log d) rounds of scheduler latency; a larger one runs the
+    distributed loop. Both paths compute the identical min-label
+    fixpoint and are cross-checked in tests (pass driver_threshold=0 to
+    force the distributed path). Rounds reported for the driver path:
+    0."""
     # NULL endpoints (e.g. pairs built through an outer join) carry no
     # connectivity — drop them up front so BOTH paths are total on the
     # same input (the driver union-find would otherwise TypeError on
@@ -237,30 +242,30 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
         .select("e.src", "e.dst")
         .distinct()
     )
-    # materialize the edge set once and size the rounds to it: the LSH
-    # candidate graph is usually tiny relative to the corpus (826 edges at
-    # sf0.1), and running every O(log d) round at the session's full
-    # shuffle width made the loop pure scheduler latency. 100k edges per
-    # partition keeps one partition per round-task comfortable; huge
-    # graphs keep the session width.
+    # materialize the edge set once: the LSH candidate graph is usually
+    # tiny relative to the corpus (826 edges at sf0.1). ONE bounded
+    # collect decides the path — at most driver_threshold + 1 rows reach
+    # the driver, and only a graph past the threshold is counted.
     sym = sym.localCheckpoint(eager=True)
-    n_edges = sym.count()
     spark = edges.sparkSession
-    if n_edges <= driver_threshold:
-        comp = _driver_union_find(
-            [(r.src, r.dst) for r in sym.collect()]
-        )
+    head = sym.limit(driver_threshold + 1).collect()
+    if len(head) <= driver_threshold:
+        comp = _driver_union_find([(r.src, r.dst) for r in head])
         # node ids keep the edges' type (url-keyed dedup clusters use
         # STRING ids); min-label order is the same on both paths (numeric
-        # or lexicographic min)
+        # or lexicographic min). The labels travel as one Arrow table
+        # (an empty graph is an empty table with the schema).
         ntype = sym.schema["src"].dataType.simpleString()
-        labels = spark.createDataFrame(
-            list(comp.items()) or [(None, None)],
+        labels = local_frame(
+            spark, list(comp.items()),
             f"node {ntype}, component {ntype}",
         )
-        if not comp:
-            labels = labels.filter(F.col("node").isNotNull())
         return (labels, 0) if with_rounds else labels
+    # size the rounds to the graph: at the session's full shuffle width
+    # every O(log d) round of a small graph is pure scheduler latency.
+    # 100k edges per partition keeps one partition per round-task
+    # comfortable; huge graphs keep the session width.
+    n_edges = sym.count()
     width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     parts = max(1, min(width, n_edges // 100_000 + 1))
     sym = sym.repartition(parts, "src")

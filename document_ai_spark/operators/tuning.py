@@ -24,6 +24,7 @@ from ..kernel.charset import decode_html
 from ..kernel.classify import ClassifierConfig, classify_blocks
 from ..kernel.extract import ERR_NONE, ERR_TRUNCATED, MAX_HTML_BYTES
 from ..kernel.tokenizer import tokenize_blocks
+from ..session import local_frame
 
 SWEPT_SCHEMA = T.StructType(
     [
@@ -108,12 +109,13 @@ def sweep_extractions(
 
 
 def config_grid_df(spark, configs: list[ClassifierConfig]) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (i, c.w_min, c.ld_num, c.ld_den)
             for i, c in enumerate(configs)
         ],
-        ["config_id", "w_min", "ld_num", "ld_den"],
+        "config_id BIGINT, w_min BIGINT, ld_num BIGINT, ld_den BIGINT",
     )
 
 

@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
+from .session import local_frame
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # epoch conversions (unix_micros over NTZ->LTZ casts) must agree with
@@ -258,7 +260,7 @@ _KEYWORDS = ["spark", "join", "window", "stream", "hash"]
 
 def q_keyword_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
-    kw = spark.createDataFrame([(k,) for k in _KEYWORDS], ["kw"])
+    kw = local_frame(spark, [(k,) for k in _KEYWORDS], "kw string")
     return (
         d.crossJoin(F.broadcast(kw))
         .filter(F.col("text").contains(F.col("kw")))

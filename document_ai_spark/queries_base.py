@@ -4,7 +4,9 @@ Spark expression can never drift from the oracle string that checks it:
 
   - whitespace normalization and the frozen word split:
     split(regexp_replace(trim(text), '\\s+', ' '), ' ');
-  - word 3-gram shingles and the md5-slice MinHash signature;
+  - word 3-gram shingles and the md5-slice MinHash signature (on the
+    Spark side one Arrow-batched Python stage, whose word split mirrors
+    the Spark split exactly);
   - the language-ID scores and the pred_lang CASE;
   - the quality inputs (punctuation, stopwords, non-space chars) and the
     frozen quality_ok rule;
@@ -27,7 +29,14 @@ merged.
 
 from __future__ import annotations
 
+import re
+from functools import partial
+from hashlib import md5
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 SHINGLE_W = 3
 
@@ -247,6 +256,56 @@ N_MINHASH = 8
 N_BANDS = 4  # 2 hashes per band
 
 
+# Java's `\s` (no UNICODE_CHARACTER_CLASS): the six ASCII whitespace
+# chars Spark's regexp_replace collapses. Python's own `\s` also matches
+# U+00A0, U+3000 and the other Unicode spaces, which Spark keeps in words.
+_JAVA_SPACE = re.compile("[ \t\n\x0b\f\r]+")
+
+
+def _minhash_batches(batches, n_hashes: int):
+    """mapInArrow body of minhash_signatures: (id, text) record batches ->
+    (id, mh_0..mh_{n-1}) batches, one row per doc with >= 3 words."""
+    salts = [f"{k}:".encode() for k in range((n_hashes + 3) // 4)]
+    mh_names = [f"mh_{j}" for j in range(n_hashes)]
+    for batch in batches:
+        keep, starts, shingles = [], [], []
+        for i, text in enumerate(batch.column(1).to_pylist()):
+            if text is None:
+                continue
+            # the frozen split as Spark runs it: trim() strips U+0020
+            # only, and a split on one space keeps empty edge words
+            words = _JAVA_SPACE.sub(" ", text.strip(" ")).split(" ")
+            doc = set(map(" ".join,
+                          zip(*(words[k:] for k in range(SHINGLE_W)))))
+            if doc:
+                keep.append(i)
+                starts.append(len(shingles))
+                shingles += doc
+        if not keep:
+            continue
+        digests = b"".join([
+            md5(salt + b).digest()
+            for b in map(str.encode, shingles) for salt in salts
+        ])
+        # each shingle's digests read as big-endian 32-bit words: word
+        # 4k+r of a row is hex slice r of md5('k:'||shingle)
+        u32 = np.frombuffer(digests, dtype=">u4").reshape(
+            -1, 4 * len(salts)
+        )
+        mins = np.minimum.reduceat(u32[:, :n_hashes], starts, axis=0)
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column(0).take(pa.array(keep, pa.int32())),
+                *[
+                    pa.array([f"{v:08x}" for v in mins[:, j].tolist()],
+                             pa.string())
+                    for j in range(n_hashes)
+                ],
+            ],
+            names=[batch.schema.names[0], *mh_names],
+        )
+
+
 def minhash_signatures(df, id_col: str = "doc_id",
                        n_hashes: int = N_MINHASH):
     """(id, text) frame -> (id, mh_0..mh_{n-1}) md5-slice MinHash
@@ -258,38 +317,25 @@ def minhash_signatures(df, id_col: str = "doc_id",
     (j%4)-th 8-hex-char slice of md5('j//4:'||shingle): one md5 per four
     hash slots (the four words of one md5 are independent uniform bits),
     and lexicographic MIN over a fixed-width lowercase-hex slice equals
-    numeric MIN of that 32-bit word."""
-    # `words` is materialized once per row — inlining the split() inside
-    # the shingle transform() re-evaluates it per element (O(words^2)).
-    # Shingles dedup PER DOC (array_distinct) before exploding: MIN() is
-    # identical over a multiset or its distinct set, and a global
-    # .distinct() on the exploded rows would be a full shuffle of raw
-    # shingle text (~W x corpus bytes) for zero information. The groupBy
-    # below map-side-combines straight off the scan: only the minima of
-    # each doc cross the wire.
-    sh = df.withColumn("words", _norm_words()).select(
-        id_col,
-        F.explode(
-            F.array_distinct(_shingles(F.col("words")))
-        ).alias("shingle"),
+    numeric MIN of that 32-bit word.
+
+    One Arrow-batched Python stage over the pruned (id, text) columns
+    (_minhash_batches): per doc, the frozen word split, a set of the
+    shingles, `hashlib.md5` per shingle and hash group, and numpy minima
+    of the digests' big-endian words, formatted back to 8-hex strings.
+    The stage has no exchange, where the same signature as generated
+    Spark expressions (explode, md5 slices, min() per slot; the tests
+    keep it as the reference) sort-aggregates every shingle row of the
+    corpus. Ids are one row per doc (every caller keys by a unique doc
+    id or a recrawl-collapsed url). NULL text and docs with fewer than
+    3 words emit no row."""
+    schema = T.StructType(
+        [df.schema[id_col]]
+        + [T.StructField(f"mh_{j}", T.StringType())
+           for j in range(n_hashes)]
     )
-    # the slices are PROJECTED below the aggregate so each md5 is
-    # computed once per row by construction, and the aggregate itself is
-    # n plain min(column) buffers
-    slice_cols = []
-    for k in range((n_hashes + 3) // 4):
-        h = F.md5(
-            F.encode(
-                F.concat_ws(":", F.lit(str(k)), "shingle"), "UTF-8"
-            )
-        )
-        slice_cols += [
-            F.substring(h, r * 8 + 1, 8).alias(f"_s{4 * k + r}")
-            for r in range(4)
-            if 4 * k + r < n_hashes
-        ]
-    return sh.select(id_col, *slice_cols).groupBy(id_col).agg(
-        *[F.min(f"_s{j}").alias(f"mh_{j}") for j in range(n_hashes)]
+    return df.select(id_col, "text").mapInArrow(
+        partial(_minhash_batches, n_hashes=n_hashes), schema
     )
 
 

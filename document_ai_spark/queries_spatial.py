@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from .queries import _t
 from .queries_base import _SQL_WORDS, _norm_words
+from .session import local_frame
 
 # layout constants (shared by both engines; see _word_boxes)
 WORDS_PER_LINE = 8
@@ -110,7 +111,7 @@ def _next_right_relational(
     boxes = _word_boxes(d)
     spark = d.sparkSession
     keys_df = F.broadcast(
-        spark.createDataFrame([(k,) for k in keys], ["key"])
+        local_frame(spark, [(k,) for k in keys], "key string")
     )
     if fuzzy_margin is None:
         # exact match needs no join at all: key = lower(word) when in

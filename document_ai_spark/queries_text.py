@@ -116,9 +116,9 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup PER DOC (array_distinct), never globally: collect_set below
     # already dedups map-side inside the partial aggregate, so the old
     # `.distinct()` on the exploded (doc_id, md5) rows was a second full
-    # shuffle of the same data for zero information (r5, same cut as
-    # queries_base.minhash_band_pairs); array_distinct just saves the
-    # md5 work on repeated shingles
+    # shuffle of the same data for zero information (r5; the MinHash
+    # stage, queries_base.minhash_signatures, dedups per doc in a Python
+    # set); array_distinct just saves the md5 work on repeated shingles
     sh = d.withColumn("words", _norm_words()).select(
         "doc_id",
         F.explode(F.array_distinct(_shingles(F.col("words")))).alias(

@@ -14,7 +14,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # Cap Arrow batch rows: html averages ~1-10 KB but giants reach MBs; the cap
 # bounds a batch's memory worst-case (BENCH/BASELINE.md has the measured
@@ -87,6 +88,36 @@ def get_spark(
         _warm_session(spark)
         spark._das_warmed = True
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: list, schema: str | T.StructType
+) -> DataFrame:
+    """Driver-built rows -> DataFrame through one Arrow table, which the
+    JVM reads as a LocalRelation. `spark.createDataFrame(list)` pickles
+    the rows into a plain PythonRDD instead, and that RDD starts a second
+    Python daemon and worker pool next to the one the SQL Python stages
+    use. `schema` is a DDL string or a StructType; values go through the
+    same Python-to-internal conversion createDataFrame applies (naive
+    datetimes as local time), so both forms give the same rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = [
+        pa.array(
+            [f.dataType.toInternal(v) for v in vals]
+            if f.dataType.needConversion() else list(vals),
+            af.type,
+        )
+        for f, af, vals in zip(schema.fields, arrow_schema, cols)
+    ]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), schema
+    )
 
 
 def _warm_session(spark: SparkSession) -> None:

@@ -10,7 +10,7 @@ split at its header/body boundary, `WARC-Target-URI` is the url and
 
 Scale shape — the standard Spark-over-Common-Crawl grain:
   - one ~1 GB WARC file per task: the file LIST is the distributed
-    dataset (`spark.createDataFrame(paths).repartition(...)`), each task
+    dataset (an Arrow-built local frame, repartitioned), each task
     streams its file record-by-record (bounded memory: one record at a
     time, batches of rows yielded every BATCH_RECORDS),
   - the parser is total: malformed records are skipped and counted, a
@@ -28,6 +28,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ..session import local_frame
 
 BATCH_RECORDS = 256
 MAX_PAYLOAD_BYTES = 64 * 1024 * 1024  # skip absurd records, keep totality
@@ -163,8 +165,8 @@ def read_warc(spark: SparkSession, paths: list[str],
     `record_type='conversion'` reads WET archives (html carries the bare
     extracted text bytes)."""
     if not paths:  # empty manifest -> empty frame, not an analysis error
-        return spark.createDataFrame([], schema=WARC_PAGES_SCHEMA)
-    files = spark.createDataFrame([(p,) for p in paths], ["path"])
+        return local_frame(spark, [], WARC_PAGES_SCHEMA)
+    files = local_frame(spark, [(p,) for p in paths], "path string")
     n = max(
         1,
         num_partitions

@@ -111,14 +111,15 @@ runtime — nothing in the query changes.
 """,
         "## minhash_signatures — dedup at scale\n",
         "```\n" + plan(M.q_minhash_signatures(spark, sf)) + "\n```\n",
-        """**Scale notes.** Shingling is pure column expressions
-(`transform`/`sequence` over a `words` array materialized once per row —
-inlining the split would be O(words^2) per doc; shingles dedup PER DOC
-via array_distinct, never a global DISTINCT shuffle). The plan starts
-at the scan. The per-doc aggregation is one partial+final pass on a
-uniform key; the two md5s per shingle and their 8-hex-char slices are
-projected below it, so each md5 runs once per row and the aggregate is
-8 plain min(column) buffers.
+        """**Scale notes.** One Arrow-batched Python stage
+(`MapInArrow`) over the pruned (doc_id, text) scan, with no exchange:
+per doc it applies the frozen word split, keeps the distinct word
+3-grams in a set, runs two `hashlib.md5` per shingle and takes numpy
+minima of the digests' big-endian 32-bit words, formatted back to the
+8-hex strings the DuckDB twin computes. The same signature as
+generated expressions (explode, md5 slices, min() per slot) would
+sort-aggregate every shingle row of the corpus. Only the band keys are
+projected after it.
 """,
         "## minhash_lsh_pairs — candidate pairs without a self-join\n",
         "```\n" + plan(M.q_minhash_lsh_pairs(spark, sf),
@@ -174,7 +175,7 @@ MinHash/LSH candidate pipeline (bucketed band pair-explode — r5: no
 self-join, never all-pairs)
 plus connected components under an adaptive size gate: candidate graphs
 <= 1M edges (the sf LSH graph is a few hundred) resolve via a driver
-union-find — visible here as the broadcast ExistingRDD label side —
+union-find — visible here as the broadcast LocalTableScan label side —
 while larger graphs run the O(log diameter) pointer-jumping loop whose
 width adapts to the measured edge count (both paths cross-checked for
 identical fixpoints in tests). Keeper flags join back on doc_id. The

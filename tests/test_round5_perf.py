@@ -1,7 +1,7 @@
 """Round-5 perf-change regression tests: the adaptive recrawl collapse
 (identity vs materialized modes + crash-resume reuse) and the MinHash
-per-doc shingle dedup (signature invariance vs the old global-distinct
-construction)."""
+per-doc shingle dedup (the signature stage vs the per-doc and the old
+global-distinct Spark constructions)."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ from document_ai_spark.queries_base import (
     _norm_words,
     _shingles,
     minhash_band_pairs,
+    minhash_signatures,
 )
 
 
@@ -131,11 +132,11 @@ def test_pipeline_summary_reports_collapse_mode(spark, corpus_dir, tmp_path):
 
 
 def test_minhash_per_doc_distinct_matches_global_distinct(spark):
-    """The r5 shuffle cut (array_distinct per doc, no global .distinct()
-    on exploded shingle rows) must be value-invariant: MIN over a
-    multiset equals MIN over its distinct set. Compare full signatures
-    against the OLD construction on docs built to carry heavy repeated
-    shingles (both within and across docs)."""
+    """minhash_signatures must equal both inline Spark references: the
+    r5 per-doc form (array_distinct before the explode) and the older
+    global .distinct() on exploded shingle rows — MIN over a multiset
+    equals MIN over its distinct set. The docs carry heavy repeated
+    shingles, within and across docs."""
     phrase = "alpha beta gamma delta"
     docs = spark.createDataFrame(
         [
@@ -148,11 +149,15 @@ def test_minhash_per_doc_distinct_matches_global_distinct(spark):
     )
 
     def _sigs(sh):
+        h = [
+            F.md5(F.encode(F.concat_ws(":", F.lit(str(k)), "shingle"),
+                           "UTF-8"))
+            for k in range(2)
+        ]
         aggs = [
-            F.min(
-                F.md5(F.encode(F.concat_ws(":", F.lit(str(j)), "shingle"),
-                               "UTF-8"))
-            ).alias(f"mh_{j}")
+            F.min(F.substring(h[j // 4], (j % 4) * 8 + 1, 8)).alias(
+                f"mh_{j}"
+            )
             for j in range(8)
         ]
         return {
@@ -166,7 +171,7 @@ def test_minhash_per_doc_distinct_matches_global_distinct(spark):
             "doc_id", F.explode(_shingles(F.col("words"))).alias("shingle")
         ).distinct()
     )
-    new = _sigs(
+    per_doc = _sigs(
         base.select(
             "doc_id",
             F.explode(F.array_distinct(_shingles(F.col("words")))).alias(
@@ -174,7 +179,11 @@ def test_minhash_per_doc_distinct_matches_global_distinct(spark):
             ),
         )
     )
-    assert old == new and set(old) == {1, 2, 3}
+    got = {
+        r.doc_id: tuple(r[f"mh_{j}"] for j in range(8))
+        for r in minhash_signatures(docs).collect()
+    }
+    assert got == old == per_doc and set(got) == {1, 2, 3}
 
     pairs = {
         (r.doc_a, r.doc_b)

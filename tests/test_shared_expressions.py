@@ -2,7 +2,9 @@
 queries_base: every Spark builder and its DuckDB SQL twin run over one
 small hand-built documents table whose inputs the synthetic oracle corpus
 never produces (empty, whitespace-only, punctuation-only and CJK-only
-text, a one-word doc, a Gopher-passing English doc, de/fr/es lines)."""
+text, a one-word doc, a Gopher-passing English doc, de/fr/es lines), and
+the MinHash signature stage against the generated Spark chain it
+replaced and its DuckDB twin."""
 
 from __future__ import annotations
 
@@ -11,7 +13,9 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from document_ai_spark.queries_base import (
+    _SQL_MINHASH_CORE,
     _norm_words,
+    _shingles,
     _SQL_GOPHER_OK,
     _SQL_GOPHER_SIGNALS,
     _SQL_LANG_SCORES,
@@ -22,6 +26,7 @@ from document_ai_spark.queries_base import (
     _SQL_WORDS,
     gopher_signals,
     lang_scores,
+    minhash_signatures,
     n_punct,
     n_stopwords,
     pred_lang,
@@ -122,3 +127,83 @@ def test_rule_builders_match_sql_twins_on_edge_cases(spark):
     assert by_id.pred_lang[[3, 5, 6, 7, 8]].tolist() == [
         "zh", "en", "de", "fr", "es"
     ]
+
+
+def _spark_chain_signatures(df, id_col: str, n_hashes: int = 8):
+    """Reference: the generated Spark chain minhash_signatures replaced
+    (explode the per-doc distinct shingles, project the md5 hex slices,
+    min() per slot in a groupBy)."""
+    sh = df.withColumn("words", _norm_words()).select(
+        id_col,
+        F.explode(F.array_distinct(_shingles(F.col("words")))).alias(
+            "shingle"
+        ),
+    )
+    slices = []
+    for k in range((n_hashes + 3) // 4):
+        h = F.md5(F.encode(F.concat_ws(":", F.lit(str(k)), "shingle"),
+                           "UTF-8"))
+        slices += [
+            F.substring(h, r * 8 + 1, 8).alias(f"_s{4 * k + r}")
+            for r in range(4)
+            if 4 * k + r < n_hashes
+        ]
+    return sh.select(id_col, *slices).groupBy(id_col).agg(
+        *[F.min(f"_s{j}").alias(f"mh_{j}") for j in range(n_hashes)]
+    )
+
+
+MINHASH_DOCS = [
+    "\t\nalpha beta gamma delta\n\t",      # edge tabs/newlines: empty words
+    "  alpha beta gamma delta  ",            # trim() strips the spaces
+    "alpha\u00a0beta gamma\u3000delta eps",  # not Java \s: inside words
+    "中文 文本 测试 数据 中文 文本",             # CJK, one repeated shingle
+    "😀 𝔘𝔫𝔦 🚀 rocket 𠀀 launch",              # astral characters
+    "café naïve résumé déjà vu",             # accented Latin
+    "one two three",                         # exactly one shingle
+    "one two",                               # < 3 words: no row
+    "",                                      # empty: no row
+    None,                                    # NULL text: no row
+    "a b c a b c a b c a b c",               # repeated shingles
+    "x\r\n\r\ny \t z",                     # runs of mixed whitespace
+]
+# vertical tab and form feed are Java `\s` but not RE2 `\s`: the DuckDB
+# twin splits them differently, so only the Spark chain is compared here
+SPARK_ONLY_DOCS = ["p\x0bq r\x0cs t", "\x0b\x0cleft right edge"]
+
+
+def _signature_rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_minhash_signatures_match_spark_chain_and_duckdb(spark):
+    n_docs = len(MINHASH_DOCS)
+    docs = MINHASH_DOCS + SPARK_ONLY_DOCS
+    for ids, ddl in (
+        (list(range(len(docs))), "doc_id bigint, text string"),
+        ([f"u{i:02d}" for i in range(len(docs))],
+         "doc_id string, text string"),
+    ):
+        df = spark.createDataFrame(list(zip(ids, docs)), ddl)
+        got = minhash_signatures(df)
+        want = _spark_chain_signatures(df, "doc_id")
+        assert got.schema == want.schema
+        rows = _signature_rows(got)
+        assert rows == _signature_rows(want)
+        # non-vacuous: every doc with >= 3 words signs, the rest do not
+        assert sorted(r[0] for r in rows) == [
+            i for i, t in zip(ids, docs) if t and len(t.split()) >= 3
+        ]
+        con = duckdb.connect()
+        con.register("documents", pd.DataFrame(
+            {"doc_id": ids[:n_docs], "text": MINHASH_DOCS}
+        ))
+        sql = sorted(
+            tuple(r) for r in con.execute(_SQL_MINHASH_CORE).fetchall()
+        )
+        assert sql == [r for r in rows if r[0] in ids[:n_docs]]
+    # a different hash count still reads the right digest words
+    for n in (6, 16):
+        assert _signature_rows(minhash_signatures(df, n_hashes=n)) == (
+            _signature_rows(_spark_chain_signatures(df, "doc_id", n))
+        )

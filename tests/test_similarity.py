@@ -218,3 +218,74 @@ def test_ivf_quantizer_fit_is_sample_bounded(spark, monkeypatch):
     model, assigned = S.build_ivf_index(emb, n_lists=8)
     assert sum(model.summary.clusterSizes) <= 64
     assert assigned.count() == emb.count()  # full table still assigned
+
+
+def _rdd_lineage(df) -> str:
+    """toRdd's lineage plus the lineage of every RDD-backed leaf of the
+    optimized plan: a broadcast side runs as its own job, so its RDD
+    never shows in the consumer's toRdd lineage."""
+    qe = df._jdf.queryExecution()
+    text = [qe.toRdd().toDebugString()]
+    leaves = qe.optimizedPlan().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            text.append(leaf.rdd().toDebugString())
+    return "\n".join(text)
+
+
+def test_driver_built_frames_have_no_python_rdd(spark):
+    """Frames built on the driver (union-find labels, the next_right key
+    list, the funnel's cluster labels) reach the JVM as Arrow-built
+    local relations: a plain PythonRDD would start a second Python
+    daemon and worker pool beside the SQL one."""
+    import __spark_entry__ as entrymod
+
+    frames = {
+        f"labels {ddl} x{len(rows)}": connected_components(
+            spark.createDataFrame(rows, ddl)
+        )
+        for rows, ddl in (
+            ([("a", "b"), ("b", "c")], "src string, dst string"),
+            ([(1, 2), (3, 4)], "src bigint, dst bigint"),
+            ([], "src bigint, dst bigint"),
+        )
+    }
+    qs = entrymod.queries()
+    for q in ("next_right_word_2d", "curation_funnel"):
+        frames[q] = qs[q](spark, SF)
+    with_rdd = [k for k, df in frames.items()
+                if "PythonRDD" in _rdd_lineage(df)]
+    assert with_rdd == []
+    assert frames["labels src bigint, dst bigint x0"].count() == 0
+
+
+def test_local_frame_matches_create_dataframe(spark):
+    """The Arrow-built frame carries the same schema and rows as
+    createDataFrame over the same list, timestamps included (naive
+    datetimes are local time in both)."""
+    from datetime import datetime
+
+    from pyspark.sql import Row
+
+    from document_ai_spark.operators.lineage import LINEAGE_SCHEMA
+    from document_ai_spark.session import local_frame
+
+    lineage = [
+        Row(run_id="r", shard_id=3, docs=7, bytes=900, parse_failures=1,
+            started_ts=datetime(2026, 1, 2, 3, 4, 5, 6),
+            finished_ts=datetime.fromtimestamp(1.8e9), status="done"),
+        Row(run_id=None, shard_id=None, docs=None, bytes=None,
+            parse_failures=None, started_ts=None, finished_ts=None,
+            status=None),
+    ]
+    for rows, schema in (
+        (lineage, LINEAGE_SCHEMA),
+        ([(0, [1.0, -2.5]), (1, [])], "list_id INT, center ARRAY<DOUBLE>"),
+        ([], "node string, component string"),
+    ):
+        got = local_frame(spark, rows, schema)
+        want = spark.createDataFrame(rows, schema)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        assert "PythonRDD" not in _rdd_lineage(got)
