@@ -15,6 +15,10 @@ Modes:
       Isolate one query with the noop sink (computes every column,
       discards the result) — separates computation from the count()
       short-circuit for plan work.
+
+The JSON output of `queries` and `noop` carries `cds`, the driver JVM's
+class-archive state (absent / created / reused, see
+document_ai_spark/session.py).
 """
 
 from __future__ import annotations
@@ -58,6 +62,8 @@ def _registry():
 
 
 def cmd_queries(out_path: str, repeat: int, names: list[str]) -> int:
+    from document_ai_spark.session import cds_state
+
     spark = _session()
     qs = _registry()
     samples: dict[str, list[float]] = {n: [] for n in names}
@@ -69,6 +75,7 @@ def cmd_queries(out_path: str, repeat: int, names: list[str]) -> int:
             samples[name].append(round(time.time() - t0, 2))
     spark.stop()
     res = {
+        "cds": cds_state(spark),
         "sf": SF_DIR,
         "cpus": CPUS,
         "repeat": repeat,
@@ -101,6 +108,8 @@ def cmd_plans(out_dir: str, suffix: str, names: list[str]) -> int:
 
 
 def cmd_noop(name: str, repeat: int) -> int:
+    from document_ai_spark.session import cds_state
+
     spark = _session()
     qs = _registry()
     walls = []
@@ -111,7 +120,8 @@ def cmd_noop(name: str, repeat: int) -> int:
         df.write.format("noop").mode("overwrite").save()
         walls.append(round(time.time() - t0, 2))
     spark.stop()
-    print(json.dumps({"name": name, "noop_walls": walls}))
+    print(json.dumps({"name": name, "cds": cds_state(spark),
+                      "noop_walls": walls}))
     return 0
 
 

@@ -132,8 +132,10 @@ def run_pipeline(
             "chunk_unit='subwords' requires chunk_overlap=0 "
             "(stream-cut budgets cannot re-serve trailing words)"
         )
+    from .session import cds_state
+
     os.makedirs(workdir, exist_ok=True)
-    summary: dict = {"stages": {}}
+    summary: dict = {"stages": {}, "session": {"cds": cds_state(spark)}}
     t_start = time.time()
 
     def _timed(stage: str, t0: float) -> None:

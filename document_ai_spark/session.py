@@ -8,11 +8,34 @@ Scale posture (tuned for a 1000-executor cluster, exercised on local[N]):
     (/root/reference/ai_documents/detection/template_matching.py:169-188).
   - shuffle.partitions defaults to the core count locally; on a real cluster
     AQE coalesces from a deliberately high initial number.
+
+Driver JVM startup: when `get_spark` launches the JVM itself, it starts
+it from a dynamic AppCDS archive (a saved copy of the classes an earlier
+driver on this host loaded), so class loading is not paid again on every
+run. One archive per host, keyed by (java build, Spark version, driver
+classpath), lives in `${XDG_CACHE_HOME:-~/.cache}/spark-docext/cds/`:
+  - reuse: the archive exists -> `-XX:SharedArchiveFile` through
+    `spark.driver.defaultJavaOptions` (it combines with a caller's
+    `extraJavaOptions`);
+  - create: it does not -> the JVM records dump info, and an `atexit`
+    hook dumps the archive with `jcmd` when the Python process exits,
+    outside `get_spark` and before the JVM is gone;
+  - absent: spark-submit launches, a JVM that is already running, a
+    user conf dir or real files in Spark's default one (CDS refuses a
+    non-empty directory on the classpath) get no option at all.
+The archive state is `cds_state(spark)`. A mismatched archive is
+rejected by the JVM, which then runs without it; deleting the cache
+directory is always safe.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import subprocess
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -25,6 +48,13 @@ ARROW_MAX_RECORDS = 256
 # overflow handling on wide batches of giant pages
 ARROW_LARGE_VARTYPES = "true"
 
+# the creating JVM would print ~350 `[cds]` warnings (pre-JDK-6 classes it
+# cannot archive) when it dumps
+CDS_QUIET = "-Xlog:cds=off,cds+dynamic=off"
+# the state of the archive for this process's driver JVM: absent (no
+# archive), created (dumped at interpreter exit) or reused
+_cds_state = "absent"
+
 
 def get_spark(
     app_name: str = "document_ai_spark",
@@ -32,6 +62,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    global _cds_state
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
         # honor a master already set by spark-submit (--master); only
@@ -80,14 +111,165 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    for k, v in conf.items():
         b = b.config(k, v)
-    spark = b.getOrCreate()
+    cds = _cds_launch(conf.get("spark.driver.extraClassPath", ""))
+    if cds is None:
+        spark = b.getOrCreate()
+    else:
+        state, opts, conf_dir, prefix = cds
+        b = b.config("spark.driver.defaultJavaOptions", " ".join(
+            filter(None, [conf.get("spark.driver.defaultJavaOptions"), opts])
+        ))
+        # only the launcher reads it: _cds_launch returned because it was unset
+        os.environ["SPARK_CONF_DIR"] = conf_dir
+        try:
+            spark = b.getOrCreate()
+        finally:
+            del os.environ["SPARK_CONF_DIR"]
+        _cds_state = state
+        if state == "created":
+            pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+            atexit.register(_dump_archive, os.getpid(), pid, prefix)
+    spark._das_cds = _cds_state
     spark.sparkContext.setLogLevel("WARN")
     if not getattr(spark, "_das_warmed", False):
         _warm_session(spark)
         spark._das_warmed = True
     return spark
+
+
+def cds_state(spark: SparkSession) -> str:
+    """How the session's driver JVM used the class archive: 'absent',
+    'created' or 'reused'."""
+    return getattr(spark, "_das_cds", "absent")
+
+
+def _cds_dir() -> str:
+    base = os.environ.get("XDG_CACHE_HOME", "")
+    if not os.path.isabs(base):
+        base = os.path.join(os.path.expanduser("~"), ".cache")
+    return os.path.join(base, "spark-docext", "cds")
+
+
+def _java_home(env: Mapping[str, str]) -> str | None:
+    # the one spark-submit's launcher runs: $JAVA_HOME, else `java` on PATH
+    if env.get("JAVA_HOME"):
+        return env["JAVA_HOME"]
+    java = shutil.which("java", path=env.get("PATH"))
+    return os.path.dirname(os.path.dirname(os.path.realpath(java))) if java else None
+
+
+def _spark_home(env: Mapping[str, str]) -> str:
+    from pyspark.find_spark_home import _find_spark_home
+
+    return env.get("SPARK_HOME") or _find_spark_home()
+
+
+def cds_key(env: Mapping[str, str], extra_classpath: str = "") -> str | None:
+    """The archive's key: a hash of the java build, the Spark version and
+    the driver classpath (each jar's name, size and mtime). It reads files
+    only, never starts a JVM, and takes in no JVM option text, so a
+    per-run `_JAVA_OPTIONS` leaves it unchanged. None without a java."""
+    from pyspark import __version__
+
+    java_home = _java_home(env)
+    if java_home is None:
+        return None
+    h = hashlib.sha256(f"spark {__version__}\n".encode())
+    try:
+        with open(os.path.join(java_home, "release"), "rb") as f:
+            h.update(f.read())
+    except OSError:
+        st = os.stat(os.path.join(java_home, "bin", "java"))
+        h.update(f"java {java_home} {st.st_size} {st.st_mtime_ns}\n".encode())
+    jars = os.path.join(_spark_home(env), "jars")
+    entries = [os.path.join(jars, n) for n in sorted(os.listdir(jars))]
+    for p in entries + [p for p in extra_classpath.split(os.pathsep) if p]:
+        try:
+            st = os.stat(p)
+            h.update(f"{p} {st.st_size} {st.st_mtime_ns}\n".encode())
+        except OSError:
+            h.update(f"{p} missing\n".encode())
+    return h.hexdigest()[:20]
+
+
+def _cds_launch(extra_classpath: str) -> tuple[str, str, str, str] | None:
+    """(state, driver java options, empty conf dir, archive prefix) when
+    this call will launch the driver JVM and can start it from an
+    archive, else None. A published archive is `<prefix>.<bytes>.jsa`
+    and is reused only at that size: a truncated archive crashes the JVM
+    with SIGBUS."""
+    from pyspark import SparkContext
+
+    env = os.environ
+    if "PYSPARK_GATEWAY_PORT" in env or SparkContext._gateway is not None:
+        return None  # spark-submit launched the JVM, or it already runs
+    if any(env.get(v) for v in ("SPARK_CONF_DIR", "HADOOP_CONF_DIR",
+                                "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")):
+        return None  # user directories go on the classpath
+    try:
+        default_conf = os.path.join(_spark_home(env), "conf")
+        names = os.listdir(default_conf) if os.path.isdir(default_conf) else []
+        if not all(n.endswith(".template") for n in names):
+            return None
+        key = cds_key(env, extra_classpath)
+        if key is None:
+            return None
+        cache = _cds_dir()
+        conf_dir = os.path.join(cache, "conf")
+        os.makedirs(conf_dir, exist_ok=True)
+        prefix = os.path.join(cache, key)
+        for name in os.listdir(cache):
+            path = os.path.join(cache, name)
+            k, _, size = name.removesuffix(".jsa").partition(".")
+            if (name.endswith(".jsa") and k == key
+                    and size == str(os.path.getsize(path))):
+                return ("reused", f"-XX:SharedArchiveFile={path}", conf_dir,
+                        prefix)
+        if not os.access(_jcmd(), os.X_OK):
+            return None
+        return ("created", f"-XX:+RecordDynamicDumpInfo {CDS_QUIET}",
+                conf_dir, prefix)
+    except OSError:
+        return None
+
+
+def _jcmd() -> str:
+    return os.path.join(_java_home(os.environ) or "", "bin", "jcmd")
+
+
+def _dump_archive(owner: int, jvm_pid: int, prefix: str) -> None:
+    """atexit hook of the creating process: dump the running driver JVM's
+    classes with `jcmd VM.cds dynamic_dump`, publish the archive as
+    `<key>.<bytes>.jsa` with one rename, and delete every other file in
+    the cache directory (archives of other keys, dumps left by killed
+    processes). It runs while the JVM is still alive (the JVM
+    exits when this process closes its stdin); a dump at JVM exit would
+    be cut short by a caller that kills the process tree right after
+    Python exits. Failures leave no archive and no partial file."""
+    if os.getpid() != owner:
+        return  # a forked child inherited the hook
+    tmp = f"{prefix}.{owner}.tmp"
+    try:
+        subprocess.run(
+            [_jcmd(), str(jvm_pid), "VM.cds", "dynamic_dump", tmp],
+            stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+            timeout=300, check=True,
+        )
+        archive = f"{prefix}.{os.path.getsize(tmp)}.jsa"
+        os.replace(tmp, archive)
+        cache = os.path.dirname(prefix)
+        for name in os.listdir(cache):
+            path = os.path.join(cache, name)
+            if path != archive and os.path.isfile(path):
+                os.remove(path)
+    except (OSError, subprocess.SubprocessError):
+        pass
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def local_frame(

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from document_ai_spark.pipeline import run_pipeline
+from document_ai_spark.session import cds_state
 
 RULES = ("dedup", "quality")  # gopher rejects the synthetic vocabulary
 
@@ -55,6 +56,9 @@ def test_pipeline_clf_rule(spark, pages_dir, tmp_path):
     assert summary["stages"]["curate"]["rules"] == [
         "dedup", "quality", "clf"
     ]
+    # the run reports how its driver JVM started (the class archive)
+    assert summary["session"] == {"cds": cds_state(spark)}
+    assert cds_state(spark) in ("absent", "created", "reused")
     kept_clf = summary["stages"]["curate"]["docs_kept"]
     assert 0 < kept_clf <= 60
     wd2 = str(tmp_path / "wd_dq")
