@@ -3,7 +3,8 @@ engine, as a Spark Column builder next to its DuckDB SQL twin, so a
 Spark expression can never drift from the oracle string that checks it:
 
   - whitespace normalization and the frozen word split:
-    split(regexp_replace(trim(text), '\\s+', ' '), ' ');
+    split(regexp_replace(trim(text), '\\s+', ' '), ' '), with a Python
+    twin (_py_words) for the per-document Arrow stages;
   - word 3-gram shingles and the md5-slice MinHash signature (on the
     Spark side one Arrow-batched Python stage, whose word split mirrors
     the Spark split exactly);
@@ -262,6 +263,13 @@ N_BANDS = 4  # 2 hashes per band
 _JAVA_SPACE = re.compile("[ \t\n\x0b\f\r]+")
 
 
+def _py_words(text: str) -> list[str]:
+    """Python twin of _norm_words for the Arrow stages: the frozen split
+    as Spark runs it. trim() strips U+0020 only, and a split on one
+    space keeps empty edge words ("\tfoo" -> ["", "foo"])."""
+    return _JAVA_SPACE.sub(" ", text.strip(" ")).split(" ")
+
+
 def _minhash_batches(batches, n_hashes: int):
     """mapInArrow body of minhash_signatures: (id, text) record batches ->
     (id, mh_0..mh_{n-1}) batches, one row per doc with >= 3 words."""
@@ -272,9 +280,7 @@ def _minhash_batches(batches, n_hashes: int):
         for i, text in enumerate(batch.column(1).to_pylist()):
             if text is None:
                 continue
-            # the frozen split as Spark runs it: trim() strips U+0020
-            # only, and a split on one space keeps empty edge words
-            words = _JAVA_SPACE.sub(" ", text.strip(" ")).split(" ")
+            words = _py_words(text)
             doc = set(map(" ".join,
                           zip(*(words[k:] for k in range(SHINGLE_W)))))
             if doc:

@@ -14,8 +14,9 @@ Oracle-parity tricks:
     split(regexp_replace(trim(text), '\\s+', ' '), ' ').
   - Cosine/Jaccard are rounded to 6 dp in both engines and ranked on the
     rounded value.
-  - Bit-level ops are made oracle-checkable by construction: SimHash reads
-    md5 hex nibbles columnar-side; winnowing uses Mersenne-31 integer math;
+  - Bit-level ops are made oracle-checkable by construction: SimHash's
+    Arrow stage reads the md5 digest bytes whose hex nibbles the oracle
+    reads; winnowing uses Mersenne-31 integer math;
     LSH planes are integer vectors over quantized embeddings (exact BIGINT
     dot products, summation-order-independent). Only the HLL sketch and
     KMeans-based IVF stay rows-only.
@@ -24,9 +25,11 @@ Oracle-parity tricks:
 from __future__ import annotations
 
 from collections.abc import Iterator
+from hashlib import md5
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -38,6 +41,7 @@ from .queries_base import (
     _SQL_SHINGLES_FROM_WORDS,
     _SQL_WORDS,
     _norm_words,
+    _py_words,
     _sql_cosine,
     cosine,
     minhash_band_pairs,
@@ -304,60 +308,50 @@ WHERE cosine > {NEAR_DUP_COS}
 
 
 # --------------------------------------------------------------------------
-# SimHash — fully columnar: explode tokens, md5 -> 64-bit prefix, per-bit
-# ±1 votes as 64 partial+final aggregates, bits reassembled to a signed
-# BIGINT. No Python in the hot path (the round-1 per-row/per-token md5 loop
-# is gone), and the nibble arithmetic is plain SQL, so the entry is now
-# fully hash-checked against DuckDB.
+# SimHash — one per-document Arrow stage (_simhash_batches): per doc, md5
+# per token, the votes of the digests' first 64 bits and the sign bits
+# packed back into a signed BIGINT. No aggregate and no rejoin: every
+# document row, token-less ones included, emits its own simhash.
 #
 # Spec (identical to the original reference impl, kept as the pytest twin):
-#   token = maximal non-whitespace run of `text`
+#   token = non-empty word of the frozen split (_py_words)
 #   h(token) = first 8 bytes of md5(utf8(token)), big-endian uint64
 #   bit i of simhash = 1 iff sum over tokens of (2*((h>>i)&1) - 1) > 0
 #   result = that uint64 reinterpreted as signed int64; no tokens -> 0.
-# Bit i lives in hex digit j = 16 - i//4 (1-based) at nibble bit i%4 —
-# both engines read the md5 hex string the same way, no integer md5 needed.
+# The DuckDB oracle reads bit i from hex digit j = 16 - i//4 (1-based) at
+# nibble bit i%4 of the same digest.
 # --------------------------------------------------------------------------
+
+def _simhash_batches(batches):
+    """mapInArrow body of q_simhash: (doc_id, text) record batches ->
+    (doc_id, simhash) batches, one row per doc."""
+    for batch in batches:
+        sims = []
+        for text in batch.column(1).to_pylist():
+            toks = [] if text is None else [w for w in _py_words(text) if w]
+            if not toks:
+                sims.append(0)
+                continue
+            h = np.frombuffer(
+                b"".join([md5(t.encode()).digest()[:8] for t in toks]),
+                dtype=np.uint8,
+            ).reshape(-1, 8)
+            # unpackbits reads each byte MSB first, so column 0 is bit 63
+            # of the big-endian uint64 and packbits restores that order
+            ones = np.unpackbits(h, axis=1).sum(axis=0)
+            sims.append(int(np.packbits(2 * ones > len(toks)).view(">i8")[0]))
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(0), pa.array(sims, pa.int64())],
+            names=["doc_id", "simhash"],
+        )
+
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
-    # r6: read the 64 hash bits from TWO conv()s of the md5 hex halves
-    # instead of 16 per-nibble conv(substring) string ops — hi carries
-    # bits 63..32 (first 8 hex chars, big-endian), lo bits 31..0, so
-    # bit i = (lo-or-hi >> (i % 32)) & 1 reproduces the old
-    # nibble-indexed read exactly (verified value-identical; each half
-    # is < 2^32 so the BIGINT cast of conv() never overflows).
-    tok = d.select(
-        "doc_id", F.explode(_norm_words()).alias("token")
-    ).filter(F.col("token") != "")
-    h = F.md5(F.encode("token", "UTF-8"))
-    parts = tok.select(
-        "doc_id",
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("long").alias("hi"),
-        F.conv(F.substring(h, 9, 8), 16, 10).cast("long").alias("lo"),
+    schema = T.StructType(
+        [d.schema["doc_id"], T.StructField("simhash", T.LongType())]
     )
-
-    def _bit(i: int) -> F.Column:
-        src = F.col("lo") if i < 32 else F.col("hi")
-        return F.shiftright(src, i % 32).bitwiseAND(F.lit(1))
-
-    votes = parts.groupBy("doc_id").agg(
-        *[F.sum(_bit(i) * 2 - 1).alias(f"s{i}") for i in range(64)]
-    )
-    body = None
-    for i in range(63):
-        term = F.when(F.col(f"s{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        body = term if body is None else body + term
-    sign = F.when(
-        F.col("s63") > 0, F.lit(-(1 << 63))
-    ).otherwise(F.lit(0))
-    sig = votes.select("doc_id", (body + sign).alias("simhash"))
-    # docs with zero tokens vanish in the explode -> restore with simhash 0
-    return (
-        d.select("doc_id")
-        .join(sig, "doc_id", "left")
-        .select("doc_id", F.coalesce("simhash", F.lit(0)).alias("simhash"))
-    )
+    return d.select("doc_id", "text").mapInArrow(_simhash_batches, schema)
 
 
 def _sql_simhash() -> str:

@@ -1,4 +1,4 @@
-"""True 2-D spatial nearest-right join (SURVEY J2) and its fuzzy-key
+"""True 2-D spatial nearest-right search (SURVEY J2) and its fuzzy-key
 composition (J3∘J2) — the reference's signature geometric KV query.
 
 Reference parity (/root/reference/ai_documents/analysis/cv/
@@ -13,31 +13,39 @@ document_parsing.py):
     levenshtein <= distance_margin, first match wins — composed here as
     q_fuzzy_key_next_right.
 
-Word boxes are synthesized deterministically from the documents table with
-pure integer arithmetic (word position + word length), so Spark and the
-DuckDB oracle construct the identical geometry — no RNG, no external data.
+Word boxes are synthesized deterministically from each document's own
+words with pure integer arithmetic (word position + word length, the
+_SQL_BOXES layout), so Spark and the DuckDB oracle construct the
+identical geometry — no RNG, no external data.
 
-Scale shape: boxes are per-document; the key-box pick and the candidate
-argmin are min_by aggregates on (doc_id, key) that combine map-side, so
-each of the plan's two shuffles carries at most one row per (doc, key)
-per task, and the box side itself is never shuffled or broadcast. The
-key-box and candidate tables (<= docs x keys rows) are broadcast into
-the joins unconditionally, so they grow with the corpus. The in-kernel
-variant (operators/spatial.py) fuses the whole search into one
-applyInPandas pass per page — zero self-join — for pipelines that already
-group by document.
+Scale shape: a document's boxes and keys never leave its row, so each
+query is one mapInArrow stage over the pruned (doc_id, text) columns
+(_next_right_batches runs next_right_in_page per document): Scan ->
+MapInArrow, no exchange, no broadcast, one row per (document, key).
+Parity rules the stage keeps with both engines:
+  - `i` counts the empty edge words of the frozen split (_py_words), so
+    "\tfoo" puts foo at i = 1;
+  - distances are Spark's HALF_UP round(x, 6) (_round6), not np.round's
+    half-even; ties break on (dist, i);
+  - NULL or wordless text gives <NOT_FOUND> for every key.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Sequence
+from decimal import ROUND_HALF_UP, Decimal
+from functools import lru_cache, partial
+
+import numpy as np
+import pyarrow as pa
+from numpy.typing import ArrayLike
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .queries import _t
-from .queries_base import _SQL_WORDS, _norm_words
-from .session import local_frame
+from .queries_base import _SQL_WORDS, _py_words
 
-# layout constants (shared by both engines; see _word_boxes)
+# layout constants (shared by both engines; see _doc_boxes / _SQL_BOXES)
 WORDS_PER_LINE = 8
 COL_PITCH = 110
 LINE_PITCH = 40
@@ -55,24 +63,158 @@ KEYS_2D = ["spark", "window", "batch"]
 # genuinely exercised (get_box_corresponding_to_word breaks at first hit)
 KEYS_FUZZY = ["sparc", "windoe", "batsh", "sow"]
 
+_MICRO = Decimal("1e-6")
 
-def _word_boxes(d: DataFrame) -> DataFrame:
-    """documents -> (doc_id, i, word, x_min, x_max, y_min, y_max): one box
-    per word in reading order, line-wrapped layout with content-derived
-    jitter. Integer arithmetic only (engine-portable)."""
-    w = d.select(
-        "doc_id", F.posexplode(_norm_words()).alias("i", "word")
-    ).filter(F.col("word") != "")
-    i = F.col("i")
-    wl = F.length("word")
-    line = F.floor(i / WORDS_PER_LINE)
-    col = i % WORDS_PER_LINE
-    x_min = col * COL_PITCH + (wl * 13) % 37
-    y_min = line * LINE_PITCH + (wl * 7) % 15
-    return w.select(
-        "doc_id", i.alias("i"), "word",
-        x_min.alias("x_min"), (x_min + CHAR_W * wl).alias("x_max"),
-        y_min.alias("y_min"), (y_min + BOX_HEIGHT).alias("y_max"),
+
+@lru_cache(maxsize=1 << 16)
+def _levenshtein(a: str, b: str) -> int:
+    """Plain DP edit distance — matches Spark's levenshtein() and DuckDB's
+    levenshtein() (unit costs, no transposition). Cached: a corpus
+    repeats its vocabulary, and the fuzzy key search asks the same
+    (word, key) pairs document after document."""
+    if a == b:
+        return 0
+    if not a:
+        return len(b)
+    if not b:
+        return len(a)
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(
+                min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
+            )
+        prev = cur
+    return prev[-1]
+
+
+def _round6(x: float) -> float:
+    """Spark's round(x, 6) on a double: HALF_UP on its shortest decimal
+    form (java.math.BigDecimal.valueOf)."""
+    return float(Decimal(repr(x)).quantize(_MICRO, ROUND_HALF_UP))
+
+
+def _key_index(
+    low: list[str], key: str, fuzzy_margin: int | None
+) -> int | None:
+    """First word in reading order matching the key exactly, or by
+    levenshtein <= fuzzy_margin; None when no word matches."""
+    if fuzzy_margin is None:
+        return low.index(key) if key in low else None
+    for k, w in enumerate(low):
+        # the length difference bounds the edit distance from below, so
+        # it skips the DP for almost every word
+        if (abs(len(w) - len(key)) <= fuzzy_margin
+                and _levenshtein(w, key) <= fuzzy_margin):
+            return k
+    return None
+
+
+def next_right_in_page(
+    words: Sequence[str],
+    boxes: ArrayLike,
+    keys: Iterable[str],
+    fuzzy_margin: int | None = None,
+) -> list[tuple[str, float | None]]:
+    """One page in reading order — its words and their (x_min, x_max,
+    y_min, y_max) boxes, an (n, 4) array — -> one (next_word, dist) per
+    key, with the reference sentinels and dist None for them."""
+    low = [w.lower() for w in words]
+    x_min, x_max, y_min, y_max = (
+        np.asarray(boxes, dtype=np.float64).reshape(-1, 4).T
+    )
+    cx = (x_min + x_max) / 2
+    cy = (y_min + y_max) / 2
+    out = []
+    for key in keys:
+        k = _key_index(low, key, fuzzy_margin)
+        if k is None:
+            out.append(("<NOT_FOUND>", None))
+            continue
+        overlap = (
+            np.minimum(y_max[k], y_max) - np.maximum(y_min[k], y_min)
+            - MIN_OVERLAP
+        )
+        cand = np.flatnonzero((overlap > 0) & (x_min > x_min[k]))
+        raw = np.sqrt((cx[k] - cx[cand]) ** 2 + (cy[k] - cy[cand]) ** 2)
+        dist = [_round6(d) for d in raw.tolist()]
+        # argmin by (dist, i): candidates are in reading order
+        best = min(
+            ((d, j) for d, j in zip(dist, cand.tolist()) if d < MAX_DIST),
+            default=None,
+        )
+        out.append(
+            ("<EMPTY>", None) if best is None else (words[best[1]], best[0])
+        )
+    return out
+
+
+def _doc_boxes(text: str | None) -> tuple[list[str], np.ndarray]:
+    """One document's non-empty words and their _SQL_BOXES boxes, in
+    reading order: line-wrapped layout with content-derived jitter."""
+    split = [] if text is None else _py_words(text)
+    i = np.array([k for k, w in enumerate(split) if w], dtype=np.int64)
+    words = [split[k] for k in i.tolist()]
+    wl = np.array([len(w) for w in words], dtype=np.int64)
+    x_min = i % WORDS_PER_LINE * COL_PITCH + wl * 13 % 37
+    y_min = i // WORDS_PER_LINE * LINE_PITCH + wl * 7 % 15
+    return words, np.stack(
+        [x_min, x_min + CHAR_W * wl, y_min, y_min + BOX_HEIGHT], axis=1
+    )
+
+
+def _next_right_batches(batches, keys: list[str], fuzzy_margin: int | None):
+    """mapInArrow body of the J2 queries: (doc_id, text) record batches
+    -> (doc_id, key, next_word, dist) batches, one row per doc and key."""
+    for batch in batches:
+        found = [
+            hit
+            for text in batch.column(1).to_pylist()
+            for hit in next_right_in_page(
+                *_doc_boxes(text), keys, fuzzy_margin
+            )
+        ]
+        rows = np.repeat(np.arange(batch.num_rows), len(keys))
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column(0).take(pa.array(rows)),
+                pa.array(keys * batch.num_rows, pa.string()),
+                pa.array([w for w, _ in found], pa.string()),
+                pa.array([d for _, d in found], pa.float64()),
+            ],
+            names=["doc_id", "key", "next_word", "dist"],
+        )
+
+
+def _next_right(
+    d: DataFrame, keys: list[str], fuzzy_margin: int | None
+) -> DataFrame:
+    schema = T.StructType([
+        d.schema["doc_id"],
+        T.StructField("key", T.StringType()),
+        T.StructField("next_word", T.StringType()),
+        T.StructField("dist", T.DoubleType()),
+    ])
+    return d.select("doc_id", "text").mapInArrow(
+        partial(_next_right_batches, keys=keys, fuzzy_margin=fuzzy_margin),
+        schema,
+    )
+
+
+def q_next_right_word_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J2 proper: 2-D boxes, y-overlap gate, x-right gate, Euclidean
+    argmin under max_distance, reference sentinels."""
+    return _next_right(
+        _t(spark, sf_dir, "documents"), KEYS_2D, fuzzy_margin=None
+    )
+
+
+def q_fuzzy_key_next_right(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J3∘J2: key box located by levenshtein <= margin (first match in
+    reading order), then the same nearest-right search."""
+    return _next_right(
+        _t(spark, sf_dir, "documents"), KEYS_FUZZY, fuzzy_margin=FUZZY_MARGIN
     )
 
 
@@ -91,130 +233,6 @@ _SQL_BOXES = f"""
        unnest(range(1, len(words) + 1)) AS u(i)
   WHERE words[i] <> ''
 """
-
-
-def _next_right_relational(
-    d: DataFrame, keys: list[str], fuzzy_margin: int | None
-) -> DataFrame:
-    """Shared core: key located per (doc, key) as the first box in reading
-    order matching exactly (fuzzy_margin None) or by levenshtein <=
-    fuzzy_margin; then the nearest-right y-overlapping candidate.
-
-    Plan shape (PLANS.md): the key-box table kb (<= n_docs x n_keys
-    rows) is materialized ONCE with localCheckpoint — it feeds three
-    joins, and as lazy lineage each consumer re-ran the whole
-    scan->explode->aggregate subtree — and then BROADCAST into the
-    candidate join, so the full box side streams map-side instead of
-    being built into a corpus-sized broadcast relation. The sentinel
-    joins broadcast kb/cand too: the only exchanges are those of the
-    two (doc_id, key) aggregates."""
-    boxes = _word_boxes(d)
-    spark = d.sparkSession
-    keys_df = F.broadcast(
-        local_frame(spark, [(k,) for k in keys], "key string")
-    )
-    if fuzzy_margin is None:
-        # exact match needs no join at all: key = lower(word) when in
-        # the key set — one filter instead of a broadcast theta-join
-        kb0 = boxes.filter(F.lower(F.col("word")).isin(*keys)).withColumn(
-            "key", F.lower(F.col("word"))
-        )
-    else:
-        match = (
-            F.levenshtein(F.lower(F.col("word")), F.col("key"))
-            <= fuzzy_margin
-        )
-        kb0 = boxes.join(keys_df, match)
-    # first-in-reading-order per (doc, key) as a min_by aggregate (r6):
-    # `i` is unique per doc, so min_by(struct(boxes), i) is exactly the
-    # old row_number()=1 window, but it partial-aggregates map-side with
-    # no sort, so its shuffle carries <= one row per (doc, key) per task
-    kb = (
-        kb0
-        .groupBy("doc_id", "key")
-        .agg(
-            F.min_by(
-                F.struct(
-                    F.col("i").alias("ki"),
-                    F.col("x_min").alias("kx_min"),
-                    F.col("x_max").alias("kx_max"),
-                    F.col("y_min").alias("ky_min"),
-                    F.col("y_max").alias("ky_max"),
-                ),
-                F.col("i"),
-            ).alias("_kb")
-        )
-        .select("doc_id", "key", "_kb.ki", "_kb.kx_min", "_kb.kx_max",
-                "_kb.ky_min", "_kb.ky_max")
-        # <= one row per (doc, key): tiny, consumed by three joins below
-        .localCheckpoint(eager=True)
-    )
-    b = boxes.select(
-        F.col("doc_id").alias("b_doc"), F.col("i").alias("bi"),
-        F.col("word").alias("b_word"),
-        F.col("x_min").alias("bx_min"), F.col("x_max").alias("bx_max"),
-        F.col("y_min").alias("by_min"), F.col("y_max").alias("by_max"),
-    )
-    overlap = (
-        F.least("ky_max", "by_max") - F.greatest("ky_min", "by_min")
-        - MIN_OVERLAP
-    )
-    kcx = (F.col("kx_min") + F.col("kx_max")) / 2
-    kcy = (F.col("ky_min") + F.col("ky_max")) / 2
-    bcx = (F.col("bx_min") + F.col("bx_max")) / 2
-    bcy = (F.col("by_min") + F.col("by_max")) / 2
-    dist = F.round(
-        F.sqrt((kcx - bcx) * (kcx - bcx) + (kcy - bcy) * (kcy - bcy)), 6
-    )
-    # argmin by (dist, bi) per (doc, key): same min_by-over-struct form
-    # as kb — (dist, bi) is unique per candidate (bi is), so this is
-    # exactly the old row_number()=1 window without its two sorts
-    cand = (
-        b.join(F.broadcast(kb), F.col("b_doc") == F.col("doc_id"))
-        .filter((overlap > 0) & (F.col("bx_min") > F.col("kx_min")))
-        .withColumn("dist", dist)
-        .filter(F.col("dist") < MAX_DIST)
-        .groupBy("doc_id", "key")
-        .agg(
-            F.min_by(
-                F.struct(F.col("b_word"), F.col("dist")),
-                F.struct(F.col("dist"), F.col("bi")),
-            ).alias("_c")
-        )
-        .select("doc_id", "key", "_c.b_word", "_c.dist")
-    )
-    all_pairs = d.select("doc_id").crossJoin(keys_df)
-    return (
-        all_pairs
-        .join(
-            F.broadcast(kb.select("doc_id", "key", "ki")),
-            ["doc_id", "key"], "left",
-        )
-        .join(F.broadcast(cand), ["doc_id", "key"], "left")
-        .select(
-            "doc_id", "key",
-            F.when(F.col("ki").isNull(), F.lit("<NOT_FOUND>"))
-            .when(F.col("b_word").isNull(), F.lit("<EMPTY>"))
-            .otherwise(F.col("b_word")).alias("next_word"),
-            F.col("dist").alias("dist"),
-        )
-    )
-
-
-def q_next_right_word_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 proper: 2-D boxes, y-overlap gate, x-right gate, Euclidean
-    argmin under max_distance, reference sentinels."""
-    return _next_right_relational(
-        _t(spark, sf_dir, "documents"), KEYS_2D, fuzzy_margin=None
-    )
-
-
-def q_fuzzy_key_next_right(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3∘J2: key box located by levenshtein <= margin (first match in
-    reading order), then the same nearest-right search."""
-    return _next_right_relational(
-        _t(spark, sf_dir, "documents"), KEYS_FUZZY, fuzzy_margin=FUZZY_MARGIN
-    )
 
 
 def _sql_next_right(keys: list[str], fuzzy_margin: int | None) -> str:

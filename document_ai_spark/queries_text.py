@@ -153,7 +153,7 @@ GROUP BY doc_id
 # KV query, document_parsing.py:132-198, flattened to text order): for the
 # FIRST occurrence of each key per document, the word immediately after it
 # (regexp_extract returns the first match in both engines; the true 2-D
-# box form lives in operators/spatial.py / q_next_right_word_2d).
+# box form is queries_spatial.q_next_right_word_2d).
 # --------------------------------------------------------------------------
 
 _KV_KEYS = ["spark", "window", "batch"]

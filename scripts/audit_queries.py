@@ -30,8 +30,6 @@ from scripts.check_oracle import TABLES  # noqa: E402
 # semantics where each branch IS the operator
 SCAN_ALLOWLIST = {
     "region_revenue": 5,        # 5 different tables
-    "next_right_word_2d": 4,    # relational form; fused kernel is 1-scan
-    "fuzzy_key_next_right": 4,  # same
     "ann_lsh_recall": 6,        # brute reused twice (hit-join + k count)
                                 # + 2 bucket sides; sample-scale eval query
     "ann_ivf_topk": 4,          # index build (centroids) composed with the

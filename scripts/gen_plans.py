@@ -133,36 +133,25 @@ carry 8 short band rows per doc, never shingle text; a hot boilerplate
 bucket emits its k^2 pairs either way (capped upstream by banding
 parameters), so the rewrite strictly removes work.
 """,
-        "## next_right_word_2d — 2-D spatial nearest join (J2)\n",
+        "## next_right_word_2d — 2-D spatial nearest-right search (J2)\n",
         "```\n" + plan(SP.q_next_right_word_2d(spark, sf)) + "\n```\n",
-        """**Scale notes.** r6 shape: the scan feeds the box explode
-directly; the key-box table kb (<= n_docs x n_keys rows — for exact keys
-an `isin` filter, no join at all) is materialized once with
-localCheckpoint and BROADCAST into the candidate join, so the full box
-side streams map-side — the r5 plan instead built every box of every
-document into a broadcast relation and re-ran the explode three times
-(59-node plan, two SortMergeJoins; now broadcast-only joins — see
-plans/r06/next_right_word_2d_*.txt). The first-in-reading-order pick
-and the distance argmin are min_by aggregates over struct comparators
-(unique orderings, so identical to the old row_number()=1 windows),
-each one partial+final SortAggregate whose (doc_id, key) shuffle
-carries at most one row per (doc, key) per task — less machinery than
-the windows' double sort + WindowGroupLimit (measured 2.0 -> 1.2 s
-warm). The box side is never shuffled or broadcast; kb and the
-candidates hold up to docs x keys rows and are broadcast
-unconditionally, so at 100 TB they grow with the corpus. The fused
-in-kernel variant (operators/spatial.py) removes even the kb join for
-pipelines already grouped per page.
+        """**Scale notes.** A document's boxes and its keys never leave its
+row, so the search is one mapInArrow stage over the pruned (doc_id,
+text) columns: per document, the frozen word split, the integer box
+layout, the first key box in reading order and the (dist, i) argmin of
+the y-overlapping boxes to its right. No exchange, no broadcast and no
+checkpoint, so nothing in the plan grows with the corpus but the scan
+(pinned by tests/test_doc_stages.py). `fuzzy_key_next_right` is the same
+stage with a levenshtein key match, gated on word length before the DP.
 """,
-        "## simhash — columnar bit-vote aggregation\n",
+        "## simhash — per-document bit votes\n",
         "```\n" + plan(M.q_simhash(spark, sf),
                        keep=["ReadSchema"]) + "\n```\n",
-        """**Scale notes.** Tokens explode JVM-side off the scan (no
-Python); r6 reads the 64 hash bits from TWO conv()s of the md5
-hex halves (hi = bits 63..32, lo = 31..0) instead of 16 per-nibble
-conv(substring) string ops — value-identical, pinned by the per-token
-spec test. The 64 bit-votes are one partial+final HashAggregate pass on
-doc_id — the shuffle carries 64 longs per document, not per token.
+        """**Scale notes.** One mapInArrow stage over (doc_id, text): per
+document, md5 per token, the first 8 digest bytes unpacked into 64 bit
+votes, and the sign bits packed back into a signed BIGINT. Every
+document row emits its own simhash (0 for no tokens), so there is no
+aggregate, no shuffle and no rejoin.
 """,
         "## curation_funnel — single-scan multi-rule curation\n",
         "```\n" + plan(M.q_curation_funnel(spark, sf),

@@ -55,10 +55,10 @@ def test_warm_session_is_nonfatal_on_broken_session(spark):
 
 @pytest.mark.parametrize("query", ["simhash", "next_right_word_2d"])
 def test_rewritten_queries_still_match_duckdb(spark, query):
-    """Belt-and-braces on the two restructured headline queries: the
-    round-6 rewrites (two-conv simhash bit read, broadcast key-box
-    next-right) must stay value-identical to their DuckDB oracles at
-    sf0.001 (the full gate runs at sf0.01 via scripts/check_oracle)."""
+    """Belt-and-braces on the two restructured headline queries: their
+    per-document Arrow stages (SimHash bit votes, the 2-D next-right
+    search) must stay value-identical to their DuckDB oracles at sf0.001
+    (the full gate runs at sf0.01 via scripts/check_oracle)."""
     import duckdb
 
     import __spark_entry__ as entrymod

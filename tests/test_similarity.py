@@ -176,8 +176,9 @@ def test_embedding_near_dups_non_vacuous(spark):
 
 
 def test_simhash_columnar_matches_per_token_spec(spark):
-    """The columnar SimHash (explode + nibble votes) must equal the direct
-    per-token md5 spec on the driver fixture corpus."""
+    """The SimHash Arrow stage (md5 bytes -> unpackbits votes -> packed
+    sign bits) must equal the direct per-token md5 spec on the driver
+    fixture corpus."""
     import hashlib
 
     import duckdb
@@ -235,10 +236,10 @@ def _rdd_lineage(df) -> str:
 
 
 def test_driver_built_frames_have_no_python_rdd(spark):
-    """Frames built on the driver (union-find labels, the next_right key
-    list, the funnel's cluster labels) reach the JVM as Arrow-built
-    local relations: a plain PythonRDD would start a second Python
-    daemon and worker pool beside the SQL one."""
+    """Frames built on the driver (union-find labels, the funnel's
+    cluster labels) reach the JVM as Arrow-built local relations: a
+    plain PythonRDD would start a second Python daemon and worker pool
+    beside the SQL one."""
     import __spark_entry__ as entrymod
 
     frames = {
@@ -251,9 +252,9 @@ def test_driver_built_frames_have_no_python_rdd(spark):
             ([], "src bigint, dst bigint"),
         )
     }
-    qs = entrymod.queries()
-    for q in ("next_right_word_2d", "curation_funnel"):
-        frames[q] = qs[q](spark, SF)
+    frames["curation_funnel"] = entrymod.queries()["curation_funnel"](
+        spark, SF
+    )
     with_rdd = [k for k, df in frames.items()
                 if "PythonRDD" in _rdd_lineage(df)]
     assert with_rdd == []

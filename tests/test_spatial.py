@@ -1,71 +1,72 @@
-"""2-D nearest-right word search: hand-checked geometry, reference
-sentinel behavior, and in-kernel == relational equivalence."""
+"""2-D nearest-right word search: hand-checked geometry and reference
+sentinel behavior of the per-page search."""
 
 from __future__ import annotations
 
-import pandas as pd
-
-from document_ai_spark.operators.spatial import (
+from document_ai_spark.queries_spatial import (
     _levenshtein,
     next_right_in_page,
-    next_right_word_kernel,
 )
-from document_ai_spark.queries_spatial import (
-    KEYS_2D,
-    KEYS_FUZZY,
-    _word_boxes,
-    q_fuzzy_key_next_right,
-    q_next_right_word_2d,
-)
-
-SF = "/root/testdata/sf0.001"
 
 
 def _page(rows):
-    return pd.DataFrame(
-        rows,
-        columns=["doc_id", "i", "word", "x_min", "x_max", "y_min", "y_max"],
-    )
+    """(doc_id, i, word, x_min, x_max, y_min, y_max) rows in reading
+    order -> the (words, boxes) arguments of next_right_in_page."""
+    return [r[2] for r in rows], [r[3:] for r in rows]
+
+
+def _next_words(rows, keys, fuzzy_margin=None):
+    return [w for w, _ in next_right_in_page(*_page(rows), keys,
+                                             fuzzy_margin)]
 
 
 def test_next_right_hand_checked():
     # key at x 10-20; right neighbor at 25-35 same line; a distractor on
     # another line (no y overlap) and a nearer-but-left box
-    page = _page([
+    page = [
         (1, 0, "hello", 10, 20, 10, 34),
         (1, 1, "world", 25, 35, 12, 36),   # overlap 22 > 10 -> candidate
         (1, 2, "below", 25, 35, 60, 84),   # no y overlap
         (1, 3, "left", 0, 8, 10, 34),      # x_min not > key x_min
-    ])
-    res = next_right_in_page(page, ["hello"])
-    assert res.iloc[0].next_word == "world"
+    ]
+    assert next_right_in_page(*_page(page), ["hello"]) == [
+        ("world", 15.132746)  # round(sqrt(15**2 + 2**2), 6)
+    ]
     # overlap of exactly min_overlap must NOT qualify (strict >)
-    page2 = _page([
+    page2 = [
         (1, 0, "hello", 10, 20, 0, 24),
         (1, 1, "edge", 25, 35, 14, 48),    # overlap = 10 exactly
-    ])
-    assert next_right_in_page(page2, ["hello"]).iloc[0].next_word == "<EMPTY>"
+    ]
+    assert _next_words(page2, ["hello"]) == ["<EMPTY>"]
     # beyond max_distance -> <EMPTY>; absent key -> <NOT_FOUND>
-    page3 = _page([
+    page3 = [
         (1, 0, "hello", 0, 10, 0, 24),
         (1, 1, "far", 400, 410, 0, 24),
-    ])
-    r3 = next_right_in_page(page3, ["hello", "absent"])
-    assert list(r3.next_word) == ["<EMPTY>", "<NOT_FOUND>"]
+    ]
+    assert _next_words(page3, ["hello", "absent"]) == [
+        "<EMPTY>", "<NOT_FOUND>"
+    ]
+    # two candidates at the same distance 20 (dx 20 / dx 12, dy 16): the
+    # first in reading order wins, whichever box that is
+    key = (1, 0, "hello", 40, 60, 0, 40)
+    straight = (1, 1, "straight", 60, 80, 0, 40)
+    slanted = (1, 2, "slanted", 52, 72, 16, 56)
+    assert next_right_in_page(*_page([key, straight, slanted]),
+                              ["hello"]) == [("straight", 20.0)]
+    assert _next_words([key, slanted, straight], ["hello"]) == ["slanted"]
 
 
 def test_fuzzy_first_match_wins():
     # "sow" matches both "slow" (i=0) and "row" (i=5) at distance 1; the
     # key box must be the FIRST in reading order even if the later match
     # would yield a nearer candidate
-    page = _page([
+    page = [
         (1, 0, "slow", 0, 36, 0, 24),
         (1, 1, "next", 110, 146, 0, 24),
         (1, 5, "row", 550, 577, 0, 24),
         (1, 6, "wrong", 660, 705, 0, 24),
-    ])
-    res = next_right_in_page(page, ["sow"], fuzzy_margin=1)
-    assert res.iloc[0].next_word == "next"
+    ]
+    assert _next_words(page, ["sow"], fuzzy_margin=1) == ["next"]
 
 
 def test_levenshtein_matches_engines(spark):
@@ -79,32 +80,3 @@ def test_levenshtein_matches_engines(spark):
     )
     got = [r.d for r in df.collect()]
     assert got == [_levenshtein(a, b) for a, b in cases]
-
-
-def test_kernel_equals_relational(spark):
-    """The fused applyInPandas kernel and the relational self-join form
-    must agree row-for-row on the driver corpus, exact and fuzzy."""
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    boxes = _word_boxes(docs)
-
-    def snap(df):
-        return sorted(
-            (r.doc_id, r.key, r.next_word,
-             None if r.dist is None else round(r.dist, 6))
-            for r in df.collect()
-        )
-
-    rel = snap(q_next_right_word_2d(spark, SF))
-    ker = snap(next_right_word_kernel(boxes, KEYS_2D))
-    # the kernel emits no row for docs with zero boxes; relational emits
-    # <NOT_FOUND> for them — compare on the kernel's support
-    ker_docs = {(d, k) for d, k, _, _ in ker}
-    assert [r for r in rel if (r[0], r[1]) in ker_docs] == ker
-
-    relf = snap(q_fuzzy_key_next_right(spark, SF))
-    kerf = snap(next_right_word_kernel(boxes, KEYS_FUZZY, fuzzy_margin=1))
-    kerf_docs = {(d, k) for d, k, _, _ in kerf}
-    assert [r for r in relf if (r[0], r[1]) in kerf_docs] == kerf
-    # and the fuzzy run is non-degenerate: real words found
-    found = [r for r in relf if r[2] not in ("<NOT_FOUND>", "<EMPTY>")]
-    assert len(found) > 0

@@ -8,9 +8,11 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from document_ai_spark.queries_ml import _simhash_batches
 from document_ai_spark.queries_text import (
     _KGRAM,
     _RK_BASE,
@@ -18,7 +20,7 @@ from document_ai_spark.queries_text import (
     _WINDOW,
     _winnow_np,
 )
-from document_ai_spark.operators.spatial import next_right_in_page
+from document_ai_spark.queries_spatial import next_right_in_page
 
 _texts = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",)), max_size=400
@@ -67,7 +69,8 @@ def _simhash_spec(text: str) -> int:
 
 
 def _simhash_nibble_form(text: str) -> int:
-    """The columnar plan's math, transcribed: md5 hex nibbles + bit votes."""
+    """The DuckDB oracle's math, transcribed: md5 hex nibbles + bit
+    votes."""
     acc = [0] * 64
     for tok in text.split():
         if not tok:
@@ -86,6 +89,11 @@ def test_simhash_nibble_math_equals_spec(s):
     # whitespace-normalized first: the engines split on \s+ after trim
     s = " ".join(s.split())
     assert _simhash_nibble_form(s) == _simhash_spec(s)
+    # and the Spark side's Arrow stage (digest bytes, unpackbits votes)
+    [out] = _simhash_batches([
+        pa.record_batch([pa.array([1]), pa.array([s])], ["doc_id", "text"])
+    ])
+    assert out.column(1).to_pylist() == [_simhash_spec(s)]
 
 
 _boxes = st.lists(
@@ -131,17 +139,9 @@ def _next_right_spec(boxes, key, min_overlap=10, max_dist=200.0):
 @settings(max_examples=300, deadline=None)
 @given(_boxes)
 def test_spatial_kernel_equals_reference_loop(raw):
-    import pandas as pd
-
-    rows = [
-        (1, i, w, x, x + wd, y, y + h)
-        for i, (x, wd, y, h, w) in enumerate(raw)
-    ]
-    page = pd.DataFrame(
-        rows,
-        columns=["doc_id", "i", "word", "x_min", "x_max", "y_min", "y_max"],
-    )
-    got = next_right_in_page(page, ["key"]).iloc[0].next_word
+    words = [w for *_, w in raw]
+    boxes = [(x, x + wd, y, y + h) for x, wd, y, h, _ in raw]
+    [(got, _)] = next_right_in_page(words, boxes, ["key"])
     expected = _next_right_spec(
         [(x, x + wd, y, y + h, w) for (x, wd, y, h, w) in raw], "key"
     )
