@@ -265,69 +265,25 @@ def cmd_hosts(args) -> int:
 
 
 def cmd_curate(args) -> int:
-    """Training-data curation over an extracted table: exact-dedup keeper
-    AND quality gate AND Gopher rule pack over main_text -> kept docs
-    written out, per-stage funnel counts printed."""
-    from pyspark.sql import functions as F
-
+    """Training-data curation over an extracted table: recrawl collapse,
+    the selected keep rules over main_text -> kept docs written out,
+    per-stage funnel counts printed."""
     from document_ai_spark.operators.curate import (
-        adaptive_collapse,
-        clf_flags,
-        curation_flags,
+        curate_table,
         funnel_counts,
-        kept_filter,
-        lm_flags,
-        neardup_keeper_flags,
     )
 
     spark = _spark(args)
-    # adaptive recrawl collapse (the curation-entry-point invariant):
-    # url-unique inputs skip the window; inputs with recrawls pay it
-    # ONCE via localCheckpoint — left lazy it re-runs per flag consumer
-    extracted, _collapse_mode = adaptive_collapse(spark, args.extracted)
     rules = tuple(r.strip() for r in args.rules.split(",") if r.strip())
-    # the rep flag (Gopher duplicate line/paragraph caps, r5) is a pure
-    # column expression — ride the same single scan, never a join
-    flags = curation_flags(
-        extracted, id_col="url", text_col="main_text", lang_col=None,
-        include_rep="rep" in rules,
-    )
-    if "neardup" in rules:
-        # fuzzy-dedup stage: MinHash/LSH cluster keepers (r3)
-        flags = flags.join(
-            neardup_keeper_flags(
-                extracted, id_col="url", text_col="main_text"
-            ),
-            "url",
-        )
-    if "lm" in rules:
-        # CCNet-style LM bucket stage (r4): drop the worst-surprisal tail
-        flags = flags.join(
-            lm_flags(extracted, id_col="url", text_col="main_text"),
-            "url",
-        )
-    if "clf" in rules:
-        # learned-classifier stage (r5), bootstrapped from the heuristic
-        # flags ALREADY computed — no second curation_flags pass
-        labels = flags.select(
-            "url",
-            (F.col("pass_quality") & F.col("pass_gopher")).alias("label"),
-        )
-        flags = flags.join(
-            clf_flags(extracted, id_col="url", text_col="main_text",
-                      labels=labels),
-            "url",
-        )
-    kept = kept_filter(flags, rules).select("url", "n_tokens")
-    kept_docs = extracted.join(kept.select("url"), "url", "left_semi")
-    kept_docs.write.mode("overwrite").parquet(args.output)
+    # no workdir here: a recrawled input's collapse is checkpointed
+    stats, flags = curate_table(spark, args.extracted, args.output, rules)
     # funnel restricted to the SELECTED rules so its `kept` agrees with
-    # what kept_filter wrote (curation_flags always emits quality/
-    # gopher columns, selected or not)
+    # what was written (the flag frame always carries quality/gopher
+    # columns, selected or not)
     row = funnel_counts(flags, rules).collect()[0]
     out = {
         "rules": list(rules),
-        "written": spark.read.parquet(args.output).count(),
+        "written": stats["docs_kept"],
         **row.asDict(),
         "out_dir": args.output,
     }

@@ -40,7 +40,6 @@ CASE_LINKFARM = "linkfarm"
 CASE_GIANT = "giant"
 CASE_MALFORMED = "malformed"
 CASE_PDF = "pdf"
-CASE_PDF_GARBAGE = "pdf_garbage"
 CASE_EMPTY = "empty"
 
 # slot layout for i % 20: 12 clean / 2 linkfarm / 1 giant / 2 malformed /

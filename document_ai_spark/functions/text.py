@@ -20,9 +20,3 @@ def nfd_strip_accents(s: pd.Series) -> pd.Series:
     """Unicode NFD decomposition, then drop combining marks:
     'Kilométrage' -> 'Kilometrage' (utils.py:5 semantics)."""
     return s.str.normalize("NFD").str.replace(_COMBINING, "", regex=True)
-
-
-@F.pandas_udf(T.StringType())
-def nfc_normalize(s: pd.Series) -> pd.Series:
-    """Canonical composition — the frozen normal form for stored text."""
-    return s.str.normalize("NFC")

@@ -25,22 +25,20 @@ import shutil
 
 from pyspark.sql import SparkSession
 
+from ..sources.io import parquet_data_files
+
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 LINEAGE_SUBDIR = "_lineage"
 
 
 def table_file_stats(table_dir: str) -> dict:
-    """(n_files, total_bytes) of the data files under a parquet table dir."""
-    n = 0
-    total = 0
-    for root, _dirs, files in os.walk(table_dir):
-        if LINEAGE_SUBDIR in root:
-            continue
-        for f in files:
-            if f.endswith(".parquet"):
-                n += 1
-                total += os.path.getsize(os.path.join(root, f))
-    return {"n_files": n, "bytes": total}
+    """(n_files, total_bytes) of the data files under a parquet table dir
+    (the files the Spark reader reads: `_lineage` is not among them)."""
+    files = parquet_data_files(table_dir)
+    return {
+        "n_files": len(files),
+        "bytes": sum(os.path.getsize(f) for f in files),
+    }
 
 
 def compact_table(

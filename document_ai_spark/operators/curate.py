@@ -1,15 +1,20 @@
 """Corpus curation over any (id, text[, lang]) frame: the dedup / quality /
-Gopher / language flags as one single-scan plan, reusable against the
-driver's documents table (queries_ml.q_training_mix, oracle-checked) and
-against a freshly extracted table (the `curate` CLI) — extract -> curate is
-the end-to-end training-data story.
+Gopher / language flags as one single-scan plan, plus the near-dup, LM and
+classifier stages joined by id. `rule_flags` is the one rule stack; it
+backs the registry's funnel over the driver's documents table
+(queries_ml.q_training_mix / q_curation_funnel, oracle-checked), and
+`curate_table` wraps it for a freshly extracted table (the `curate` and
+`pipeline` verbs) — extract -> curate is the end-to-end training-data
+story.
 
-Scale shape: every flag is a column expression over ONE scan; the only
-shuffle is the window for the exact-dedup keeper (hash-partition on
-md5(text), uniform key).
+Scale shape: every column flag is an expression over ONE scan; the only
+shuffle among them is the window for the exact-dedup keeper
+(hash-partition on md5(text), uniform key).
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -24,6 +29,7 @@ from ..queries_base import (
     pred_lang,
     quality_ok,
 )
+from ..sources.io import parquet_rows
 
 
 def curation_flags(
@@ -107,7 +113,7 @@ def collapse_recrawls(
     """Keep ONE row per id (latest ts): re-crawled urls otherwise sail
     through the id-keyed exact-dedup flag (same id = same keeper) and
     every flag join multiplies — 2 crawl rows x neardup x lm = 8 flag
-    rows per url. Every curation entry point runs this first.
+    rows per url. curate_table runs this first (via adaptive_collapse).
 
     Equal timestamps (WARC-Date is second-granular) break ties on the
     content columns in `tiebreak_cols` (those present in df), so the
@@ -154,12 +160,8 @@ def adaptive_collapse(
     The uniqueness probe is a countDistinct over the id column only
     (column-pruned scan); the row count comes from parquet footers
     (driver-side metadata, no job)."""
-    import os
-
-    from ..pipeline import _parquet_rows
-
     raw = spark.read.parquet(extracted_path)
-    n_rows = _parquet_rows(extracted_path)
+    n_rows = parquet_rows(extracted_path)
     n_ids = raw.select(id_col).distinct().count()
     if n_ids == n_rows:
         return raw, "identity"
@@ -197,17 +199,16 @@ def lm_flags(
 
 def clf_flags(
     df: DataFrame,
+    labels: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    labels: DataFrame | None = None,
     keep_threshold: float = 0.5,
     seed: int = 42,
 ) -> DataFrame:
     """Learned-classifier stage (r5): (id, pass_clf) from the
-    reference-vs-crawl LR in operators/quality_clf. Training labels:
-    `labels` (id, label BOOLEAN) when the caller has a reference
-    corpus; otherwise BOOTSTRAPPED from the frozen heuristic rule
-    packs (label = pass_quality AND pass_gopher) — the
+    reference-vs-crawl LR in operators/quality_clf, trained on `labels`
+    (id, label BOOLEAN). rule_flags bootstraps them from the frozen
+    heuristic rule packs (label = pass_quality AND pass_gopher) — the
     GPT-3/fastText-style trick of training the learned filter against
     a trusted signal, which then generalizes past the hard
     thresholds. The fit runs on a bounded deterministic sample
@@ -216,17 +217,11 @@ def clf_flags(
     and pass every row — no signal is no filter."""
     from .quality_clf import score_quality, train_quality_classifier
 
-    if labels is None:
-        cf = curation_flags(df, id_col, text_col, lang_col=None)
-        labels = cf.select(
-            F.col(id_col),
-            (F.col("pass_quality") & F.col("pass_gopher")).alias("label"),
-        )
     # the label lineage is consumed by several actions (two emptiness
-    # probes + the bounded fit sample) and callers stack heavy plans
-    # under it (the curate verbs bootstrap labels from the already-
-    # joined flag frame, whose lineage includes the LSH pipeline):
-    # checkpoint the two tiny columns so that plan runs exactly once
+    # probes + the bounded fit sample) and rule_flags stacks a heavy
+    # plan under it (labels come from the already-joined flag frame,
+    # whose lineage includes the LSH pipeline): checkpoint the two tiny
+    # columns so that plan runs exactly once
     labels = labels.select(F.col(id_col), "label").localCheckpoint()
     lab = df.select(F.col(id_col), F.col(text_col)).join(labels, id_col)
     pos = lab.filter(F.col("label")).select(text_col)
@@ -263,26 +258,20 @@ def kept_filter(
     return flags.filter(cond)
 
 
-def funnel_counts(
-    flags: DataFrame, rules: tuple[str, ...] | None = None
-) -> DataFrame:
+def funnel_counts(flags: DataFrame, rules: tuple[str, ...]) -> DataFrame:
     """One aggregation row: survivors at each stage + kept token total.
     Stage order: exact dedup -> near-dup cluster keeper -> quality ->
     gopher -> language -> LM bucket -> learned classifier. A stage
-    appears only when its flag column is present AND (when `rules` is
-    given) its rule is selected — curation_flags always emits
-    quality/gopher, so a `curate --rules dedup,clf` run would otherwise
-    print a funnel whose `kept` disagrees with what kept_filter wrote.
-    Default rules=None counts every present flag (the oracle-checked
-    curation_funnel shape). The LM and classifier stages additionally
-    report the count ENTERING them (`into_lm`/`into_clf`) — named for
-    the stage they feed, not for whichever optional stage happens to
-    precede them (a funnel with clf but no lm would otherwise print a
-    phantom LM rung)."""
+    appears only when its flag column is present AND its rule is
+    selected — curation_flags always emits quality/gopher, so a
+    `curate --rules dedup,clf` run would otherwise print a funnel whose
+    `kept` disagrees with what kept_filter wrote. The LM and classifier
+    stages additionally report the count ENTERING them
+    (`into_lm`/`into_clf`) — named for the stage they feed, not for
+    whichever optional stage happens to precede them (a funnel with clf
+    but no lm would otherwise print a phantom LM rung)."""
     def on(rule: str) -> bool:
-        return (f"pass_{rule}" in flags.columns) and (
-            rules is None or rule in rules
-        )
+        return f"pass_{rule}" in flags.columns and rule in rules
 
     cum = F.lit(True)
     aggs = [F.count(F.lit(1)).alias("total_docs")]
@@ -312,3 +301,73 @@ def funnel_counts(
         F.sum(F.when(cum, F.col("n_tokens"))).alias("kept_tokens"),
     ]
     return flags.agg(*aggs)
+
+
+def rule_flags(
+    df: DataFrame,
+    rules: tuple[str, ...],
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    lang_col: str | None = "lang",
+) -> DataFrame:
+    """The one rule stack: curation_flags (with the rep flag in the same
+    scan when selected), then the selected neardup / lm / clf stages
+    joined by id. The classifier's labels are bootstrapped from the
+    heuristic flags already computed — no second curation_flags pass.
+    Callers keep rows with kept_filter(flags, rules) and count them with
+    funnel_counts(flags, rules)."""
+    flags = curation_flags(
+        df, id_col, text_col, lang_col=lang_col,
+        include_rep="rep" in rules,
+    )
+    if "neardup" in rules:
+        flags = flags.join(neardup_keeper_flags(df, id_col, text_col), id_col)
+    if "lm" in rules:
+        flags = flags.join(lm_flags(df, id_col, text_col), id_col)
+    if "clf" in rules:
+        labels = flags.select(
+            F.col(id_col),
+            (F.col("pass_quality") & F.col("pass_gopher")).alias("label"),
+        )
+        flags = flags.join(
+            clf_flags(df, labels, id_col, text_col), id_col
+        )
+    return flags
+
+
+def curate_table(
+    spark,
+    extracted_path: str,
+    out_dir: str,
+    rules: tuple[str, ...],
+    collapse_dir: str | None = None,
+) -> tuple[dict, DataFrame]:
+    """The curate stage over an extracted (url, warc_ts, main_text, ...)
+    table, shared by the `curate` and `pipeline` verbs: recrawl collapse
+    (adaptive_collapse; `collapse_dir` is where a recrawled input is
+    materialized, None checkpoints it instead), rule_flags, kept_filter,
+    then a left-semi write of the kept rows to `out_dir`.
+
+    Returns (summary, flags). The summary counts come from parquet
+    footers: docs_in is the extracted table's row count (recrawls
+    included), docs_kept the written table's. `flags` is the rule-flag
+    frame, for funnel_counts(flags, rules)."""
+    docs_in = parquet_rows(extracted_path)
+    # duplicate url rows would sail through the url-keyed exact-dedup
+    # flag and multiply through every flag join, so the collapse runs
+    # first; it is a lazy window re-run per consumer unless paid once
+    extracted, mode = adaptive_collapse(spark, extracted_path, collapse_dir)
+    flags = rule_flags(
+        extracted, rules, id_col="url", text_col="main_text", lang_col=None
+    )
+    kept = kept_filter(flags, rules).select("url")
+    extracted.join(kept, "url", "left_semi").write.mode(
+        "overwrite"
+    ).parquet(out_dir)
+    summary = {
+        "rules": list(rules),
+        "collapse": mode,
+        "docs_in": docs_in,
+        "docs_kept": parquet_rows(out_dir),
+    }
+    return summary, flags

@@ -25,15 +25,6 @@ from pyspark.sql import types as T
 
 PRESCAN_BYTES = 8192
 
-PAGE_FLAGS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("noindex", T.BooleanType()),
-        T.StructField("nofollow", T.BooleanType()),
-        T.StructField("canonical_url", T.StringType()),
-    ]
-)
-
 _META_RE = re.compile(r"<meta\b[^>]*>", re.IGNORECASE | re.DOTALL)
 _LINK_RE = re.compile(r"<link\b[^>]*>", re.IGNORECASE | re.DOTALL)
 _ATTR_RE = re.compile(

@@ -36,48 +36,6 @@ def _committed(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
-def _parquet_rows(path: str) -> int:
-    """Exact row count of a parquet dir/file/glob from file FOOTERS —
-    a driver-side metadata read, no Spark job (r4 verdict item: the
-    summary counts were extra actions re-scanning stage outputs and,
-    for the curate stage, re-running the collapse window).
-
-    Must mirror the Spark reader's path semantics: '_'/'.'-prefixed
-    entries are metadata, not data — the extract stage keeps its
-    lineage bookkeeping parquet under `extracted/_lineage/`, so a
-    naive walk would count one phantom row per shard per commit
-    (compact.table_file_stats makes the same skip)."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    def _walk(d: str) -> list[str]:
-        out = []
-        for root, dirs, names in os.walk(d):
-            dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-            out += [
-                os.path.join(root, f)
-                for f in names
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            ]
-        return out
-
-    if os.path.isfile(path):
-        files = [path]
-    elif os.path.isdir(path):
-        files = _walk(path)
-    else:  # glob pattern (spark.read.parquet accepts those too);
-        # a glob may match DIRECTORIES (e.g. 'extracted/shard_id=*'),
-        # which the Spark reader descends into — mirror that
-        files = []
-        for p in _glob.glob(path):
-            if os.path.isdir(p):
-                files += _walk(p)
-            elif p.endswith(".parquet") and os.path.isfile(p):
-                files.append(p)
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
-
 def _sub(workdir: str, name: str) -> str:
     return os.path.join(workdir, name)
 
@@ -122,9 +80,10 @@ def run_pipeline(
     `pack_words`, packing — in subword tokens instead of whitespace
     words (overlap must be 0)."""
     from .operators.chunking import chunk_documents
-    from .operators.curate import curation_flags, kept_filter
+    from .operators.curate import curate_table
     from .operators.lineage import run_extraction_job
     from .operators.pageflags import indexable_pages
+    from .sources.io import parquet_rows
     from .sources.jsonl import write_jsonl
 
     if chunk_unit == "subwords" and chunk_overlap != 0:
@@ -231,8 +190,8 @@ def run_pipeline(
             # counts from footers: no re-scan of the (raw html) input
             summary["stages"]["gate"] = {
                 "skipped": False,
-                "pages_in": _parquet_rows(pages_path),
-                "pages_kept": _parquet_rows(gate_dir),
+                "pages_in": parquet_rows(pages_path),
+                "pages_kept": parquet_rows(gate_dir),
             }
             _timed("gate", t0)
         gated_path = gate_dir
@@ -272,79 +231,20 @@ def run_pipeline(
             summary["stages"]["compact"] = {"skipped": False, **stats}
             _timed("compact", t0)
 
-    # ---- 4. curate: funnel flags -> kept docs ----
+    # ---- 4. curate: recrawl collapse -> rule flags -> kept docs ----
     curated_dir = _sub(workdir, "curated")
     if _committed(curated_dir):
         summary["stages"]["curate"] = {"skipped": True}
     else:
         t0 = time.time()
-        from .operators.curate import adaptive_collapse
-
-        # re-crawled urls (a WARC can carry the same url twice) collapse
-        # to the NEWEST crawl row before curation — duplicate url rows
-        # would otherwise sail through the url-keyed exact-dedup flag and
-        # double every downstream chunk via the chunk<->warc_ts join.
-        # adaptive_collapse skips the window for url-unique inputs and
-        # materializes it ONCE (workdir/collapsed) otherwise — see its
-        # docstring for the measured per-consumer recompute cost.
-        docs_in = _parquet_rows(extracted_dir)
-        extracted, collapse_mode = adaptive_collapse(
-            spark, extracted_dir, _sub(workdir, "collapsed")
+        # recrawl collapse (materialized once to workdir/collapsed when
+        # the input has recrawls), the selected rules, the kept-row
+        # write; counts from parquet footers (operators/curate)
+        stats, _flags = curate_table(
+            spark, extracted_dir, curated_dir, rules,
+            collapse_dir=_sub(workdir, "collapsed"),
         )
-        # the rep flag (Gopher duplicate line/paragraph caps, r5) is a
-        # pure column expression — ride the same single scan, never a
-        # second main_text scan + url join
-        flags = curation_flags(
-            extracted, id_col="url", text_col="main_text", lang_col=None,
-            include_rep="rep" in rules,
-        )
-        if "neardup" in rules:
-            from .operators.curate import neardup_keeper_flags
-
-            flags = flags.join(
-                neardup_keeper_flags(
-                    extracted, id_col="url", text_col="main_text"
-                ),
-                "url",
-            )
-        if "lm" in rules:
-            from .operators.curate import lm_flags
-
-            flags = flags.join(
-                lm_flags(extracted, id_col="url", text_col="main_text"),
-                "url",
-            )
-        if "clf" in rules:
-            from pyspark.sql import functions as F
-
-            from .operators.curate import clf_flags
-
-            # learned-classifier stage bootstrapped from the heuristic
-            # flags already computed above — no second flags pass
-            labels = flags.select(
-                "url",
-                (F.col("pass_quality")
-                 & F.col("pass_gopher")).alias("label"),
-            )
-            flags = flags.join(
-                clf_flags(extracted, id_col="url",
-                          text_col="main_text", labels=labels),
-                "url",
-            )
-        kept = kept_filter(flags, rules).select("url")
-        extracted.join(kept, "url", "left_semi").write.mode(
-            "overwrite"
-        ).parquet(curated_dir)
-        # docs_in is the extracted TABLE's row count (footers — the old
-        # extracted.count() re-ran the collapse window just for the
-        # summary); docs_kept reads the freshly-written footers
-        summary["stages"]["curate"] = {
-            "skipped": False,
-            "rules": list(rules),
-            "collapse": collapse_mode,
-            "docs_in": docs_in,
-            "docs_kept": _parquet_rows(curated_dir),
-        }
+        summary["stages"]["curate"] = {"skipped": False, **stats}
         _timed("curate", t0)
 
     # ---- 4b. optional exact-substring removal: passages shared
@@ -425,7 +325,7 @@ def run_pipeline(
         chunks.write.mode("overwrite").parquet(chunks_dir)
         summary["stages"]["chunk"] = {
             "skipped": False,
-            "chunks": _parquet_rows(chunks_dir),
+            "chunks": parquet_rows(chunks_dir),
         }
         _timed("chunk", t0)
 

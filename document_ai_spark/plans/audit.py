@@ -1,9 +1,8 @@
-"""Physical-plan audit helpers (used by tests and scripts/gen_plans.py).
+"""Physical-plan audit helper (used by tests and scripts/gen_plans.py).
 
 The engine's scale posture is enforced, not just hoped for: tests assert
 that predicates reach the scan, that dimension joins broadcast, and that
-bucketed joins need no Exchange — these helpers make those assertions
-readable.
+bucketed joins need no Exchange — all on the formatted plan text.
 """
 
 from __future__ import annotations
@@ -15,23 +14,4 @@ def formatted_plan(df: DataFrame) -> str:
     jvm = df.sparkSession._jvm
     return df._jdf.queryExecution().explainString(
         jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-
-
-def pushed_filters(df: DataFrame) -> str:
-    return "\n".join(
-        line for line in formatted_plan(df).splitlines()
-        if "PushedFilters" in line
-    )
-
-
-def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df)
-
-
-def exchange_count(df: DataFrame) -> int:
-    return sum(
-        1 for line in formatted_plan(df).splitlines()
-        if line.strip().startswith("+- Exchange")
-        or line.strip().startswith("Exchange")
     )

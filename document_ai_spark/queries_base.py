@@ -69,7 +69,12 @@ def _shingles(words: F.Column) -> F.Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-_SQL_NORM_TEXT = "regexp_replace(trim(text), '\\s+', ' ', 'g')"
+# Java's `\s` (no UNICODE_CHARACTER_CLASS: the six ASCII whitespace
+# chars Spark's regexes match) as a class for the DuckDB twins and the
+# Python stages. RE2's own `\s` leaves out U+000B (vertical tab).
+_SQL_SPACE_CHARS = r" \t\n\x0B\f\r"
+_SQL_SPACE = f"[{_SQL_SPACE_CHARS}]"
+_SQL_NORM_TEXT = f"regexp_replace(trim(text), '{_SQL_SPACE}+', ' ', 'g')"
 _SQL_WORDS = f"str_split({_SQL_NORM_TEXT}, ' ')"
 _SQL_WORDS_CTE = f"SELECT doc_id, {_SQL_WORDS} AS words FROM documents"
 _SQL_SHINGLES_FROM_WORDS = """
@@ -165,7 +170,7 @@ _SQL_N_PUNCT = "len(regexp_extract_all(text, '([.,;:!?])', 1))"
 _SQL_N_STOPWORDS = (
     f"len(regexp_extract_all(lower(text), '{QUALITY_STOPWORDS}', 1))"
 )
-_SQL_N_NONSPACE = "length(regexp_replace(text, '\\s', '', 'g'))"
+_SQL_N_NONSPACE = f"length(regexp_replace(text, '{_SQL_SPACE}', '', 'g'))"
 _SQL_QUALITY_OK = (
     "n_tokens >= 20 AND n_tokens <= 100000 AND n_punct * 10 <= n_tokens * 3"
 )
@@ -257,10 +262,10 @@ N_MINHASH = 8
 N_BANDS = 4  # 2 hashes per band
 
 
-# Java's `\s` (no UNICODE_CHARACTER_CLASS): the six ASCII whitespace
-# chars Spark's regexp_replace collapses. Python's own `\s` also matches
-# U+00A0, U+3000 and the other Unicode spaces, which Spark keeps in words.
-_JAVA_SPACE = re.compile("[ \t\n\x0b\f\r]+")
+# Python's own `\s` also matches U+00A0, U+3000 and the other Unicode
+# spaces, which Spark keeps in words: the Arrow stages split on the Java
+# class too.
+_JAVA_SPACE = re.compile(f"{_SQL_SPACE}+")
 
 
 def _py_words(text: str) -> list[str]:

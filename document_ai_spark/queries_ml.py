@@ -821,33 +821,37 @@ FROM u
 # per-stage funnel counts. One relational plan, fully oracle-checked.
 # --------------------------------------------------------------------------
 
-def _curation_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All column-expression stage flags in ONE scan of the documents table
-    (the shared engine lives in operators/curate.py and also backs the
-    `curate` CLI over extracted tables), joined with the near-dup
-    cluster-keeper stage (r3: MinHash/LSH pairs -> connected components —
-    production funnels dedup fuzzily, not just exactly). Composing the
-    per-flag q_* queries would re-scan the (100 TB) text column once per
-    flag; the DuckDB oracle composes them anyway (oracle scale is tiny)
-    and hash-equality proves the fused plan computes the same flags."""
-    from .operators.curate import curation_flags, neardup_keeper_flags
+# the registry's rule set: the column-expression flags plus the near-dup
+# cluster keeper (r3: MinHash/LSH pairs -> connected components —
+# production funnels dedup fuzzily, not just exactly)
+_FUNNEL_RULES = ("dedup", "neardup", "quality", "gopher", "lang")
 
-    d = _t(spark, sf_dir, "documents")
-    return curation_flags(d).join(neardup_keeper_flags(d), "doc_id")
+
+def _curation_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The rule stack of operators/curate.py (which also backs the
+    `curate` and `pipeline` verbs) over the documents table: every
+    column-expression flag in ONE scan, joined with the near-dup stage.
+    Composing the per-flag q_* queries would re-scan the (100 TB) text
+    column once per flag; the DuckDB oracle composes them anyway (oracle
+    scale is tiny) and hash-equality proves the fused plan computes the
+    same flags."""
+    from .operators.curate import rule_flags
+
+    return rule_flags(_t(spark, sf_dir, "documents"), _FUNNEL_RULES)
 
 
 def q_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curate import kept_filter
 
-    return kept_filter(_curation_flags(spark, sf_dir)).select(
-        "doc_id", "n_tokens"
-    )
+    return kept_filter(
+        _curation_flags(spark, sf_dir), _FUNNEL_RULES
+    ).select("doc_id", "n_tokens")
 
 
 def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.curate import funnel_counts
 
-    return funnel_counts(_curation_flags(spark, sf_dir))
+    return funnel_counts(_curation_flags(spark, sf_dir), _FUNNEL_RULES)
 
 
 def _sql_curation_flags() -> str:

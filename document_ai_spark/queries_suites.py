@@ -68,6 +68,7 @@ from .queries_base import (
     _SQL_PRED_LANG,
     _SQL_QUALITY_OK,
     _SQL_SHINGLES_FROM_WORDS,
+    _SQL_SPACE_CHARS,
     _SQL_WORDS,
     lang_scores,
     n_nonspace,
@@ -1020,7 +1021,8 @@ s AS (
     {_SQL_N_PUNCT} AS n_punct,
     {_SQL_N_STOPWORDS} AS n_stopwords,
     {_SQL_N_NONSPACE} AS n_nonspace,
-    len(regexp_extract_all(lower(text), '([a-z]+|[0-9]+|[^a-z0-9\s])', 1))
+    len(regexp_extract_all(lower(text),
+        '([a-z]+|[0-9]+|[^a-z0-9{_SQL_SPACE_CHARS}])', 1))
         AS bpe_tokens,
     {_SQL_SHINGLES_FROM_WORDS} AS sh,
     16 * (instr('0123456789abcdef', substr(md5(text), 1, 1)) - 1)

@@ -34,6 +34,7 @@ from .queries_base import (
     _SQL_PRED_LANG,
     _SQL_QUALITY_OK,
     _SQL_SHINGLES_FROM_WORDS,
+    _SQL_SPACE,
     _SQL_WORDS,
     _SQL_WORDS_CTE,
     gopher_signals,
@@ -184,13 +185,14 @@ def q_next_word_after_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_NEXT_WORD_AFTER_KEY = r"""
+SQL_NEXT_WORD_AFTER_KEY = rf"""
 SELECT doc_id, key,
        CASE WHEN v = '' OR v IS NULL THEN '<NOT_FOUND>' ELSE v END
            AS next_word
 FROM (
   SELECT doc_id, key,
-         regexp_extract(text, '\b' || key || '\s+([a-z]+)', 1) AS v
+         regexp_extract(text, '\b' || key || '{_SQL_SPACE}+([a-z]+)', 1)
+           AS v
   FROM documents,
        (SELECT unnest(['spark','window','batch']) AS key))
 """

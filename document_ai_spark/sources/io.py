@@ -84,3 +84,48 @@ def append_rows(df: DataFrame, target: str) -> None:
         df.writeTo(target).append()
         return
     df.write.mode("append").parquet(target)
+
+
+def parquet_data_files(path: str) -> list[str]:
+    """The data files `spark.read.parquet(path)` reads, for a parquet
+    dir, file or glob. Mirrors the reader's path semantics: below the
+    table root, '_'/'.'-prefixed entries are metadata, not data (the
+    extract stage keeps its lineage parquet under `extracted/_lineage/`),
+    and a glob may match directories (e.g. 'extracted/shard_id=*'),
+    which the reader descends into. The root itself may sit under any
+    path, `_`-prefixed names included."""
+    import glob as _glob
+
+    def _walk(d: str) -> list[str]:
+        out = []
+        for root, dirs, names in os.walk(d):
+            dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+            out += [
+                os.path.join(root, f)
+                for f in names
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            ]
+        return out
+
+    if os.path.isfile(path):
+        return [path]
+    if os.path.isdir(path):
+        return _walk(path)
+    files = []
+    for p in _glob.glob(path):
+        if os.path.isdir(p):
+            files += _walk(p)
+        elif p.endswith(".parquet") and os.path.isfile(p):
+            files.append(p)
+    return files
+
+
+def parquet_rows(path: str) -> int:
+    """Exact row count of a parquet dir/file/glob from the file FOOTERS:
+    a driver-side metadata read, no Spark job, so stage summaries never
+    re-scan (or re-run the lineage of) what a stage just wrote."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(f).metadata.num_rows for f in parquet_data_files(path)
+    )

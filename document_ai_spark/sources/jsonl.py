@@ -47,9 +47,3 @@ def write_jsonl(
         ).encode("utf-8") + b"\n"
 
     return staged_write(sel, out_dir, rec, ".jsonl.gz", stream_gzip=True)
-
-
-def read_jsonl(spark, paths: list[str]) -> DataFrame:
-    """Readback twin: Spark's json reader decodes gzip natively, so
-    shards load with the stock `spark.read.json`."""
-    return spark.read.json(list(paths))

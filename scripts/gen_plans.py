@@ -25,19 +25,14 @@ def main() -> int:
     from document_ai_spark import queries_text as TX
     from document_ai_spark.datagen import write_corpus
     from document_ai_spark.operators.extraction import extract_pages
+    from document_ai_spark.plans.audit import formatted_plan
     from document_ai_spark.session import get_spark
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)
-    jvm = spark._jvm
     sf = args.sf_dir
 
     def plan(df, keep=None):
-        s = df._jdf.queryExecution().explainString(
-            jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        lines = s.splitlines()
+        lines = formatted_plan(df).splitlines()
         tree_end = next(
             (i for i, line in enumerate(lines) if line.strip() == ""),
             len(lines),

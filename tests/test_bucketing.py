@@ -8,6 +8,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from document_ai_spark.plans.audit import formatted_plan
+
 
 @pytest.fixture(scope="module")
 def bucketed_db(spark, tmp_path_factory):
@@ -40,12 +42,7 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed_db):
         j = l.join(o, "o_orderkey").groupBy("o_orderstatus").agg(
             F.count(F.lit(1)).alias("n")
         )
-        jvm = spark._jvm
-        plan = j._jdf.queryExecution().explainString(
-            jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        plan = formatted_plan(j)
         join_section = plan.split("HashAggregate")[0]
         # co-located buckets: the join itself needs no Exchange
         assert "SortMergeJoin" in plan

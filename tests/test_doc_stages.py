@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+from document_ai_spark.plans.audit import formatted_plan
 from document_ai_spark.queries_spatial import MAX_DIST, _round6
 from scripts.check_oracle import canon
 
@@ -34,6 +35,7 @@ EDGE_DOCS = [
     (8, "slow alpha row beta"),          # "sow" hits slow AND row
     (9, "spark\u00a0plug window next"),  # U+00A0 stays inside the word
     (10, "The SPARK Engine  runs batch jobs "),  # upper-case key word
+    (11, "spark\x0bwindow\x0cnext"),    # U+000B, U+000C split (Java \s)
 ]
 
 
@@ -68,9 +70,9 @@ def test_edge_docs_match_oracle(spark, edge_dir, name):
         return
     got = {(r.doc_id, r.key): r.next_word for r in sdf.itertuples()}
     key = "spark" if name == "next_right_word_2d" else "sparc"
-    assert [got[(d, key)] for d in (1, 2, 3, 4, 5, 6, 7, 9, 10)] == [
+    assert [got[(d, key)] for d in (1, 2, 3, 4, 5, 6, 7, 9, 10, 11)] == [
         "<NOT_FOUND>", "<NOT_FOUND>", "<NOT_FOUND>", "window", "<EMPTY>",
-        "<NOT_FOUND>", "<EMPTY>", "<NOT_FOUND>", "Engine",
+        "<NOT_FOUND>", "<EMPTY>", "<NOT_FOUND>", "Engine", "window",
     ]
     if name == "fuzzy_key_next_right":
         assert got[(8, "sow")] == "alpha"
@@ -100,9 +102,9 @@ def test_stage_rounding_equals_spark_round(spark):
 def test_stage_plan_has_no_exchange_or_checkpoint(spark, name):
     """Each query is Scan -> MapInArrow: no shuffle or broadcast exchange
     and no checkpointed relation, whatever the corpus size."""
-    qe = entrymod.queries()[name](spark, SF)._jdf.queryExecution()
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
-    plan = qe.explainString(mode.fromString("formatted"))
+    df = entrymod.queries()[name](spark, SF)
+    plan = formatted_plan(df)
     assert "MapInArrow" in plan
     assert "Exchange" not in plan
-    assert "LogicalRDD" not in qe.optimizedPlan().toString()
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in optimized

@@ -185,10 +185,10 @@ def test_curate_cli_lm_rule(spark, corpus_dir, tmp_path, capsys):
     ])
     assert rc == 0
     res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    # the funnel ladder reports every stage regardless of selected
-    # rules (gopher rejects the synthetic stopword-free vocabulary, so
-    # the ladder bottoms out at 0); `written` reflects the SELECTED
-    # rules dedup AND quality AND lm
+    # the funnel ladder has a rung only for the SELECTED rules dedup,
+    # quality and lm (no after_gopher: gopher, which rejects the
+    # synthetic stopword-free vocabulary, is not selected), and its
+    # `kept` is what was written
     assert (res["total_docs"] >= res["after_dedup"]
             >= res["after_quality"] >= res["into_lm"] >= res["kept"])
     assert res["written"] > 0

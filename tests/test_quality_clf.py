@@ -92,29 +92,24 @@ def test_classifier_total_on_null_text(spark, corpora):
 
 
 def test_clf_flags_bootstrap_and_funnel_rule(spark, corpora):
-    """The 'clf' curation rule (r5): with no reference labels,
-    clf_flags bootstraps positives/negatives from the heuristic rule
-    packs, and the learned filter agrees with the planted split; the
-    funnel gains an into_clf rung when pass_clf is present."""
-    from document_ai_spark.operators.curate import (
-        clf_flags,
-        curation_flags,
-        funnel_counts,
-    )
+    """The 'clf' curation rule (r5): rule_flags bootstraps the
+    classifier's positives/negatives from the heuristic rule packs, and
+    the learned filter agrees with the planted split; the funnel gains
+    an into_clf rung when pass_clf is present."""
+    from document_ai_spark.operators.curate import funnel_counts, rule_flags
 
     pos, neg = corpora
     mixed = pos.unionByName(
         neg.select((F.col("doc_id") + 10_000).alias("doc_id"), "text")
     )
-    flags = curation_flags(mixed, lang_col=None).join(
-        clf_flags(mixed), "doc_id"
-    )
+    rules = ("dedup", "quality", "gopher", "clf")
+    flags = rule_flags(mixed, rules, lang_col=None)
     got = {r.doc_id: r.pass_clf for r in flags.collect()}
     pos_keep = sum(got[i] for i in range(150)) / 150
     neg_keep = sum(got[i + 10_000] for i in range(150)) / 150
     assert pos_keep > 0.9, pos_keep
     assert neg_keep < 0.1, neg_keep
-    row = funnel_counts(flags).collect()[0]
+    row = funnel_counts(flags, rules).collect()[0]
     assert row.into_clf >= row.kept
     assert row.kept <= 160  # the junk side is filtered
 
@@ -122,10 +117,10 @@ def test_clf_flags_bootstrap_and_funnel_rule(spark, corpora):
 def test_clf_flags_degenerate_labels_pass_all(spark, corpora):
     """All-one-class bootstrap labels mean no signal: every row passes
     instead of fitting a vacuous model."""
-    from document_ai_spark.operators.curate import clf_flags
+    from document_ai_spark.operators.curate import rule_flags
 
     pos, _ = corpora  # every fluent doc passes quality AND gopher
-    out = clf_flags(pos)
+    out = rule_flags(pos, ("clf",), lang_col=None)
     assert out.count() == 150
     assert out.filter("NOT pass_clf").count() == 0
 

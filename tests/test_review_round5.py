@@ -1,5 +1,5 @@
 """Regression tests for the round-5 self-review (code-review skill)
-findings: the empty-vocab LM fallback, `_parquet_rows` path semantics
+findings: the empty-vocab LM fallback, `parquet_rows` path semantics
 (lineage skip / file / glob), honest funnel predecessor-count names,
 and the shared winnowing position-cap constant."""
 
@@ -32,11 +32,11 @@ def test_lm_all_hapax_vocab_cut_falls_back(spark):
 
 
 def test_parquet_rows_skips_lineage_and_handles_files(tmp_path):
-    """_parquet_rows must mirror the Spark reader: '_'-prefixed dirs
+    """parquet_rows must mirror the Spark reader: '_'-prefixed dirs
     (the extract stage's `_lineage` bookkeeping) are metadata, not
     data; single-file and glob inputs count like spark.read.parquet
     accepts them (the old os.walk returned 0 for both)."""
-    from document_ai_spark.pipeline import _parquet_rows
+    from document_ai_spark.sources.io import parquet_rows
 
     d = tmp_path / "extracted"
     (d / "_lineage").mkdir(parents=True)
@@ -45,16 +45,16 @@ def test_parquet_rows_skips_lineage_and_handles_files(tmp_path):
     pq.write_table(tbl, str(d / "part-1.parquet"))
     pq.write_table(pa.table({"shard": [1, 2, 3]}),
                    str(d / "_lineage" / "rows.parquet"))
-    assert _parquet_rows(str(d)) == 14  # not 17
-    assert _parquet_rows(str(d / "part-0.parquet")) == 7
-    assert _parquet_rows(str(d / "part-*.parquet")) == 14
+    assert parquet_rows(str(d)) == 14  # not 17
+    assert parquet_rows(str(d / "part-0.parquet")) == 7
+    assert parquet_rows(str(d / "part-*.parquet")) == 14
 
 
 def test_funnel_clf_without_lm_reports_into_clf(spark):
     """A funnel with clf but NO lm must not print a phantom LM rung:
     the count entering the classifier is named into_clf (and there is
     no into_lm column at all when the lm stage never ran)."""
-    from document_ai_spark.operators.curate import funnel_counts
+    from document_ai_spark.operators.curate import ALL_RULES, funnel_counts
 
     flags = spark.createDataFrame(
         [(1, True, True, True, True, True, 10),
@@ -64,8 +64,8 @@ def test_funnel_clf_without_lm_reports_into_clf(spark):
         "pass_gopher boolean, pass_lang boolean, pass_clf boolean, "
         "n_tokens long",
     )
-    row = funnel_counts(flags).collect()[0]
-    cols = set(funnel_counts(flags).columns)
+    row = funnel_counts(flags, ALL_RULES).collect()[0]
+    cols = set(funnel_counts(flags, ALL_RULES).columns)
     assert "into_clf" in cols and "into_lm" not in cols
     assert "after_lm" not in cols and "after_lang" not in cols
     assert row.into_clf == 2  # docs 1, 2 reach the classifier
@@ -78,6 +78,7 @@ def test_funnel_counts_respects_rule_subset(spark):
     unrestricted funnel for `--rules dedup,quality` would conjoin
     gopher anyway and print kept < written."""
     from document_ai_spark.operators.curate import (
+        ALL_RULES,
         funnel_counts,
         kept_filter,
     )
@@ -94,8 +95,8 @@ def test_funnel_counts_respects_rule_subset(spark):
     assert row.kept == kept_filter(flags, rules).count() == 2
     cols = set(funnel_counts(flags, rules).columns)
     assert "after_gopher" not in cols  # unselected stage: no rung
-    # default (rules=None) keeps the frozen oracle-checked shape
-    full = funnel_counts(flags).collect()[0]
+    # every rule selected: every present flag counts
+    full = funnel_counts(flags, ALL_RULES).collect()[0]
     assert full.after_gopher == 1 and full.kept == 1
 
 

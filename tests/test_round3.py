@@ -1,11 +1,8 @@
 """Round-3 additions: approx-distinct error bound, deterministic IVF,
-near-dup curation stage (operator + funnel + CLI rule), suite queries'
-internal consistency."""
+near-dup curation stage (operator + funnel; the CLI rule is in
+test_curate.py), suite queries' internal consistency."""
 
 from __future__ import annotations
-
-import json
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -108,25 +105,6 @@ def test_funnel_counts_monotone_with_neardup(spark):
     )
     # the stage must not be vacuous at this SF (26 cluster non-keepers)
     assert row.after_neardup < row.after_dedup
-
-
-def test_cli_curate_neardup_rule(spark, corpus_dir, tmp_path, capsys):
-    from document_ai_spark.__main__ import main
-    from document_ai_spark.operators.extraction import extract_pages
-
-    pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
-    src = str(tmp_path / "ex")
-    extract_pages(pages, salted=False).write.mode("overwrite").parquet(src)
-    out = str(tmp_path / "kept")
-    rc = main([
-        "curate", "--extracted", src, "--output", out,
-        "--rules", "dedup,neardup,quality",
-    ])
-    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert rc == 0
-    assert "after_neardup" in res
-    assert res["after_neardup"] <= res["after_dedup"]
-    assert res["written"] == res["after_quality"]
 
 
 def test_suite_row_counts_match_members(spark):

@@ -209,47 +209,6 @@ def test_suite_chunking_branch_reconstructs(spark):
     assert words == expect
 
 
-def test_curate_cli_collapses_recrawled_urls(spark, corpus_dir, tmp_path,
-                                             capsys):
-    """Duplicate url rows (re-crawls) must collapse before flagging:
-    counts reflect distinct urls and the written table has no url
-    twice — with the neardup and lm joins active (the multiplicative
-    blowup case)."""
-    import datetime as dt
-    import json
-    import os
-
-    from document_ai_spark.__main__ import main
-    from document_ai_spark.operators.extraction import extract_pages
-
-    pages = spark.read.parquet(
-        os.path.join(corpus_dir, "pages.parquet")
-    ).orderBy("url").limit(40)
-    ex = extract_pages(pages, num_partitions=2)
-    dup = ex.limit(3).withColumn(
-        "warc_ts",
-        F.lit(dt.datetime(2030, 1, 1)).cast("timestamp"),
-    )
-    src = str(tmp_path / "ex")
-    ex.unionByName(dup).write.parquet(src)
-    out = str(tmp_path / "kept")
-    rc = main([
-        "curate", "--extracted", src, "--output", out,
-        "--rules", "dedup,neardup,quality,lm",
-    ])
-    assert rc == 0
-    res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert res["total_docs"] == 40  # 43 rows, 40 urls
-    kept = spark.read.parquet(out)
-    assert kept.groupBy("url").count().filter("count > 1").count() == 0
-    # the survivors of a re-crawled url are the NEWEST rows
-    newest = kept.filter(F.col("warc_ts") >= "2029-01-01").count()
-    dup_urls_kept = kept.join(
-        dup.select("url"), "url", "left_semi"
-    ).count()
-    assert newest == dup_urls_kept
-
-
 def test_datagen_noindex_pages_gate_non_vacuously(spark, corpus_dir):
     """Every 40th doc declares robots noindex in its head: the polite
     gate must drop exactly those rows, and their goldens must still be

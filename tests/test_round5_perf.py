@@ -1,7 +1,8 @@
-"""Round-5 perf-change regression tests: the adaptive recrawl collapse
-(identity vs materialized modes + crash-resume reuse) and the MinHash
+"""Round-5 perf-change regression tests: the footer row count's path
+semantics, the curate stage summary's collapse mode, and the MinHash
 per-doc shingle dedup (the signature stage vs the per-doc and the old
-global-distinct Spark constructions)."""
+global-distinct Spark constructions). The adaptive collapse tests live
+in test_curate.py."""
 
 from __future__ import annotations
 
@@ -17,85 +18,14 @@ from document_ai_spark.queries_base import (
 )
 
 
-def test_adaptive_collapse_identity_for_unique_ids(spark, tmp_path):
-    """url-unique input must skip the collapse window entirely: mode
-    'identity', rows pass through untouched, and nothing is written to
-    the materialize dir (the common recrawl-free shard pays zero)."""
-    from document_ai_spark.operators.curate import adaptive_collapse
-
-    src = str(tmp_path / "extracted")
-    spark.createDataFrame(
-        [(f"u{i}", f"2026-01-0{i + 1}", f"text {i}") for i in range(5)],
-        "url string, warc_ts string, main_text string",
-    ).write.parquet(src)
-    mat = str(tmp_path / "collapsed")
-    out, mode = adaptive_collapse(spark, src, mat)
-    assert mode == "identity"
-    assert out.count() == 5
-    assert not os.path.exists(mat)
-
-
-def test_adaptive_collapse_materializes_once_and_resumes(spark, tmp_path):
-    """Input WITH recrawls pays the window exactly once: the collapsed
-    table lands in the materialize dir with a _SUCCESS commit, keeps
-    the NEWEST crawl per url, and a second call (crash-resume between
-    the collapse write and the curated write) reuses the files instead
-    of recomputing."""
-    from document_ai_spark.operators.curate import adaptive_collapse
-
-    src = str(tmp_path / "extracted")
-    spark.createDataFrame(
-        [
-            ("u0", "2026-01-01", "old crawl"),
-            ("u0", "2026-01-09", "new crawl"),
-            ("u1", "2026-01-02", "only crawl"),
-        ],
-        "url string, warc_ts string, main_text string",
-    ).write.parquet(src)
-    mat = str(tmp_path / "collapsed")
-    out, mode = adaptive_collapse(spark, src, mat)
-    assert mode == "materialized"
-    rows = {r.url: r.main_text for r in out.collect()}
-    assert rows == {"u0": "new crawl", "u1": "only crawl"}
-    marker = os.path.join(mat, "_SUCCESS")
-    assert os.path.exists(marker)
-    stamp = os.stat(marker).st_mtime_ns
-    out2, mode2 = adaptive_collapse(spark, src, mat)
-    assert mode2 == "materialized"
-    assert os.stat(marker).st_mtime_ns == stamp  # no rewrite
-    assert {r.url: r.main_text for r in out2.collect()} == rows
-
-
-def test_adaptive_collapse_checkpoints_without_workdir(spark, tmp_path):
-    """Callers with no workdir (the curate CLI) omit materialize_dir:
-    recrawled input still collapses to one newest row per url, paid
-    once via localCheckpoint — mode 'checkpointed', nothing on disk."""
-    from document_ai_spark.operators.curate import adaptive_collapse
-
-    src = str(tmp_path / "extracted")
-    spark.createDataFrame(
-        [
-            ("u0", "2026-01-01", "old crawl"),
-            ("u0", "2026-01-09", "new crawl"),
-            ("u1", "2026-01-02", "only crawl"),
-        ],
-        "url string, warc_ts string, main_text string",
-    ).write.parquet(src)
-    out, mode = adaptive_collapse(spark, src)
-    assert mode == "checkpointed"
-    assert {r.url: r.main_text for r in out.collect()} == {
-        "u0": "new crawl", "u1": "only crawl"
-    }
-
-
 def test_parquet_rows_directory_glob(spark, tmp_path):
-    """_parquet_rows must mirror spark.read.parquet's path semantics for
+    """parquet_rows must mirror spark.read.parquet's path semantics for
     globs that match DIRECTORIES (e.g. 'extracted/shard_id=*'), not just
     files — a 0 here silently defeats adaptive_collapse's identity skip
     and corrupts summary counts."""
     import glob as _glob
 
-    from document_ai_spark.pipeline import _parquet_rows
+    from document_ai_spark.sources.io import parquet_rows
 
     base = str(tmp_path / "extracted")
     df = spark.createDataFrame(
@@ -104,8 +34,8 @@ def test_parquet_rows_directory_glob(spark, tmp_path):
     df.write.partitionBy("shard_id").parquet(base)
     pat = os.path.join(base, "shard_id=*")
     assert len(_glob.glob(pat)) == 2  # the glob matches directories
-    assert _parquet_rows(pat) == 10
-    assert _parquet_rows(base) == 10
+    assert parquet_rows(pat) == 10
+    assert parquet_rows(base) == 10
 
 
 def test_pipeline_summary_reports_collapse_mode(spark, corpus_dir, tmp_path):

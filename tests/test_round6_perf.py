@@ -25,12 +25,12 @@ def test_queries_read_scan_without_repartition(spark):
     only exchanges left are the ones the operators themselves need."""
     import __spark_entry__ as entrymod
 
+    from document_ai_spark.plans.audit import formatted_plan
+
     qs = entrymod.queries()
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
     fanned = [
         q for q in SCAN_DIRECT
-        if "REPARTITION_BY_NUM" in qs[q](spark, SF)._jdf.queryExecution()
-        .explainString(mode.fromString("formatted"))
+        if "REPARTITION_BY_NUM" in formatted_plan(qs[q](spark, SF))
     ]
     assert fanned == []
 

@@ -2,14 +2,17 @@
 queries_base: every Spark builder and its DuckDB SQL twin run over one
 small hand-built documents table whose inputs the synthetic oracle corpus
 never produces (empty, whitespace-only, punctuation-only and CJK-only
-text, a one-word doc, a Gopher-passing English doc, de/fr/es lines), and
-the MinHash signature stage against the generated Spark chain it
-replaced and its DuckDB twin."""
+text, a one-word doc, a Gopher-passing English doc, de/fr/es lines,
+vertical tabs), the MinHash signature stage against the generated Spark
+chain it replaced and its DuckDB twin, and the registry queries with
+their own whitespace regexes against their oracles on vertical-tab and
+form-feed documents."""
 
 from __future__ import annotations
 
 import duckdb
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from document_ai_spark.queries_base import (
@@ -19,6 +22,7 @@ from document_ai_spark.queries_base import (
     _SQL_GOPHER_OK,
     _SQL_GOPHER_SIGNALS,
     _SQL_LANG_SCORES,
+    _SQL_N_NONSPACE,
     _SQL_N_PUNCT,
     _SQL_N_STOPWORDS,
     _SQL_PRED_LANG,
@@ -27,6 +31,7 @@ from document_ai_spark.queries_base import (
     gopher_signals,
     lang_scores,
     minhash_signatures,
+    n_nonspace,
     n_punct,
     n_stopwords,
     pred_lang,
@@ -50,10 +55,13 @@ DOCS = [
     (8, "los gatos y el perro de una casa que ladra por la noche"),
     (9, "#@[ ]{ }<> |~^ " + _GOPHER_EN),
     (10, "The cat, the dog; a bird: is it in? " * 3),
+    # U+000B and U+000C are Java `\s` (RE2's own `\s` has no U+000B)
+    (11, ("the\x0bquick brown fox\x0cjumps over the lazy dog, "
+          "and the cat.\x0b") * 3),
 ]
 
 COLS = [
-    "doc_id", "n_tokens", "n_punct", "n_stopwords", "n_stop",
+    "doc_id", "n_tokens", "n_punct", "n_stopwords", "n_stop", "n_nonspace",
     "s_en", "s_de", "s_fr", "s_es", "s_zh",
     "quality_ok", "gopher_ok", "pred_lang",
 ]
@@ -73,6 +81,7 @@ def _spark_rows(spark) -> pd.DataFrame:
             n_punct(t).alias("n_punct"),
             n_stopwords(t).alias("n_stopwords"),
             g["n_stop"].alias("n_stop"),
+            n_nonspace(t).alias("n_nonspace"),
             *[c.alias(f"s_{k}") for k, c in s.items()],
             quality_ok(n, n_punct(t)).alias("quality_ok"),
             g["gopher_ok"].alias("gopher_ok"),
@@ -95,10 +104,11 @@ b AS (
   SELECT doc_id, len(words) AS n_tokens, len(words) AS n_words,
          {_SQL_N_PUNCT} AS n_punct,
          {_SQL_N_STOPWORDS} AS n_stopwords,
+         {_SQL_N_NONSPACE} AS n_nonspace,
          {_SQL_LANG_SCORES},
          {_SQL_GOPHER_SIGNALS}
   FROM w)
-SELECT doc_id, n_tokens, n_punct, n_stopwords, n_stop,
+SELECT doc_id, n_tokens, n_punct, n_stopwords, n_stop, n_nonspace,
        s_en, s_de, s_fr, s_es, s_zh,
        {_SQL_QUALITY_OK} AS quality_ok,
        {_SQL_GOPHER_OK} AS gopher_ok,
@@ -166,10 +176,9 @@ MINHASH_DOCS = [
     None,                                    # NULL text: no row
     "a b c a b c a b c a b c",               # repeated shingles
     "x\r\n\r\ny \t z",                     # runs of mixed whitespace
+    "p\x0bq r\x0cs t",                       # vertical tab and form feed
+    "\x0b\x0cleft right edge",               # ... as edge words
 ]
-# vertical tab and form feed are Java `\s` but not RE2 `\s`: the DuckDB
-# twin splits them differently, so only the Spark chain is compared here
-SPARK_ONLY_DOCS = ["p\x0bq r\x0cs t", "\x0b\x0cleft right edge"]
 
 
 def _signature_rows(df) -> list[tuple]:
@@ -177,8 +186,7 @@ def _signature_rows(df) -> list[tuple]:
 
 
 def test_minhash_signatures_match_spark_chain_and_duckdb(spark):
-    n_docs = len(MINHASH_DOCS)
-    docs = MINHASH_DOCS + SPARK_ONLY_DOCS
+    docs = MINHASH_DOCS
     for ids, ddl in (
         (list(range(len(docs))), "doc_id bigint, text string"),
         ([f"u{i:02d}" for i in range(len(docs))],
@@ -196,14 +204,53 @@ def test_minhash_signatures_match_spark_chain_and_duckdb(spark):
         ]
         con = duckdb.connect()
         con.register("documents", pd.DataFrame(
-            {"doc_id": ids[:n_docs], "text": MINHASH_DOCS}
+            {"doc_id": ids, "text": docs}
         ))
         sql = sorted(
             tuple(r) for r in con.execute(_SQL_MINHASH_CORE).fetchall()
         )
-        assert sql == [r for r in rows if r[0] in ids[:n_docs]]
+        assert sql == rows
     # a different hash count still reads the right digest words
     for n in (6, 16):
         assert _signature_rows(minhash_signatures(df, n_hashes=n)) == (
             _signature_rows(_spark_chain_signatures(df, "doc_id", n))
         )
+
+
+# Java `\s` is [ \t\n\x0B\f\r]; RE2's `\s` leaves out U+000B
+JAVA_SPACE_DOCS = [
+    (1, "spark\x0bwindow runs\x0cbatch jobs", "en"),
+    (2, "a\x0bb  c\x0c d e f", "en"),
+    (3, "the window\x0b\x0bspark\x0bplug of the batch", "en"),
+    (4, "\x0bspark batch\x0b", "en"),
+]
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["next_word_after_key", "text_metrics", "winnow_fingerprint",
+     "quality_gopher"],
+)
+def test_java_space_docs_match_oracle(spark, tmp_path, name):
+    """Registry queries whose oracle SQL splits, counts or matches
+    whitespace (the word split, the non-space count, the key-word regex,
+    the token regex) agree with Spark on U+000B and U+000C."""
+    import __spark_entry__ as entrymod
+    from scripts.check_oracle import canon
+
+    docs = pd.DataFrame(JAVA_SPACE_DOCS, columns=["doc_id", "text", "lang"])
+    docs.to_parquet(tmp_path / "documents.parquet", index=False)
+    sdf = entrymod.queries()[name](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM "
+        f"'{tmp_path}/documents.parquet'"
+    )
+    odf = con.execute(entrymod.oracle_sql()[name]).df()
+    assert len(sdf) > 0
+    assert canon(sdf)[1] == canon(odf)[1]
+    if name == "next_word_after_key":
+        got = {(r.doc_id, r.key): r.next_word for r in sdf.itertuples()}
+        assert got[(1, "spark")] == "window"
+        assert got[(3, "window")] == "spark"
+        assert got[(4, "spark")] == "batch"

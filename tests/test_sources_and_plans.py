@@ -125,3 +125,33 @@ def test_aqe_splits_skewed_join(spark):
             spark.conf.set(k, v)
     assert "skew=true" in plan
     assert "AQEShuffleRead skewed" in plan
+
+
+def test_table_walk_under_lineage_named_path(tmp_path):
+    """compact.table_file_stats and the footer row count walk the same
+    data files, skipping `_`-prefixed entries below the table root only:
+    a table kept under a path that itself contains `_lineage` is still
+    seen in full (sizing a compaction from 0 bytes otherwise)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from document_ai_spark.operators.compact import table_file_stats
+    from document_ai_spark.sources.io import parquet_data_files, parquet_rows
+
+    d = tmp_path / "crawl_lineage_2026" / "_lineage_tables" / "extracted"
+    (d / "shard_id=0").mkdir(parents=True)
+    (d / "_lineage").mkdir()
+    pq.write_table(pa.table({"x": list(range(5))}),
+                   str(d / "shard_id=0" / "part-0.parquet"))
+    pq.write_table(pa.table({"x": list(range(4))}), str(d / "part-1.parquet"))
+    pq.write_table(pa.table({"shard": [1, 2]}),
+                   str(d / "_lineage" / "rows.parquet"))
+    files = parquet_data_files(str(d))
+    assert sorted(os.path.basename(f) for f in files) == [
+        "part-0.parquet", "part-1.parquet"
+    ]
+    assert table_file_stats(str(d)) == {
+        "n_files": 2,
+        "bytes": sum(os.path.getsize(f) for f in files),
+    }
+    assert parquet_rows(str(d)) == 9

@@ -129,6 +129,7 @@ def test_curate_rules_selection(spark):
     """kept_filter applies exactly the selected rules and skips rules whose
     flag column is absent (lang without ground truth)."""
     from document_ai_spark.operators.curate import (
+        ALL_RULES,
         curation_flags,
         funnel_counts,
         kept_filter,
@@ -151,7 +152,7 @@ def test_curate_rules_selection(spark):
     assert dq == {1}
     d_only = {r.doc_id for r in kept_filter(flags, ("dedup",)).collect()}
     assert d_only == {1, 3}
-    row = funnel_counts(flags).collect()[0]
+    row = funnel_counts(flags, ALL_RULES).collect()[0]
     assert (row.total_docs, row.after_dedup, row.kept) == (3, 2, 1)
 
 
