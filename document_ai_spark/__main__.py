@@ -54,24 +54,13 @@ def cmd_extract(args) -> int:
     t_boot = time.time()
     spark = _spark(args)
     if getattr(args, "input_format", "table") == "warc":
-        # Common Crawl's native archive format: the comma/glob list of
-        # .warc(.gz) paths becomes the distributed dataset (one file per
-        # task), parsed to the engine's pages shape. The parse is
-        # MATERIALIZED to parquet once before sharding: run_extraction_job
-        # re-evaluates its source per shard chunk, which would re-parse
-        # every archive ceil(n_shards/shards_per_commit)+1 times (r3
-        # review finding)
-        import glob as _glob
+        # Common Crawl's native archive format: the archives become the
+        # distributed dataset (one file per task), parsed ONCE to the
+        # engine's pages shape before sharding
+        from document_ai_spark.sources.warc import stage_warc_pages
 
-        from document_ai_spark.sources.warc import warc_pages
-
-        paths: list[str] = []
-        for pat in args.input.split(","):
-            paths.extend(sorted(_glob.glob(pat)) or [pat])
         staged_pages = f"{args.output.rstrip('/')}/_warc_pages"
-        warc_pages(spark, paths).write.mode("overwrite").parquet(
-            staged_pages
-        )
+        stage_warc_pages(spark, args.input, staged_pages)
 
         def read_pages(spark, _input):  # noqa: F811 — warc-backed source
             return spark.read.parquet(staged_pages)
@@ -182,11 +171,12 @@ def cmd_blocks(args) -> int:
         pages = pages.filter(pages.url == args.url)
     blocks = extract_blocks(pages)
     blocks.write.mode("overwrite").parquet(args.output)
-    out = spark.read.parquet(args.output)
-    stats = out.groupBy("accepted").count().collect()
+    # one read-back: the per-decision counts sum to the block total
+    stats = spark.read.parquet(args.output).groupBy("accepted").count()
+    accepted = {str(r.accepted): r["count"] for r in stats.collect()}
     print(json.dumps({
-        "blocks": out.count(),
-        "accepted": {str(r.accepted): r["count"] for r in stats},
+        "blocks": sum(accepted.values()),
+        "accepted": accepted,
         "out_dir": args.output,
     }))
     return 0
@@ -318,8 +308,6 @@ def cmd_pipeline(args) -> int:
         pack_words=args.pack_words,
         baseline_pages=args.baseline_pages,
         excise=args.excise,
-        excise_min_shared=args.excise_min_shared,
-        excise_max_df=args.excise_max_df,
         chunk_unit=args.chunk_unit,
     )
     print(json.dumps(summary))
@@ -361,11 +349,11 @@ def cmd_validate(args) -> int:
 
     spark = _spark(args)
     extracted = spark.read.parquet(args.extracted)
-    validated = validate_extracted(extracted)
-    res = {
-        "docs": validated.count(),
-        "validated": validated.filter(F.col("validated")).count(),
-    }
+    counts = validate_extracted(extracted).agg(
+        F.count(F.lit(1)).alias("docs"),
+        F.count_if(F.col("validated")).alias("validated"),
+    ).first()
+    res = {"docs": counts["docs"], "validated": counts["validated"]}
     if args.golden:
         golden = spark.read.parquet(args.golden)
         row = extraction_accuracy(extracted, golden).collect()[0]
@@ -498,8 +486,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="cut passages shared verbatim across kept docs "
                     "from every non-keeper (exact-substring removal; "
                     "output text is the normalized form)")
-    pl.add_argument("--excise-min-shared", type=int, default=8)
-    pl.add_argument("--excise-max-df", type=int, default=20)
     pl.add_argument("--chunk-unit", choices=("words", "subwords"),
                     default="words",
                     help="budget chunks (and packs) in whitespace words "

@@ -8,7 +8,8 @@ scan would consume its own half-written output), so compaction is
 stage-and-swap:
 
   1. rewrite into `<table>._compact_stage` with size-targeted partitions,
-  2. verify the staged row count matches the source,
+  2. verify the staged row count (from parquet footers) matches the
+     source's,
   3. swap directories (old table kept at `<table>._compact_bak` until the
      swap completes, then removed; `_lineage` is carried over untouched).
 
@@ -25,10 +26,10 @@ import shutil
 
 from pyspark.sql import SparkSession
 
-from ..sources.io import parquet_data_files
+from ..sources.io import parquet_data_files, parquet_rows
+from .lineage import LINEAGE_SUBDIR
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024
-LINEAGE_SUBDIR = "_lineage"
 
 
 def table_file_stats(table_dir: str) -> dict:
@@ -59,16 +60,17 @@ def compact_table(
     shutil.rmtree(stage, ignore_errors=True)
 
     before = table_file_stats(table_dir)
-    df = spark.read.parquet(table_dir)
-    n_rows = df.count()
+    # both row counts come from parquet footers: no Spark scan
+    n_rows = parquet_rows(table_dir)
     n_files = max(1, before["bytes"] // target_file_bytes + 1)
     (
-        df.repartition(int(n_files), "shard_id")
+        spark.read.parquet(table_dir)
+        .repartition(int(n_files), "shard_id")
         .write.mode("overwrite")
         .partitionBy("shard_id")
         .parquet(stage)
     )
-    staged_rows = spark.read.parquet(stage).count()
+    staged_rows = parquet_rows(stage)
     if staged_rows != n_rows:
         shutil.rmtree(stage)
         raise RuntimeError(

@@ -233,72 +233,46 @@ def run_extraction_job(
     sharded = pages.withColumn(
         "shard_id", F.pmod(F.xxhash64("url"), F.lit(n_shards)).cast("int")
     )
-    import os as _os
-    import sys as _sys
-
-    def _mark(msg: str, t: float) -> None:
-        if _os.environ.get("DAS_TIMING"):
-            print(f"[lineage] {msg} +{time.time()-t:.1f}s", file=_sys.stderr)
-
-    _t_run = time.time()
     with capped_scan_splits(spark):
-        _run_chunks(
-            spark, sharded, todo, n_shards, shards_per_commit, out_dir,
-            run_id, num_partitions, total, _mark, _t_run,
-        )
-    return total
-
-
-def _run_chunks(spark, sharded, todo, n_shards, shards_per_commit, out_dir,
-                run_id, num_partitions, total, _mark, _t_run) -> None:
-    for c0 in range(0, len(todo), shards_per_commit):
-        chunk = todo[c0 : c0 + shards_per_commit]
-        started = time.time()
-        part = sharded.filter(F.col("shard_id").isin(chunk))
-        # shard_id is re-derived from the url hash after extraction (cheaper
-        # than carrying it through the Arrow boundary or re-joining)
-        extracted = extract_pages(
-            part.select("url", "warc_ts", "html"),
-            num_partitions=num_partitions,
-        ).withColumn(
-            "shard_id", F.pmod(F.xxhash64("url"), F.lit(n_shards)).cast("int")
-        )
-        write_extracted(
-            extracted, out_dir,
-            partition_cols=["shard_id"], overwrite_partitions=True,
-        )
-        _mark(f"chunk {chunk} written", _t_run)
-        stats = _chunk_shard_stats(spark, out_dir, chunk)
-        finished = time.time()
-        lin_rows = [
-            Row(
-                run_id=run_id,
-                shard_id=s,
-                docs=stats[s][0],
-                bytes=stats[s][1],
-                parse_failures=stats[s][2],
-                started_ts=datetime.fromtimestamp(started),
-                finished_ts=datetime.fromtimestamp(finished),
-                status="done",
+        for c0 in range(0, len(todo), shards_per_commit):
+            chunk = todo[c0 : c0 + shards_per_commit]
+            started = time.time()
+            part = sharded.filter(F.col("shard_id").isin(chunk))
+            # shard_id is re-derived from the url hash after extraction
+            # (cheaper than carrying it through the Arrow boundary or
+            # re-joining)
+            extracted = extract_pages(
+                part.select("url", "warc_ts", "html"),
+                num_partitions=num_partitions,
+            ).withColumn(
+                "shard_id",
+                F.pmod(F.xxhash64("url"), F.lit(n_shards)).cast("int"),
             )
-            for s in chunk
-        ]
-        _mark(f"chunk {chunk} lineage agg", _t_run)
-        _append_lineage_rows(spark, lin_rows, LINEAGE_SCHEMA,
-                             _lineage_path(out_dir))
-        total["chunks"] += 1
-        total["docs"] += sum(r.docs for r in lin_rows)
-        total["bytes"] += sum(r.bytes for r in lin_rows)
-        total["parse_failures"] += sum(r.parse_failures for r in lin_rows)
-        _mark(f"chunk {chunk} lineage appended", _t_run)
-
-
-def resume_filter(pages: DataFrame, extracted_dir: str) -> DataFrame:
-    """Row-level resume: left-anti join against already-extracted urls (U2) —
-    used when restarting without shard lineage (e.g. foreign output)."""
-    spark = pages.sparkSession
-    try:
-        have = spark.read.parquet(extracted_dir).select("url")
-    except Exception:
-        return pages
-    return pages.join(have, "url", "left_anti")
+            write_extracted(
+                extracted, out_dir,
+                partition_cols=["shard_id"], overwrite_partitions=True,
+            )
+            stats = _chunk_shard_stats(spark, out_dir, chunk)
+            finished = time.time()
+            lin_rows = [
+                Row(
+                    run_id=run_id,
+                    shard_id=s,
+                    docs=stats[s][0],
+                    bytes=stats[s][1],
+                    parse_failures=stats[s][2],
+                    started_ts=datetime.fromtimestamp(started),
+                    finished_ts=datetime.fromtimestamp(finished),
+                    status="done",
+                )
+                for s in chunk
+            ]
+            _append_lineage_rows(spark, lin_rows, LINEAGE_SCHEMA,
+                                 _lineage_path(out_dir))
+            total["chunks"] += 1
+            total["docs"] += sum(r.docs for r in lin_rows)
+            total["bytes"] += sum(r.bytes for r in lin_rows)
+            total["parse_failures"] += sum(
+                r.parse_failures for r in lin_rows
+            )
+    return total

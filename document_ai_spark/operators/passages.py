@@ -20,6 +20,16 @@ from pyspark.sql import functions as F
 
 from ..queries_text import _winnow_text, winnow_fingerprints_df
 
+# corpus thresholds for (min_shared, max_doc_freq), used by the pipeline's
+# excise stage and the registry's passage suites. Probed at sf0.01: the
+# synthetic corpus draws from a shared vocabulary, so the operators' own
+# defaults (2, 100) pair nearly everything via common-word fingerprints
+# (95k pairs); (8, 20) keeps the injected passage group (~50 shared
+# fingerprints per pair) plus a couple dozen genuine high-overlap random
+# pairs — both flag behaviors real
+PASSAGE_MIN_SHARED = 8
+PASSAGE_MAX_DF = 20
+
 
 def shared_passage_pairs(
     fingerprints: DataFrame,

@@ -24,11 +24,9 @@ Oracle-parity tricks:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from hashlib import md5
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -397,47 +395,14 @@ SQL_SIMHASH = _sql_simhash()
 # the 10^12-scale similarity path. Embeddings quantize to round(x*1000)
 # BIGINT and the hyperplanes are deterministic integer vectors
 # (((p*131 + d*37) % 997) - 498), so the sign computation is exact integer
-# arithmetic, identical in numpy and DuckDB regardless of summation order
+# arithmetic, identical in Spark and DuckDB regardless of summation order
 # — which is what makes the entry hash-checkable (float dot products
 # near zero would flip sign bits between engines).
 # --------------------------------------------------------------------------
 
-_ANN_BUCKET_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("bucket", T.IntegerType()),
-    ]
-)
-
 N_PLANES = 8
 _Q_SCALE = 1000
 _PLANE_MOD, _PLANE_A, _PLANE_B, _PLANE_OFF = 997, 131, 37, 498
-
-
-def _plane_matrix(dim: int) -> np.ndarray:
-    """Deterministic integer hyperplanes, identical to the SQL formula."""
-    p = np.arange(N_PLANES)[:, None]
-    d = np.arange(dim)[None, :]
-    return ((p * _PLANE_A + d * _PLANE_B) % _PLANE_MOD) - _PLANE_OFF
-
-
-def _ann_bucket_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    planes = None
-    for pdf in it:
-        mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        q = np.round(mat * _Q_SCALE).astype(np.int64)
-        if planes is None:
-            planes = _plane_matrix(mat.shape[1]).astype(np.int64)
-        signs = (q @ planes.T) > 0
-        buckets = signs.dot(1 << np.arange(N_PLANES)).astype(np.int32)
-        yield pd.DataFrame(
-            {"vec_id": pdf["vec_id"], "bucket": buckets}
-        )
-
-
-def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return e.mapInPandas(_ann_bucket_batches, schema=_ANN_BUCKET_SCHEMA)
 
 
 def _sql_plane_bucket(n_planes: int) -> str:
@@ -476,11 +441,11 @@ def _quantize(emb_col: F.Column) -> F.Column:
 def _plane_bucket_col(emb_col: F.Column, n_planes: int) -> F.Column:
     """Sign bits of the first `n_planes` integer hyperplanes as a pure
     column expression — the LSH bucket (N_PLANES) and the IVF coarse
-    list (N_IVF_PLANES). Identical integer math to _ann_bucket_batches
-    (quantize, integer planes, sign bits) but with no Python UDF and no
-    join back to the embeddings, so a self-join side costs ONE scan.
-    Exact-integer arithmetic keeps it equal to the numpy path bit for
-    bit."""
+    list (N_IVF_PLANES): quantize, integer planes, sign bits, with no
+    Python UDF and no join back to the embeddings, so a self-join side
+    costs ONE scan. Spark's HALF_UP `round` matches DuckDB's, and the
+    exact-integer dot products keep it equal to _sql_plane_bucket bit
+    for bit."""
     q = _quantize(emb_col)
     bucket = F.lit(0)
     for pl in range(n_planes):
@@ -497,6 +462,13 @@ def _plane_bucket_col(emb_col: F.Column, n_planes: int) -> F.Column:
         )
         bucket = bucket + F.when(dot > 0, F.lit(1 << pl)).otherwise(F.lit(0))
     return bucket.cast("int")
+
+
+def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _t(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        _plane_bucket_col(F.col("embedding"), N_PLANES).alias("bucket"),
+    )
 
 
 def q_embedding_near_dups_lsh(spark: SparkSession,

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from .operators.passages import PASSAGE_MAX_DF, PASSAGE_MIN_SHARED
 from .queries import (
     SQL_COLLECT_STATUSES,
     SQL_DISTINCT_SUPPLIERS,
@@ -99,13 +100,6 @@ import hashlib as _hashlib
 PASSAGE = "".join(
     _hashlib.md5(f"passage:{i}".encode()).hexdigest() for i in range(5)
 )
-# thresholds probed at sf0.01: the synthetic corpus draws from a shared
-# vocabulary, so (min_shared=2, max_df=100) pairs nearly everything via
-# common-word fingerprints (95k pairs); (8, 20) keeps the injected
-# passage group (~50 shared fingerprints per pair) plus a couple dozen
-# genuine high-overlap random pairs — both flag behaviors real
-PASSAGE_MIN_SHARED = 8
-PASSAGE_MAX_DF = 20
 CHUNK_MAX_WORDS = 48
 CHUNK_OVERLAP = 8
 

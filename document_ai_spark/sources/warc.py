@@ -22,6 +22,7 @@ Scale shape — the standard Spark-over-Common-Crawl grain:
 from __future__ import annotations
 
 import datetime as dt
+import glob
 import gzip
 import io
 from collections.abc import Iterator
@@ -191,3 +192,17 @@ def warc_pages(spark: SparkSession, paths: list[str]) -> DataFrame:
         .filter(F.col("record_ok"))
         .select("url", "warc_ts", "html")
     )
+
+
+def stage_warc_pages(spark: SparkSession, patterns: str, out_dir: str) -> int:
+    """Parse a comma/glob list of .warc(.gz) paths ONCE into a pages
+    parquet table at `out_dir` (a pattern matching nothing is kept as a
+    literal path). Returns the number of archive paths. Both verbs stage
+    the parse before extraction: run_extraction_job re-evaluates its
+    source per shard chunk, which would re-parse every archive
+    ceil(n_shards/shards_per_commit)+1 times."""
+    paths: list[str] = []
+    for pat in patterns.split(","):
+        paths.extend(sorted(glob.glob(pat)) or [pat])
+    warc_pages(spark, paths).write.mode("overwrite").parquet(out_dir)
+    return len(paths)

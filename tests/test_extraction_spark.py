@@ -15,7 +15,6 @@ from document_ai_spark.operators.extraction import (
 )
 from document_ai_spark.operators.lineage import (
     done_shards,
-    resume_filter,
     run_extraction_job,
 )
 from document_ai_spark.operators.metrics import (
@@ -202,18 +201,6 @@ def test_relative_bare_output_dir(spark, corpus_dir):
         assert os.path.isdir(os.path.join(out, "_lineage"))
     finally:
         shutil.rmtree(out, ignore_errors=True)
-
-
-def test_resume_filter_anti_join(spark, corpus_dir, tmp_path):
-    pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
-    out = str(tmp_path / "ex2")
-    half = pages.limit(100)
-    extract_pages(half, num_partitions=2).withColumn(
-        "shard_id", F.lit(0)
-    ).write.partitionBy("shard_id").parquet(out)
-    remaining = resume_filter(pages, out)
-    assert remaining.count() == 100
-    assert remaining.join(half.select("url"), "url", "inner").count() == 0
 
 
 def test_crash_between_data_and_lineage_commit(spark, corpus_dir, tmp_path,

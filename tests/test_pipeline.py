@@ -134,6 +134,11 @@ def test_pipeline_excise_and_subword_units(spark, pages_dir, tmp_path):
     rec = spark.read.json(shard).first()
     assert rec.meta.chunk_subwords is not None
     assert rec.meta.pack_no is not None
+    # one resume rule: every stage records a boolean `skipped`, and
+    # every stage that ran records its wall time
+    for name, st in summary["stages"].items():
+        assert isinstance(st["skipped"], bool), name
+        assert st["skipped"] or "wall_sec" in st, name
     # resume: re-run skips every stage including excise
     again = run_pipeline(
         spark, pages_dir, wd, out, rules=RULES,
@@ -143,6 +148,10 @@ def test_pipeline_excise_and_subword_units(spark, pages_dir, tmp_path):
     )
     assert again["stages"]["excise"]["skipped"]
     assert again["stages"]["chunk"]["skipped"]
+    # only extract runs again (it resumes through its shard lineage)
+    assert {
+        name for name, st in again["stages"].items() if not st["skipped"]
+    } == {"extract"}
     # validation: subword budgets refuse an overlap
     with pytest.raises(ValueError):
         run_pipeline(
