@@ -8,6 +8,14 @@ Scale posture (tuned for a 1000-executor cluster, exercised on local[N]):
     (/root/reference/ai_documents/detection/template_matching.py:169-188).
   - shuffle.partitions defaults to the core count locally; on a real cluster
     AQE coalesces from a deliberately high initial number.
+  - lower()/upper() case-map with the JVM (`spark.sql.icu.caseMappings
+    .enabled=false`), not ICU4J. The first non-ASCII ICU call in each JVM
+    loads ICU's case data: on a 4-core host, the first `lower` over the
+    5000-doc sf0.1 `documents` table took 2.3 s and +1.2 GB of driver
+    RSS with ICU, 0.34 s and +29 MB with the JVM. The JVM mapping also
+    differs from the DuckDB oracle's on fewer strings
+    (tests/test_shared_expressions.py names them). SQL confs travel with
+    each query, so executors case-map the same way.
 
 Driver JVM startup: when `get_spark` launches the JVM itself, it starts
 it from a dynamic AppCDS archive (a saved copy of the classes an earlier
@@ -90,6 +98,8 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # JVM case mapping, not ICU4J (see "Scale posture" above)
+        .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",

@@ -1,7 +1,9 @@
 """The curate stage (operators/curate.curate_table) and its two verbs: the
 adaptive recrawl collapse (identity, materialized and checkpointed modes,
 crash-resume reuse), the `curate` CLI over recrawled and near-dup input,
-and the CLI and the `pipeline` verb keeping the same documents."""
+the CLI and the `pipeline` verb keeping the same documents, and the
+learned `clf` rule in `rule_flags` (bootstrapped labels, one-class
+labels)."""
 
 from __future__ import annotations
 
@@ -196,3 +198,37 @@ def test_curate_cli_and_pipeline_keep_the_same_docs(
     newest = {r[0] for r in cli_rows if r[1].year == 2030}
     recrawled = {r.url for r in recrawls.select("url").collect()}
     assert newest == recrawled & {r[0] for r in cli_rows}
+
+
+def test_clf_flags_bootstrap_and_funnel_rule(spark, clf_corpora):
+    """The 'clf' curation rule (r5): rule_flags bootstraps the
+    classifier's positives/negatives from the heuristic rule packs, and
+    the learned filter agrees with the planted split; the funnel gains
+    an into_clf rung when pass_clf is present."""
+    from document_ai_spark.operators.curate import funnel_counts, rule_flags
+
+    pos, neg = clf_corpora
+    mixed = pos.unionByName(
+        neg.select((F.col("doc_id") + 10_000).alias("doc_id"), "text")
+    )
+    rules = ("dedup", "quality", "gopher", "clf")
+    flags = rule_flags(mixed, rules, lang_col=None)
+    got = {r.doc_id: r.pass_clf for r in flags.collect()}
+    pos_keep = sum(got[i] for i in range(150)) / 150
+    neg_keep = sum(got[i + 10_000] for i in range(150)) / 150
+    assert pos_keep > 0.9, pos_keep
+    assert neg_keep < 0.1, neg_keep
+    row = funnel_counts(flags, rules).collect()[0]
+    assert row.into_clf >= row.kept
+    assert row.kept <= 160  # the junk side is filtered
+
+
+def test_clf_flags_degenerate_labels_pass_all(spark, clf_corpora):
+    """All-one-class bootstrap labels mean no signal: every row passes
+    instead of fitting a vacuous model."""
+    from document_ai_spark.operators.curate import rule_flags
+
+    pos, _ = clf_corpora  # every fluent doc passes quality AND gopher
+    out = rule_flags(pos, ("clf",), lang_col=None)
+    assert out.count() == 150
+    assert out.filter("NOT pass_clf").count() == 0

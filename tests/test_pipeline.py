@@ -85,7 +85,7 @@ def test_pipeline_excise_and_subword_units(spark, pages_dir, tmp_path):
     verbatim passages), the BPE stage learns a merge table, chunks
     carry chunk_subwords within the stream-cut budget, and packs are
     budgeted in subwords."""
-    import re
+    from document_ai_spark.queries_text import _winnow_text
 
     wd = str(tmp_path / "wd_ex")
     out = str(tmp_path / "shards_ex")
@@ -102,16 +102,18 @@ def test_pipeline_excise_and_subword_units(spark, pages_dir, tmp_path):
     # sentence, so a handful of excisions is correct behavior
     assert ex["docs_excised"] <= 5
     assert summary["stages"]["bpe"]["n_merges"] > 0
-    curated = {
-        r.url: r.main_text
-        for r in spark.read.parquet(
-            os.path.join(wd, "curated")).collect()
+    # each curated doc under the engine's own winnow normalization
+    norms = {
+        r.url: r.t
+        for r in spark.read.parquet(os.path.join(wd, "curated")).select(
+            "url", _winnow_text("main_text").alias("t")
+        ).collect()
     }
     exrows = spark.read.parquet(os.path.join(wd, "excised")).collect()
     excised = {r.url: r.main_text for r in exrows}
-    assert set(excised) == set(curated)
+    assert set(excised) == set(norms)
     for r in exrows:
-        norm = re.sub(r"\s+", " ", curated[r.url].strip()).lower()
+        norm = norms[r.url]
         if r.n_spans == 0:
             assert r.main_text == norm
         else:

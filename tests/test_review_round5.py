@@ -1,14 +1,12 @@
 """Regression tests for the round-5 self-review (code-review skill)
-findings: the empty-vocab LM fallback, `parquet_rows` path semantics
-(lineage skip / file / glob), honest funnel predecessor-count names,
-and the shared winnowing position-cap constant."""
+findings: the empty-vocab LM fallback, honest funnel predecessor-count
+names, and the shared winnowing position-cap constant. The
+`parquet_rows` path tests live in test_sources_and_plans.py."""
 
 from __future__ import annotations
 
 import os
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 
@@ -29,25 +27,6 @@ def test_lm_all_hapax_vocab_cut_falls_back(spark):
     # everything collapsed into the tail bucket
     assert all(r.bits_per_word is not None for r in scored)
     assert {r.lm_bucket for r in scored} != {"tail"}
-
-
-def test_parquet_rows_skips_lineage_and_handles_files(tmp_path):
-    """parquet_rows must mirror the Spark reader: '_'-prefixed dirs
-    (the extract stage's `_lineage` bookkeeping) are metadata, not
-    data; single-file and glob inputs count like spark.read.parquet
-    accepts them (the old os.walk returned 0 for both)."""
-    from document_ai_spark.sources.io import parquet_rows
-
-    d = tmp_path / "extracted"
-    (d / "_lineage").mkdir(parents=True)
-    tbl = pa.table({"x": list(range(7))})
-    pq.write_table(tbl, str(d / "part-0.parquet"))
-    pq.write_table(tbl, str(d / "part-1.parquet"))
-    pq.write_table(pa.table({"shard": [1, 2, 3]}),
-                   str(d / "_lineage" / "rows.parquet"))
-    assert parquet_rows(str(d)) == 14  # not 17
-    assert parquet_rows(str(d / "part-0.parquet")) == 7
-    assert parquet_rows(str(d / "part-*.parquet")) == 14
 
 
 def test_funnel_clf_without_lm_reports_into_clf(spark):

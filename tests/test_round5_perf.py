@@ -1,8 +1,8 @@
-"""Round-5 perf-change regression tests: the footer row count's path
-semantics, the curate stage summary's collapse mode, and the MinHash
-per-doc shingle dedup (the signature stage vs the per-doc and the old
-global-distinct Spark constructions). The adaptive collapse tests live
-in test_curate.py."""
+"""Round-5 perf-change regression tests: the curate stage summary's
+collapse mode and the MinHash per-doc shingle dedup (the signature stage
+vs the per-doc and the old global-distinct Spark constructions). The
+adaptive collapse tests live in test_curate.py, the footer row count's
+path tests in test_sources_and_plans.py."""
 
 from __future__ import annotations
 
@@ -16,26 +16,6 @@ from document_ai_spark.queries_base import (
     minhash_band_pairs,
     minhash_signatures,
 )
-
-
-def test_parquet_rows_directory_glob(spark, tmp_path):
-    """parquet_rows must mirror spark.read.parquet's path semantics for
-    globs that match DIRECTORIES (e.g. 'extracted/shard_id=*'), not just
-    files — a 0 here silently defeats adaptive_collapse's identity skip
-    and corrupts summary counts."""
-    import glob as _glob
-
-    from document_ai_spark.sources.io import parquet_rows
-
-    base = str(tmp_path / "extracted")
-    df = spark.createDataFrame(
-        [(f"u{i}", i % 2) for i in range(10)], "url string, shard_id int"
-    )
-    df.write.partitionBy("shard_id").parquet(base)
-    pat = os.path.join(base, "shard_id=*")
-    assert len(_glob.glob(pat)) == 2  # the glob matches directories
-    assert parquet_rows(pat) == 10
-    assert parquet_rows(base) == 10
 
 
 def test_pipeline_summary_reports_collapse_mode(spark, corpus_dir, tmp_path):

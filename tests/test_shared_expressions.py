@@ -254,3 +254,54 @@ def test_java_space_docs_match_oracle(spark, tmp_path, name):
         assert got[(1, "spark")] == "window"
         assert got[(3, "window")] == "spark"
         assert got[(4, "spark")] == "batch"
+
+
+# Spark `lower` (JVM String.toLowerCase, with the session's
+# spark.sql.icu.caseMappings.enabled=false) against DuckDB `lower`. The
+# two may differ only here:
+#   - U+0130 `İ`: Java keeps the dot as a combining mark (`i̇`, U+0069
+#     U+0307, the Unicode full mapping); DuckDB gives plain `i`;
+#   - U+A7C7, U+A7C9, U+A7F5 (Latin capital D/S with short stroke
+#     overlay, reversed half H): Unicode 13 letters that the JVM's
+#     tables map and DuckDB 1.0's leave unchanged;
+#   - word-final `Σ`: Java applies the Final_Sigma context rule (`ς`
+#     after a cased letter, not before one); DuckDB always gives `σ`.
+# ICU (Spark's default mapping) also maps 67 code points added after
+# the JVM's Unicode version (U+2C2F, U+A7C0, U+10570–U+105BC, ...),
+# which DuckDB leaves unchanged.
+LOWER_CONTEXT_DOCS = [
+    "AΣ", "AΣ B",          # word-final sigma
+    "ΣA", "A Σ", "AΣA",    # not word-final: `σ` in both
+    "xİy",                 # dotted capital I inside a word
+    "Straße ẞ", "ǅ ᾈ ŉ",  # sharp s, titlecase, iota subscript
+]
+LOWER_KNOWN_DIFFS = {"\u0130", "\ua7c7", "\ua7c9", "\ua7f5",
+                     "AΣ", "AΣ B", "xİy"}
+
+
+def test_lower_matches_duckdb_outside_known_diffs(spark):
+    from document_ai_spark.session import local_frame
+
+    assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+    texts = [
+        chr(c) for c in range(0x80, 0x20000) if not 0xD800 <= c < 0xE000
+    ] + LOWER_CONTEXT_DOCS
+    df = local_frame(spark, list(enumerate(texts)), "i int, t string")
+    got = [
+        r.l for r in df.select("i", F.lower("t").alias("l"))
+        .orderBy("i").collect()
+    ]
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"i": range(len(texts)), "t": texts}))
+    want = [r[0] for r in con.execute(
+        "SELECT lower(t) FROM t ORDER BY i").fetchall()]
+    diffs = {t for t, g, w in zip(texts, got, want) if g != w}
+    assert diffs <= LOWER_KNOWN_DIFFS, sorted(
+        (f"U+{ord(t):04X}" if len(t) == 1 else t)
+        for t in diffs - LOWER_KNOWN_DIFFS
+    )
+    # non-vacuous: the sweep reached the non-ASCII mappings both engines
+    # share, and the named divergences still read as described
+    low = dict(zip(texts, got))
+    assert low["É"] == "é" and low["\U00010400"] == "\U00010428"
+    assert low["AΣ B"] == "aς b" and low["ΣA"] == "σa"

@@ -1,5 +1,7 @@
 """Source-format coverage (S7 JSON / S8 CSV fixtures read with explicit
-schemas) and physical-plan regression checks (pushdown, broadcast)."""
+schemas), physical-plan regression checks (pushdown, broadcast) and the
+parquet table walk behind the footer row count and compaction sizing
+(`_`-prefixed entries, directory globs, file and glob inputs)."""
 
 from __future__ import annotations
 
@@ -155,3 +157,45 @@ def test_table_walk_under_lineage_named_path(tmp_path):
         "bytes": sum(os.path.getsize(f) for f in files),
     }
     assert parquet_rows(str(d)) == 9
+
+
+def test_parquet_rows_directory_glob(spark, tmp_path):
+    """parquet_rows must mirror spark.read.parquet's path semantics for
+    globs that match DIRECTORIES (e.g. 'extracted/shard_id=*'), not just
+    files — a 0 here silently defeats adaptive_collapse's identity skip
+    and corrupts summary counts."""
+    import glob as _glob
+
+    from document_ai_spark.sources.io import parquet_rows
+
+    base = str(tmp_path / "extracted")
+    df = spark.createDataFrame(
+        [(f"u{i}", i % 2) for i in range(10)], "url string, shard_id int"
+    )
+    df.write.partitionBy("shard_id").parquet(base)
+    pat = os.path.join(base, "shard_id=*")
+    assert len(_glob.glob(pat)) == 2  # the glob matches directories
+    assert parquet_rows(pat) == 10
+    assert parquet_rows(base) == 10
+
+
+def test_parquet_rows_skips_lineage_and_handles_files(tmp_path):
+    """parquet_rows must mirror the Spark reader: '_'-prefixed dirs
+    (the extract stage's `_lineage` bookkeeping) are metadata, not
+    data; single-file and glob inputs count like spark.read.parquet
+    accepts them (the old os.walk returned 0 for both)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from document_ai_spark.sources.io import parquet_rows
+
+    d = tmp_path / "extracted"
+    (d / "_lineage").mkdir(parents=True)
+    tbl = pa.table({"x": list(range(7))})
+    pq.write_table(tbl, str(d / "part-0.parquet"))
+    pq.write_table(tbl, str(d / "part-1.parquet"))
+    pq.write_table(pa.table({"shard": [1, 2, 3]}),
+                   str(d / "_lineage" / "rows.parquet"))
+    assert parquet_rows(str(d)) == 14  # not 17
+    assert parquet_rows(str(d / "part-0.parquet")) == 7
+    assert parquet_rows(str(d / "part-*.parquet")) == 14
