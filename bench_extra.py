@@ -17,8 +17,9 @@ Modes:
       short-circuit for plan work.
 
 The JSON output of `queries` and `noop` carries `cds`, the driver JVM's
-class-archive state (absent / created / reused, see
-document_ai_spark/session.py).
+class-archive state (absent / created / reused), `young_max_mb`, its
+young-generation cap, and `gc` (`count`, `ms`), its collections over the
+run (`session.session_report` in document_ai_spark/session.py).
 """
 
 from __future__ import annotations
@@ -62,7 +63,7 @@ def _registry():
 
 
 def cmd_queries(out_path: str, repeat: int, names: list[str]) -> int:
-    from document_ai_spark.session import cds_state
+    from document_ai_spark.session import session_report
 
     spark = _session()
     qs = _registry()
@@ -73,9 +74,10 @@ def cmd_queries(out_path: str, repeat: int, names: list[str]) -> int:
             t0 = time.time()
             qs[name](spark, SF_DIR).count()
             samples[name].append(round(time.time() - t0, 2))
+    report = session_report(spark)
     spark.stop()
     res = {
-        "cds": cds_state(spark),
+        **report,
         "sf": SF_DIR,
         "cpus": CPUS,
         "repeat": repeat,
@@ -108,7 +110,7 @@ def cmd_plans(out_dir: str, suffix: str, names: list[str]) -> int:
 
 
 def cmd_noop(name: str, repeat: int) -> int:
-    from document_ai_spark.session import cds_state
+    from document_ai_spark.session import session_report
 
     spark = _session()
     qs = _registry()
@@ -119,9 +121,9 @@ def cmd_noop(name: str, repeat: int) -> int:
         t0 = time.time()
         df.write.format("noop").mode("overwrite").save()
         walls.append(round(time.time() - t0, 2))
+    report = session_report(spark)
     spark.stop()
-    print(json.dumps({"name": name, "cds": cds_state(spark),
-                      "noop_walls": walls}))
+    print(json.dumps({"name": name, **report, "noop_walls": walls}))
     return 0
 
 

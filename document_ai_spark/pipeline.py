@@ -82,7 +82,7 @@ def run_pipeline(
     # wrappers set on those modules (perfbench's traced mode) take effect
     from .operators import chunking, curate, lineage
     from .operators.pageflags import indexable_pages
-    from .session import cds_state
+    from .session import session_report
     from .sources import jsonl
     from .sources.io import parquet_rows
 
@@ -93,7 +93,7 @@ def run_pipeline(
         )
 
     os.makedirs(workdir, exist_ok=True)
-    summary: dict = {"stages": {}, "session": {"cds": cds_state(spark)}}
+    summary: dict = {"stages": {}}
     stages = summary["stages"]
     t_start = time.time()
 
@@ -338,4 +338,5 @@ def run_pipeline(
     ))
     summary["output"] = output
     summary["wall_sec"] = round(time.time() - t_start, 2)
+    summary["session"] = session_report(spark)
     return summary

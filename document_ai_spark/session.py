@@ -16,6 +16,20 @@ Scale posture (tuned for a 1000-executor cluster, exercised on local[N]):
     differs from the DuckDB oracle's on fewer strings
     (tests/test_shared_expressions.py names them). SQL confs travel with
     each query, so executors case-map the same way.
+  - a local master caps the driver JVM's young generation at
+    `-XX:MaxNewSize=<64 MiB x task slots>` (`young_cap`). In local mode
+    the driver JVM also runs every task, and G1 otherwise lets eden grow
+    to ~60% of the heap between collections: under perfbench's fixed 3 GB
+    heap a `pipeline` pass ended with a `2526M->170M` young collection,
+    its driver JVM at 2.6 GB RSS for ~200 MB of live data. Allocation
+    scales with the concurrent tasks, so the cap scales per slot. It
+    rides `spark.driver.defaultJavaOptions` whenever `get_spark`
+    launches the JVM (with or without a class archive); a caller's own
+    `defaultJavaOptions` come after it and `extraJavaOptions` after
+    those, so either one's `MaxNewSize` wins. spark-submit launches, a
+    running JVM, non-local masters and a spark-defaults.conf that sets
+    the default options get no cap. `session_report` reads the cap and
+    the driver's GC count and time.
 
 Driver JVM startup: when `get_spark` launches the JVM itself, it starts
 it from a dynamic AppCDS archive (a saved copy of the classes an earlier
@@ -23,8 +37,8 @@ driver on this host loaded), so class loading is not paid again on every
 run. One archive per host, keyed by (java build, Spark version, driver
 classpath), lives in `${XDG_CACHE_HOME:-~/.cache}/spark-docext/cds/`:
   - reuse: the archive exists -> `-XX:SharedArchiveFile` through
-    `spark.driver.defaultJavaOptions` (it combines with a caller's
-    `extraJavaOptions`);
+    `spark.driver.defaultJavaOptions`, after the young cap (it combines
+    with a caller's `extraJavaOptions`);
   - create: it does not -> the JVM records dump info, and an `atexit`
     hook dumps the archive with `jcmd` when the Python process exits,
     outside `get_spark` and before the JVM is gone;
@@ -41,6 +55,7 @@ from __future__ import annotations
 import atexit
 import hashlib
 import os
+import re
 import shutil
 import subprocess
 from collections.abc import Mapping
@@ -56,6 +71,8 @@ ARROW_MAX_RECORDS = 256
 # overflow handling on wide batches of giant pages
 ARROW_LARGE_VARTYPES = "true"
 
+# young-generation cap per local task slot (see "Scale posture" above)
+YOUNG_MB_PER_SLOT = 64
 # the creating JVM would print ~350 `[cds]` warnings (pre-JDK-6 classes it
 # cannot archive) when it dumps
 CDS_QUIET = "-Xlog:cds=off,cds+dynamic=off"
@@ -124,14 +141,13 @@ def get_spark(
     conf = dict(extra_conf or {})
     for k, v in conf.items():
         b = b.config(k, v)
-    cds = _cds_launch(conf.get("spark.driver.extraClassPath", ""))
+    java_opts, cds = _launch_plan(master, conf)
+    if java_opts:
+        b = b.config("spark.driver.defaultJavaOptions", java_opts)
     if cds is None:
         spark = b.getOrCreate()
     else:
-        state, opts, conf_dir, prefix = cds
-        b = b.config("spark.driver.defaultJavaOptions", " ".join(
-            filter(None, [conf.get("spark.driver.defaultJavaOptions"), opts])
-        ))
+        state, _, conf_dir, prefix = cds
         # only the launcher reads it: _cds_launch returned because it was unset
         os.environ["SPARK_CONF_DIR"] = conf_dir
         try:
@@ -154,6 +170,79 @@ def cds_state(spark: SparkSession) -> str:
     """How the session's driver JVM used the class archive: 'absent',
     'created' or 'reused'."""
     return getattr(spark, "_das_cds", "absent")
+
+
+def session_report(spark: SparkSession) -> dict:
+    """How the session's driver JVM runs, read over py4j (no Spark job):
+    the class-archive state, the young generation's cap in MiB and the
+    collections so far, summed over every collector."""
+    jvm = spark.sparkContext._jvm
+    mf = jvm.java.lang.management.ManagementFactory
+    hotspot = mf.getPlatformMXBean(jvm.java.lang.Class.forName(
+        "com.sun.management.HotSpotDiagnosticMXBean"))
+    count = ms = 0
+    for bean in mf.getGarbageCollectorMXBeans():
+        # -1 for a value the collector does not track
+        count += max(bean.getCollectionCount(), 0)
+        ms += max(bean.getCollectionTime(), 0)
+    return {
+        "cds": cds_state(spark),
+        "young_max_mb": int(hotspot.getVMOption("MaxNewSize").getValue())
+        // 2**20,
+        "gc": {"count": count, "ms": ms},
+    }
+
+
+def young_cap(master: str) -> str | None:
+    """`-XX:MaxNewSize` for a local master, YOUNG_MB_PER_SLOT per task
+    slot (`local[*]` counts os.cpu_count(), bare `local` one); None for
+    any other master, whose tasks run outside the driver JVM."""
+    m = re.fullmatch(r"local(?:\[(\*|[1-9]\d*)(?:\s*,\s*\d+)?\])?", master)
+    if m is None:
+        return None
+    slots = (os.cpu_count() or 1) if m[1] == "*" else int(m[1] or 1)
+    return f"-XX:MaxNewSize={YOUNG_MB_PER_SLOT * slots}m"
+
+
+def _launches_jvm() -> bool:
+    """Whether getOrCreate launches the driver JVM itself, so its java
+    options still apply: not under spark-submit, nor once a JVM runs."""
+    from pyspark import SparkContext
+
+    return ("PYSPARK_GATEWAY_PORT" not in os.environ
+            and SparkContext._gateway is None)
+
+
+def _defaults_set_java_options(env: Mapping[str, str]) -> bool:
+    """Whether the spark-defaults.conf the launcher reads sets the
+    driver's default java options: a value set here would replace it."""
+    conf_dir = env.get("SPARK_CONF_DIR") or os.path.join(
+        _spark_home(env), "conf")
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+            return "spark.driver.defaultJavaOptions" in f.read()
+    except OSError:
+        return False
+
+
+def _launch_plan(
+    master: str, conf: Mapping[str, str]
+) -> tuple[str, tuple[str, str, str, str] | None]:
+    """The one place the driver JVM's launch options are assembled:
+    (spark.driver.defaultJavaOptions, the `_cds_launch` plan). The young
+    cap comes first and the caller's own default options after it, so a
+    caller's MaxNewSize wins (as does any `extraJavaOptions`, which
+    Spark appends after these); the archive options come last. ('',
+    None) when the JVM is not launched here or the launcher's
+    spark-defaults.conf already sets the default options."""
+    if not _launches_jvm() or _defaults_set_java_options(os.environ):
+        return "", None
+    cds = _cds_launch(conf.get("spark.driver.extraClassPath", ""))
+    return " ".join(filter(None, [
+        young_cap(master),
+        conf.get("spark.driver.defaultJavaOptions"),
+        cds and cds[1],
+    ])), cds
 
 
 def _cds_dir() -> str:
@@ -211,10 +300,8 @@ def _cds_launch(extra_classpath: str) -> tuple[str, str, str, str] | None:
     archive, else None. A published archive is `<prefix>.<bytes>.jsa`
     and is reused only at that size: a truncated archive crashes the JVM
     with SIGBUS."""
-    from pyspark import SparkContext
-
     env = os.environ
-    if "PYSPARK_GATEWAY_PORT" in env or SparkContext._gateway is not None:
+    if not _launches_jvm():
         return None  # spark-submit launched the JVM, or it already runs
     if any(env.get(v) for v in ("SPARK_CONF_DIR", "HADOOP_CONF_DIR",
                                 "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")):

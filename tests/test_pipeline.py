@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from document_ai_spark.pipeline import run_pipeline
-from document_ai_spark.session import cds_state
+from document_ai_spark.session import cds_state, session_report
 
 RULES = ("dedup", "quality")  # gopher rejects the synthetic vocabulary
 
@@ -56,9 +56,16 @@ def test_pipeline_clf_rule(spark, pages_dir, tmp_path):
     assert summary["stages"]["curate"]["rules"] == [
         "dedup", "quality", "clf"
     ]
-    # the run reports how its driver JVM started (the class archive)
-    assert summary["session"] == {"cds": cds_state(spark)}
+    # the run reports how its driver JVM started (the class archive),
+    # its young-generation cap and its collections up to the verb's end
+    report = session_report(spark)
+    assert set(summary["session"]) == {"cds", "young_max_mb", "gc"}
+    assert summary["session"]["cds"] == cds_state(spark)
     assert cds_state(spark) in ("absent", "created", "reused")
+    assert summary["session"]["young_max_mb"] == report["young_max_mb"] > 0
+    gc = summary["session"]["gc"]
+    assert 0 <= gc["count"] <= report["gc"]["count"]
+    assert 0 <= gc["ms"] <= report["gc"]["ms"]
     kept_clf = summary["stages"]["curate"]["docs_kept"]
     assert 0 < kept_clf <= 60
     wd2 = str(tmp_path / "wd_dq")
@@ -76,6 +83,27 @@ def test_pipeline_clf_rule(spark, pages_dir, tmp_path):
     }
     assert clf_urls <= dq_urls
     assert kept_clf <= base["stages"]["curate"]["docs_kept"]
+
+
+def test_pipeline_summary_reports_collapse_mode(spark, corpus_dir, tmp_path):
+    """The curate stage summary must say which collapse branch ran —
+    'identity' for a url-unique pages table (the datagen corpus)."""
+    pages = str(tmp_path / "pages")
+    (
+        spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
+        .orderBy("url").limit(12).write.parquet(pages)
+    )
+    summary = run_pipeline(
+        spark,
+        pages,
+        str(tmp_path / "wd"),
+        str(tmp_path / "out"),
+        rules=("dedup", "quality"),
+        n_shards=2,
+        shards_per_commit=2,
+    )
+    assert summary["stages"]["curate"]["collapse"] == "identity"
+    assert summary["stages"]["curate"]["docs_in"] == 12
 
 
 def test_pipeline_excise_and_subword_units(spark, pages_dir, tmp_path):

@@ -1,12 +1,11 @@
-"""Round-5 perf-change regression tests: the curate stage summary's
-collapse mode and the MinHash per-doc shingle dedup (the signature stage
-vs the per-doc and the old global-distinct Spark constructions). The
-adaptive collapse tests live in test_curate.py, the footer row count's
-path tests in test_sources_and_plans.py."""
+"""Round-5 perf-change regression tests: the MinHash per-doc shingle
+dedup (the signature stage vs the per-doc and the old global-distinct
+Spark constructions) and the band-bucket pair builder. The adaptive
+collapse tests live in test_curate.py, the curate summary's collapse
+mode in test_pipeline.py, the footer row count's path tests in
+test_sources_and_plans.py."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
@@ -16,29 +15,6 @@ from document_ai_spark.queries_base import (
     minhash_band_pairs,
     minhash_signatures,
 )
-
-
-def test_pipeline_summary_reports_collapse_mode(spark, corpus_dir, tmp_path):
-    """The curate stage summary must say which collapse branch ran —
-    'identity' for a url-unique pages table (the datagen corpus)."""
-    from document_ai_spark.pipeline import run_pipeline
-
-    pages = str(tmp_path / "pages")
-    (
-        spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
-        .orderBy("url").limit(12).write.parquet(pages)
-    )
-    summary = run_pipeline(
-        spark,
-        pages,
-        str(tmp_path / "wd"),
-        str(tmp_path / "out"),
-        rules=("dedup", "quality"),
-        n_shards=2,
-        shards_per_commit=2,
-    )
-    assert summary["stages"]["curate"]["collapse"] == "identity"
-    assert summary["stages"]["curate"]["docs_in"] == 12
 
 
 def test_minhash_per_doc_distinct_matches_global_distinct(spark):

@@ -1,6 +1,6 @@
-"""Round-6 optimization guards: scans read without a repartition, the
-session-creation warmup (session._warm_session) and the rewritten
-headline queries' oracle parity."""
+"""Round-6 optimization guards: scans read without a repartition and the
+rewritten headline queries' oracle parity. The session-creation warmup
+tests live in test_session.py."""
 
 from __future__ import annotations
 
@@ -33,24 +33,6 @@ def test_queries_read_scan_without_repartition(spark):
         if "REPARTITION_BY_NUM" in formatted_plan(qs[q](spark, SF))
     ]
     assert fanned == []
-
-
-def test_session_is_warmed_once(spark):
-    """get_spark marks the session after the one-time warmup so repeat
-    calls (getOrCreate returns the same session) never re-run it."""
-    assert getattr(spark, "_das_warmed", False) is True
-
-
-def test_warm_session_is_nonfatal_on_broken_session(spark):
-    """_warm_session must never raise — a failed warmup is a no-op."""
-    from document_ai_spark.session import _warm_session
-
-    class Broken:
-        @property
-        def sparkContext(self):  # pragma: no cover - attribute access
-            raise RuntimeError("boom")
-
-    _warm_session(Broken())  # must not raise
 
 
 @pytest.mark.parametrize("query", ["simhash", "next_right_word_2d"])

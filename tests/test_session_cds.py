@@ -30,9 +30,15 @@ SCRIPT = textwrap.dedent("""
     n = spark.range(5).count()
     changed = sorted(k for k in set(before) | set(os.environ)
                      if before.get(k) != os.environ.get(k))
+    jvm = spark.sparkContext._jvm
+    hotspot = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName(
+            "com.sun.management.HotSpotDiagnosticMXBean"))
     print("RESULT " + json.dumps({
         "cds": cds_state(spark), "n": n, "env_changed": changed,
         "java_opts": spark.conf.get("spark.driver.defaultJavaOptions", ""),
+        "young_mb": int(hotspot.getVMOption("MaxNewSize").getValue())
+        // 2**20,
     }), flush=True)
 """)
 
@@ -52,11 +58,14 @@ def _env(cache: str) -> dict[str, str]:
 
 
 def _session(cache: str, extra_conf: dict | None = None,
-             cmd: list[str] | None = None) -> tuple[dict, str]:
+             cmd: list[str] | None = None,
+             env: dict[str, str] | None = None) -> tuple[dict, str]:
     """Run SCRIPT in a fresh process to its exit (atexit hooks included);
-    returns its RESULT line and everything it wrote to stdout/stderr."""
+    returns its RESULT line and everything it wrote to stdout/stderr.
+    `env` adds to the process's environment."""
     cmd = cmd or [sys.executable, "-c", SCRIPT]
-    r = subprocess.run(cmd + [json.dumps(extra_conf or {})], env=_env(cache),
+    r = subprocess.run(cmd + [json.dumps(extra_conf or {})],
+                       env={**_env(cache), **(env or {})},
                        stdout=subprocess.PIPE, stderr=subprocess.STDOUT,
                        text=True, timeout=600)
     assert r.returncode == 0, r.stdout[-3000:]
@@ -87,10 +96,12 @@ def created(tmp_path_factory):
 def test_first_session_creates_archive_quietly(created):
     """The creating session dumps at exit, publishes one whole archive
     under the key, leaves no temporary file, and its JVM prints no
-    `[cds]` lines (the dump alone would print hundreds of warnings)."""
+    `[cds]` lines (the dump alone would print hundreds of warnings).
+    Its young generation is capped like any local[2] launch."""
     cache, res, out = created
     assert res["cds"] == "created" and res["n"] == 5
     assert "-XX:+RecordDynamicDumpInfo" in res["java_opts"]
+    assert res["young_mb"] == 128
     assert "[cds" not in out
     (archive,) = _archives(cache)
     assert _whole(archive)
@@ -106,11 +117,14 @@ def test_first_session_creates_archive_quietly(created):
 @needs_jcmd
 def test_second_session_maps_archive(created):
     """-Xshare:on fails JVM start unless the archive maps, so a second
-    session that starts at all used it. It leaves os.environ as it found
-    it (SPARK_CONF_DIR is redirected only while the gateway launches)."""
+    session that starts at all used it; the young cap next to the
+    archive option does not stop it mapping. It leaves os.environ as it
+    found it (SPARK_CONF_DIR is redirected only while the gateway
+    launches)."""
     cache, _, _ = created
     res, out = _session(cache, {"spark.driver.extraJavaOptions": "-Xshare:on"})
     assert res["cds"] == "reused" and res["n"] == 5
+    assert res["young_mb"] == 128
     (archive,) = _archives(cache)
     assert f"-XX:SharedArchiveFile={archive}" in res["java_opts"]
     assert "SPARK_CONF_DIR" not in res["env_changed"]
