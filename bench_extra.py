@@ -1,25 +1,20 @@
 """Extra benchmarks for the optimization rounds (guide §1) — bench.py is
-FROZEN for measurement, so everything exploratory lives here.
+FROZEN for measurement, so everything exploratory lives here. Timing A/Bs
+use `perfbench/run.py` (fresh, cold, alternating samples), not this file.
 
 Modes:
-  python bench_extra.py queries OUT.json [--repeat N] [--names a,b,...]
-      Time the headline queries with bench.py's exact methodology
-      (one warm session at local[$SPARK_GRAFT_CPUS], shuffle_partitions =
-      core count, `.count()` as the action, same order). --repeat N runs
-      the whole list N times in one session; per-query min and all
-      samples are recorded so warm-vs-cold is visible.
   python bench_extra.py plans OUTDIR [--suffix _before] [--names ...]
       Dump `.explain("formatted")` for each named query (default: the
-      whole registry) to OUTDIR/<name><suffix>.txt.
+      18 headline queries) to OUTDIR/<name><suffix>.txt.
   python bench_extra.py noop NAME [--repeat N]
       Isolate one query with the noop sink (computes every column,
       discards the result) — separates computation from the count()
       short-circuit for plan work.
 
-The JSON output of `queries` and `noop` carries `cds`, the driver JVM's
-class-archive state (absent / created / reused), `young_max_mb`, its
-young-generation cap, and `gc` (`count`, `ms`), its collections over the
-run (`session.session_report` in document_ai_spark/session.py).
+The JSON output of `noop` carries `cds`, the driver JVM's class-archive
+state (absent / created / reused), `young_max_mb`, its young-generation
+cap, and `gc` (`count`, `ms`), its collections over the run
+(`session.session_report` in document_ai_spark/session.py).
 """
 
 from __future__ import annotations
@@ -60,37 +55,6 @@ def _registry():
     import __spark_entry__ as entrymod
 
     return entrymod.queries()
-
-
-def cmd_queries(out_path: str, repeat: int, names: list[str]) -> int:
-    from document_ai_spark.session import session_report
-
-    spark = _session()
-    qs = _registry()
-    samples: dict[str, list[float]] = {n: [] for n in names}
-    for r in range(repeat):
-        for name in names:
-            spark.sparkContext.setJobDescription(f"bench_extra:{name}:r{r}")
-            t0 = time.time()
-            qs[name](spark, SF_DIR).count()
-            samples[name].append(round(time.time() - t0, 2))
-    report = session_report(spark)
-    spark.stop()
-    res = {
-        **report,
-        "sf": SF_DIR,
-        "cpus": CPUS,
-        "repeat": repeat,
-        "queries_min": {n: min(v) for n, v in samples.items()},
-        "queries_first": {n: v[0] for n, v in samples.items()},
-        "samples": samples,
-        "total_first": round(sum(v[0] for v in samples.values()), 2),
-        "total_min": round(sum(min(v) for v in samples.values()), 2),
-    }
-    with open(out_path, "w") as f:
-        json.dump(res, f, indent=1)
-    print(json.dumps(res))
-    return 0
 
 
 def cmd_plans(out_dir: str, suffix: str, names: list[str]) -> int:
@@ -151,8 +115,6 @@ def main() -> int:
         else:
             pos.append(args[i])
             i += 1
-    if mode == "queries":
-        return cmd_queries(pos[0], repeat, names)
     if mode == "plans":
         return cmd_plans(pos[0], suffix, names)
     if mode == "noop":

@@ -184,9 +184,9 @@ def cmd_blocks(args) -> int:
 
 def cmd_ingest(args) -> int:
     """Streaming ingest: drain everything currently in the input dir
-    through the extraction kernel with exactly-once checkpointed file
-    progress (availableNow), then stop — the cron-style incremental-crawl
-    deployment."""
+    through the extraction kernel with exactly-once file progress kept
+    in the streaming checkpoint (availableNow), then stop — the
+    cron-style incremental-crawl deployment."""
     from document_ai_spark.streaming.ingest import stream_extract
 
     spark = _spark(args)
@@ -258,6 +258,9 @@ def cmd_curate(args) -> int:
     """Training-data curation over an extracted table: recrawl collapse,
     the selected keep rules over main_text -> kept docs written out,
     per-stage funnel counts printed."""
+    import os
+    import tempfile
+
     from document_ai_spark.operators.curate import (
         curate_table,
         funnel_counts,
@@ -265,12 +268,20 @@ def cmd_curate(args) -> int:
 
     spark = _spark(args)
     rules = tuple(r.strip() for r in args.rules.split(",") if r.strip())
-    # no workdir here: a recrawled input's collapse is checkpointed
-    stats, flags = curate_table(spark, args.extracted, args.output, rules)
-    # funnel restricted to the SELECTED rules so its `kept` agrees with
-    # what was written (the flag frame always carries quality/gopher
-    # columns, selected or not)
-    row = funnel_counts(flags, rules).collect()[0]
+    # a recrawled input's collapse is materialized in a temporary dir
+    # NEXT TO the output (inside it, the curated overwrite would delete
+    # it while the write still reads it); the funnel reads it too
+    parent = os.path.dirname(os.path.abspath(args.output))
+    os.makedirs(parent, exist_ok=True)
+    with tempfile.TemporaryDirectory(prefix=".curate-", dir=parent) as tmp:
+        stats, flags = curate_table(
+            spark, args.extracted, args.output, rules,
+            os.path.join(tmp, "collapsed"),
+        )
+        # funnel restricted to the SELECTED rules so its `kept` agrees
+        # with what was written (the flag frame always carries
+        # quality/gopher columns, selected or not)
+        row = funnel_counts(flags, rules).collect()[0]
     out = {
         "rules": list(rules),
         "written": stats["docs_kept"],

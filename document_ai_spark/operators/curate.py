@@ -22,14 +22,24 @@ from pyspark.sql.window import Window as W
 
 from ..queries_base import (
     _norm_words,
+    exact_keeper,
     gopher_signals,
     lang_scores,
     minhash_band_pairs,
     n_punct,
     pred_lang,
     quality_ok,
+    text_hash,
 )
 from ..sources.io import parquet_rows
+from .quality_clf import score_quality, train_quality_classifier
+from .quality_lm import lm_quality_scores
+from .repetition import rep_pass_expr
+from .similarity import dedup_clusters
+
+# the extracted table's url, crawl time and text: the collapse keeps the
+# newest crawl of each url, ties broken on the text
+URL, TS, TEXT = "url", "warc_ts", "main_text"
 
 
 def curation_flags(
@@ -50,7 +60,7 @@ def curation_flags(
     n_tokens = F.size(words).cast("long")
     cols = [
         F.col(id_col),
-        F.md5(F.encode(t, "UTF-8")).alias("_text_hash"),
+        text_hash(t).alias("_text_hash"),
         n_tokens.alias("n_tokens"),
         quality_ok(n_tokens, n_punct(t)).alias("pass_quality"),
         gopher_signals(t, words, n_tokens)["gopher_ok"].alias("pass_gopher"),
@@ -60,70 +70,25 @@ def curation_flags(
             (pred_lang(lang_scores(t)) == F.col(lang_col)).alias("pass_lang")
         )
     if include_rep:
-        from .repetition import rep_pass_expr
-
         cols.append(rep_pass_expr(t).alias("pass_rep"))
-    flags = df.select(*cols)
-    w = W.partitionBy("_text_hash")
-    return flags.withColumn(
-        "pass_dedup", F.col(id_col) == F.min(id_col).over(w)
+    return df.select(*cols).withColumn(
+        "pass_dedup", exact_keeper(id_col, "_text_hash")
     ).drop("_text_hash")
 
 
-def neardup_keeper_flags(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Fuzzy-dedup stage (r3): MinHash signatures -> LSH band buckets ->
-    candidate pairs -> connected components -> keeper = min id per cluster.
-    Returns (id, pass_neardup) for EVERY input row (docs in no cluster
-    pass). Production funnels dedup fuzzily, not just exactly — this is
-    the cluster-keeper composition as a funnel stage.
-
-    The pair generator is the SHARED builder (queries_base.
-    minhash_band_pairs): the funnel's DuckDB oracle composes
-    _SQL_MINHASH_CORE, so one Spark-side construction must back both the
-    documents-table queries and this engine or the oracles silently
-    drift. Components converge in O(log diameter) rounds of hash joins
-    (operators/similarity.connected_components)."""
-    from .similarity import dedup_clusters
-
-    pairs = minhash_band_pairs(df, id_col=id_col, text_col=text_col)
-    clusters = dedup_clusters(pairs)
-    nd = clusters.select(
-        F.col("doc_id").alias("_id"), F.col("is_keeper")
-    )
-    return (
-        df.select(F.col(id_col).alias("_id"))
-        .join(nd, "_id", "left")
-        .select(
-            F.col("_id").alias(id_col),
-            F.coalesce("is_keeper", F.lit(True)).alias("pass_neardup"),
-        )
-    )
-
-
-def collapse_recrawls(
-    df: DataFrame,
-    id_col: str = "url",
-    ts_col: str = "warc_ts",
-    tiebreak_cols: tuple[str, ...] = ("main_text",),
-) -> DataFrame:
-    """Keep ONE row per id (latest ts): re-crawled urls otherwise sail
-    through the id-keyed exact-dedup flag (same id = same keeper) and
-    every flag join multiplies — 2 crawl rows x neardup x lm = 8 flag
-    rows per url. curate_table runs this first (via adaptive_collapse).
+def collapse_recrawls(df: DataFrame) -> DataFrame:
+    """Keep ONE row per url (latest warc_ts): re-crawled urls otherwise
+    sail through the id-keyed exact-dedup flag (same id = same keeper)
+    and every flag join multiplies — 2 crawl rows x neardup x lm = 8
+    flag rows per url. curate_table runs this first (via
+    adaptive_collapse).
 
     Equal timestamps (WARC-Date is second-granular) break ties on the
-    content columns in `tiebreak_cols` (those present in df), so the
-    winner is a pure function of the data — never of partition order."""
-    order = [F.col(ts_col).desc()] + [
-        F.col(c).asc_nulls_first()
-        for c in tiebreak_cols
-        if c in df.columns
-    ]
-    w = W.partitionBy(id_col).orderBy(*order)
+    text, so the winner is a pure function of the data — never of
+    partition order."""
+    w = W.partitionBy(URL).orderBy(
+        F.col(TS).desc(), F.col(TEXT).asc_nulls_first()
+    )
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -132,69 +97,35 @@ def collapse_recrawls(
 
 
 def adaptive_collapse(
-    spark,
-    extracted_path: str,
-    materialize_dir: str | None = None,
-    id_col: str = "url",
-    ts_col: str = "warc_ts",
+    spark, extracted_path: str, materialize_dir: str
 ) -> tuple[DataFrame, str]:
     """Adaptive recrawl collapse for a curation entry point (r5 pair,
     same philosophy as extraction's salted='auto'): returns
-    (collapsed_frame, mode).
+    (collapsed_frame, mode), the mode chosen by the input.
 
     The collapse window is consumed by EVERY downstream flag stage plus
     the final semi-join write; left as lazy lineage it re-runs a
     full-row shuffle per consumer (measured 72-200 s vs 19 s for the
     neardup stage alone on the 16k bench slice). So:
 
-    - id-unique inputs (the common recrawl-free shard) skip the window
+    - url-unique inputs (the common recrawl-free shard) skip the window
       entirely — mode 'identity', flags read pruned parquet scans;
     - inputs WITH recrawls pay the window exactly once: the collapsed
       table is written to `materialize_dir` (idempotent _SUCCESS
       commit, so a crash between this write and the curated output
-      resumes without recomputing) — mode 'materialized'. Callers with
-      no workdir (the `curate` CLI verb) pass materialize_dir=None and
-      get a localCheckpoint instead — mode 'checkpointed' (same
-      run-once guarantee, executor-local storage, no resume).
+      resumes without recomputing) — mode 'materialized'.
 
-    The uniqueness probe is a countDistinct over the id column only
+    The uniqueness probe is a countDistinct over the url column only
     (column-pruned scan); the row count comes from parquet footers
     (driver-side metadata, no job)."""
     raw = spark.read.parquet(extracted_path)
-    n_rows = parquet_rows(extracted_path)
-    n_ids = raw.select(id_col).distinct().count()
-    if n_ids == n_rows:
+    if raw.select(URL).distinct().count() == parquet_rows(extracted_path):
         return raw, "identity"
-    if materialize_dir is None:
-        return (
-            collapse_recrawls(raw, id_col=id_col, ts_col=ts_col)
-            .localCheckpoint(),
-            "checkpointed",
-        )
     if not os.path.exists(os.path.join(materialize_dir, "_SUCCESS")):
-        collapse_recrawls(raw, id_col=id_col, ts_col=ts_col).write.mode(
-            "overwrite"
-        ).parquet(materialize_dir)
+        collapse_recrawls(raw).write.mode("overwrite").parquet(
+            materialize_dir
+        )
     return spark.read.parquet(materialize_dir), "materialized"
-
-
-def lm_flags(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    vocab: DataFrame | None = None,
-) -> DataFrame:
-    """CCNet-style LM stage (r4): (id, pass_lm) where pass_lm is true
-    for docs outside the worst perplexity bucket (lm_bucket != 'tail')
-    under operators/quality_lm's unigram scorer — self-scored by
-    default, or against a reference (word, count) vocab."""
-    from .quality_lm import lm_quality_scores
-
-    s = lm_quality_scores(df, vocab=vocab, id_col=id_col,
-                          text_col=text_col)
-    return s.select(
-        F.col(id_col), (F.col("lm_bucket") != "tail").alias("pass_lm")
-    )
 
 
 def clf_flags(
@@ -202,8 +133,6 @@ def clf_flags(
     labels: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    keep_threshold: float = 0.5,
-    seed: int = 42,
 ) -> DataFrame:
     """Learned-classifier stage (r5): (id, pass_clf) from the
     reference-vs-crawl LR in operators/quality_clf, trained on `labels`
@@ -215,8 +144,6 @@ def clf_flags(
     (quality_clf.N_FIT_SAMPLE, fixed seed); scoring is one codegen'd
     scan. Degenerate label sets (everything one class) skip the fit
     and pass every row — no signal is no filter."""
-    from .quality_clf import score_quality, train_quality_classifier
-
     # the label lineage is consumed by several actions (two emptiness
     # probes + the bounded fit sample) and rule_flags stacks a heavy
     # plan under it (labels come from the already-joined flag frame,
@@ -231,11 +158,9 @@ def clf_flags(
         return df.select(
             F.col(id_col), F.lit(True).alias("pass_clf")
         )
-    model = train_quality_classifier(pos, neg, text_col=text_col,
-                                     seed=seed)
+    model = train_quality_classifier(pos, neg, text_col=text_col)
     scored = score_quality(
-        model, df.select(F.col(id_col), F.col(text_col)),
-        text_col=text_col, keep_threshold=keep_threshold,
+        model, df.select(F.col(id_col), F.col(text_col)), text_col=text_col
     )
     return scored.select(F.col(id_col), "pass_clf")
 
@@ -321,9 +246,28 @@ def rule_flags(
         include_rep="rep" in rules,
     )
     if "neardup" in rules:
-        flags = flags.join(neardup_keeper_flags(df, id_col, text_col), id_col)
+        # fuzzy dedup (r3): MinHash signatures -> LSH band pairs ->
+        # connected components, keeper = min id per cluster; docs in no
+        # cluster pass. The pair builder is the one the registry's
+        # MinHash queries and their DuckDB twin (_SQL_MINHASH_CORE)
+        # share, and the components come back as a small eager frame,
+        # so the left join adds no scan of df.
+        nd = dedup_clusters(
+            minhash_band_pairs(df, id_col=id_col, text_col=text_col)
+        ).select(F.col("doc_id").alias(id_col), "is_keeper")
+        flags = flags.join(nd, id_col, "left").withColumn(
+            "pass_neardup", F.coalesce("is_keeper", F.lit(True))
+        ).drop("is_keeper")
     if "lm" in rules:
-        flags = flags.join(lm_flags(df, id_col, text_col), id_col)
+        # CCNet-style LM stage (r4): pass unless in the worst perplexity
+        # bucket of operators/quality_lm's self-scored unigram model
+        lm = lm_quality_scores(df, id_col=id_col, text_col=text_col)
+        flags = flags.join(
+            lm.select(
+                F.col(id_col), (F.col("lm_bucket") != "tail").alias("pass_lm")
+            ),
+            id_col,
+        )
     if "clf" in rules:
         labels = flags.select(
             F.col(id_col),
@@ -340,28 +284,29 @@ def curate_table(
     extracted_path: str,
     out_dir: str,
     rules: tuple[str, ...],
-    collapse_dir: str | None = None,
+    collapse_dir: str,
 ) -> tuple[dict, DataFrame]:
     """The curate stage over an extracted (url, warc_ts, main_text, ...)
     table, shared by the `curate` and `pipeline` verbs: recrawl collapse
     (adaptive_collapse; `collapse_dir` is where a recrawled input is
-    materialized, None checkpoints it instead), rule_flags, kept_filter,
-    then a left-semi write of the kept rows to `out_dir`.
+    materialized, outside `out_dir`), rule_flags, kept_filter, then a
+    left-semi write of the kept rows to `out_dir`.
 
     Returns (summary, flags). The summary counts come from parquet
     footers: docs_in is the extracted table's row count (recrawls
     included), docs_kept the written table's. `flags` is the rule-flag
-    frame, for funnel_counts(flags, rules)."""
+    frame, for funnel_counts(flags, rules); it reads `collapse_dir`, so
+    the caller keeps that directory until the funnel has run."""
     docs_in = parquet_rows(extracted_path)
     # duplicate url rows would sail through the url-keyed exact-dedup
     # flag and multiply through every flag join, so the collapse runs
     # first; it is a lazy window re-run per consumer unless paid once
     extracted, mode = adaptive_collapse(spark, extracted_path, collapse_dir)
     flags = rule_flags(
-        extracted, rules, id_col="url", text_col="main_text", lang_col=None
+        extracted, rules, id_col=URL, text_col=TEXT, lang_col=None
     )
-    kept = kept_filter(flags, rules).select("url")
-    extracted.join(kept, "url", "left_semi").write.mode(
+    kept = kept_filter(flags, rules).select(URL)
+    extracted.join(kept, URL, "left_semi").write.mode(
         "overwrite"
     ).parquet(out_dir)
     summary = {

@@ -26,6 +26,7 @@ an Iceberg catalog the same code path commits snapshots instead.
 
 from __future__ import annotations
 
+import os
 import time
 import uuid
 from datetime import datetime
@@ -59,8 +60,14 @@ def _lineage_path(out_dir: str) -> str:
 
 
 def done_shards(spark: SparkSession, out_dir: str) -> set[int]:
+    path = _lineage_path(out_dir)
+    # _append_lineage_rows writes a local path from the driver, so a
+    # missing dir here is a fresh output: asking Spark to read it raises
+    # (and logs a stack trace) only to land in the except below
+    if _local_fs_path(path) and not os.path.isdir(path):
+        return set()
     try:
-        lin = spark.read.parquet(_lineage_path(out_dir))
+        lin = spark.read.parquet(path)
     except Exception:
         return set()
     rows = (
@@ -95,7 +102,6 @@ def _append_lineage_rows(spark, rows, schema, path: str) -> None:
     if not _local_fs_path(path):
         append_rows(local_frame(spark, rows, schema), path)
         return
-    import os
     import uuid as _uuid
 
     import pyarrow as pa
@@ -145,7 +151,6 @@ def _chunk_shard_stats(
     later pyspark.ml model closure in the session (LogisticRegression
     summaries capture the SparkSession) — probed on Spark 4.1, see the
     r5 test pair test_pipeline -> test_quality_clf."""
-    import os
 
     # the isdir(out_dir) guard matters on clusters where
     # fs.defaultFS is remote: a scheme-less '/data/extracted' LOOKS

@@ -91,7 +91,7 @@ def lm_quality_scores(
     # same three-use shape _q_shared_passages checkpoints
     vocab = vocab.localCheckpoint(eager=True)
     if max_vocab is not None:
-        n_vocab = vocab.count()  # cheap: counts the checkpointed model
+        n_vocab = vocab.count()  # cheap: counts the materialized model
         if n_vocab > max_vocab:
             cut = (
                 vocab.agg(

@@ -319,7 +319,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
             )
         )
         # checkpoint FIRST (cut lineage growth), then probe convergence on
-        # the materialized result — probing the un-checkpointed frame
+        # the materialized result — probing the frame before its checkpoint
         # re-executed the whole round's plan twice
         new_labels = new_labels.localCheckpoint(eager=True)
         changed = (

@@ -223,8 +223,7 @@ def run_pipeline(
     # has recrawls; counts from parquet footers — operators/curate)
     curated_dir = _sub(workdir, "curated")
     stage("curate", curated_dir, lambda d: curate.curate_table(
-        spark, extracted_dir, d, rules,
-        collapse_dir=_sub(workdir, "collapsed"),
+        spark, extracted_dir, d, rules, _sub(workdir, "collapsed"),
     )[0])
 
     # ---- 4b. optional exact-substring removal: passages shared

@@ -12,7 +12,8 @@ Spark expression can never drift from the oracle string that checks it:
   - the quality inputs (punctuation, stopwords, non-space chars) and the
     frozen quality_ok rule;
   - the Gopher rule pack;
-  - the rounded array cosine.
+  - the rounded array cosine;
+  - the exact-dedup text hash and keeper (min id per hash).
 
 Call sites compose these builders rather than copy them. Builders take
 the text / `words` Column as an argument, so each call site keeps its own
@@ -38,6 +39,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 SHINGLE_W = 3
 
@@ -225,6 +227,26 @@ _SQL_GOPHER_OK = """n_words >= 50
     AND n_alpha * 10 >= n_words * 8
     AND n_sym * 10 <= n_words
     AND n_stop >= 2"""
+
+
+# --------------------------------------------------------------------------
+# Exact dedup: the md5 of the UTF-8 text, keeper = min id per hash.
+# --------------------------------------------------------------------------
+
+
+def text_hash(text: F.Column) -> F.Column:
+    return F.md5(F.encode(text, "UTF-8"))
+
+
+def exact_keeper(id_col: str, hash_col: str) -> F.Column:
+    """True for the min id among the rows sharing `hash_col`'s value."""
+    return F.col(id_col) == F.min(id_col).over(Window.partitionBy(hash_col))
+
+
+_SQL_TEXT_HASH = "md5(text)"
+_SQL_EXACT_KEEPER = (
+    f"doc_id = MIN(doc_id) OVER (PARTITION BY {_SQL_TEXT_HASH})"
+)
 
 
 # --------------------------------------------------------------------------

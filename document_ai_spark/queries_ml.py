@@ -35,16 +35,20 @@ from pyspark.sql import types as T
 from .queries import _t
 from .queries_base import (
     _shingles,
+    _SQL_EXACT_KEEPER,
     _SQL_MINHASH_CORE,
     _SQL_SHINGLES_FROM_WORDS,
+    _SQL_TEXT_HASH,
     _SQL_WORDS,
     _norm_words,
     _py_words,
     _sql_cosine,
     cosine,
+    exact_keeper,
     minhash_band_pairs,
     minhash_signatures,
     N_BANDS,
+    text_hash,
 )
 from .queries_text import SQL_LANG_ID, SQL_QUALITY_GOPHER, SQL_QUALITY_SCORE
 
@@ -58,26 +62,22 @@ from .queries_text import SQL_LANG_ID, SQL_QUALITY_GOPHER, SQL_QUALITY_SCORE
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    from pyspark.sql.window import Window as W
-
     clones = d.filter(F.col("doc_id") % 50 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "text"
     )
-    aug = d.unionAll(clones)
-    h = aug.withColumn("text_hash", F.md5(F.encode("text", "UTF-8")))
-    w = W.partitionBy("text_hash")
+    h = d.unionAll(clones).withColumn("text_hash", text_hash(F.col("text")))
     return h.withColumn(
-        "is_keeper", F.col("doc_id") == F.min("doc_id").over(w)
+        "is_keeper", exact_keeper("doc_id", "text_hash")
     ).select("doc_id", "text_hash", "is_keeper")
 
 
-SQL_DEDUP_EXACT = """
+SQL_DEDUP_EXACT = f"""
 WITH aug AS (
   SELECT doc_id, text FROM documents
   UNION ALL
   SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 50 = 0)
-SELECT doc_id, md5(text) AS text_hash,
-       doc_id = MIN(doc_id) OVER (PARTITION BY md5(text)) AS is_keeper
+SELECT doc_id, {_SQL_TEXT_HASH} AS text_hash,
+       {_SQL_EXACT_KEEPER} AS is_keeper
 FROM aug
 """
 

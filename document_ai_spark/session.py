@@ -6,8 +6,9 @@ Scale posture (tuned for a 1000-executor cluster, exercised on local[N]):
     (100-1000x median, FIXTURES.md §1) cannot blow the Python worker heap —
     the analog of the reference's fixed-height resize bound
     (/root/reference/ai_documents/detection/template_matching.py:169-188).
-  - shuffle.partitions defaults to the core count locally; on a real cluster
-    AQE coalesces from a deliberately high initial number.
+  - shuffle.partitions defaults to a local master's task slots
+    (`local_slots`, the same count the young cap below uses); on a real
+    cluster AQE coalesces from a deliberately high initial number.
   - lower()/upper() case-map with the JVM (`spark.sql.icu.caseMappings
     .enabled=false`), not ICU4J. The first non-ASCII ICU call in each JVM
     loads ICU's case data: on a 4-core host, the first `lower` over the
@@ -100,11 +101,9 @@ def get_spark(
     else:
         submitted = False
     if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cpus
-        try:
-            shuffle_partitions = int(n)
-        except ValueError:
-            shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = local_slots(master) or (
+            int(cpus) if cpus.isdigit() else 32
+        )
     b = SparkSession.builder.appName(app_name)
     if not submitted:
         b = b.master(master)
@@ -193,14 +192,23 @@ def session_report(spark: SparkSession) -> dict:
     }
 
 
-def young_cap(master: str) -> str | None:
-    """`-XX:MaxNewSize` for a local master, YOUNG_MB_PER_SLOT per task
-    slot (`local[*]` counts os.cpu_count(), bare `local` one); None for
-    any other master, whose tasks run outside the driver JVM."""
+def local_slots(master: str) -> int | None:
+    """Task slots of a local master (`local[N]` and `local[N, F]` N,
+    `local[*]` os.cpu_count(), bare `local` one); None for any other
+    master, whose tasks run outside the driver JVM (or that Spark
+    rejects)."""
     m = re.fullmatch(r"local(?:\[(\*|[1-9]\d*)(?:\s*,\s*\d+)?\])?", master)
     if m is None:
         return None
-    slots = (os.cpu_count() or 1) if m[1] == "*" else int(m[1] or 1)
+    return (os.cpu_count() or 1) if m[1] == "*" else int(m[1] or 1)
+
+
+def young_cap(master: str) -> str | None:
+    """`-XX:MaxNewSize` for a local master, YOUNG_MB_PER_SLOT per task
+    slot; None for any other master."""
+    slots = local_slots(master)
+    if slots is None:
+        return None
     return f"-XX:MaxNewSize={YOUNG_MB_PER_SLOT * slots}m"
 
 

@@ -1,9 +1,10 @@
 """The curate stage (operators/curate.curate_table) and its two verbs: the
-adaptive recrawl collapse (identity, materialized and checkpointed modes,
-crash-resume reuse), the `curate` CLI over recrawled and near-dup input,
-the CLI and the `pipeline` verb keeping the same documents, and the
-learned `clf` rule in `rule_flags` (bootstrapped labels, one-class
-labels)."""
+adaptive recrawl collapse (identity and materialized modes, crash-resume
+reuse, the deterministic tie-break), the `curate` CLI over recrawled and
+near-dup input, the CLI and the `pipeline` verb keeping the same
+documents, the near-dup keepers riding the one flag scan, the learned
+`clf` rule in `rule_flags` (bootstrapped labels, one-class labels), and
+`funnel_counts`' rungs under rule subsets."""
 
 from __future__ import annotations
 
@@ -12,6 +13,8 @@ import json
 import os
 
 from pyspark.sql import functions as F
+
+SF = "/root/testdata/sf0.001"
 
 
 def test_adaptive_collapse_identity_for_unique_ids(spark, tmp_path):
@@ -63,26 +66,24 @@ def test_adaptive_collapse_materializes_once_and_resumes(spark, tmp_path):
     assert {r.url: r.main_text for r in out2.collect()} == rows
 
 
-def test_adaptive_collapse_checkpoints_without_workdir(spark, tmp_path):
-    """Callers with no workdir (the curate CLI) omit materialize_dir:
-    recrawled input still collapses to one newest row per url, paid
-    once via localCheckpoint — mode 'checkpointed', nothing on disk."""
-    from document_ai_spark.operators.curate import adaptive_collapse
+def test_collapse_recrawls_deterministic_tiebreak(spark):
+    """Equal timestamps pick the winner by content, never by partition
+    order."""
+    from document_ai_spark.operators.curate import collapse_recrawls
 
-    src = str(tmp_path / "extracted")
-    spark.createDataFrame(
-        [
-            ("u0", "2026-01-01", "old crawl"),
-            ("u0", "2026-01-09", "new crawl"),
-            ("u1", "2026-01-02", "only crawl"),
-        ],
-        "url string, warc_ts string, main_text string",
-    ).write.parquet(src)
-    out, mode = adaptive_collapse(spark, src)
-    assert mode == "checkpointed"
-    assert {r.url: r.main_text for r in out.collect()} == {
-        "u0": "new crawl", "u1": "only crawl"
-    }
+    ts = dt.datetime(2026, 1, 1)
+    rows = [("u/1", ts, "bbb"), ("u/1", ts, "aaa"), ("u/2", ts, "zzz")]
+    results = set()
+    for nparts in (1, 2, 3):
+        df = spark.createDataFrame(
+            rows, "url string, warc_ts timestamp, main_text string"
+        ).repartition(nparts)
+        got = tuple(sorted(
+            (r.url, r.main_text)
+            for r in collapse_recrawls(df).collect()
+        ))
+        results.add(got)
+    assert results == {(("u/1", "aaa"), ("u/2", "zzz"))}
 
 
 def test_curate_cli_collapses_recrawled_urls(spark, corpus_dir, tmp_path,
@@ -120,6 +121,8 @@ def test_curate_cli_collapses_recrawled_urls(spark, corpus_dir, tmp_path,
         dup.select("url"), "url", "left_semi"
     ).count()
     assert newest == dup_urls_kept
+    # the collapse was materialized beside the output and cleaned up
+    assert sorted(os.listdir(tmp_path)) == ["ex", "kept"]
 
 
 def test_cli_curate_neardup_rule(spark, corpus_dir, tmp_path, capsys):
@@ -147,8 +150,8 @@ def test_curate_cli_and_pipeline_keep_the_same_docs(
     """Both verbs run the one curate stage: over the same extracted table
     (with recrawled urls) and the same rules, the CLI writes exactly the
     rows the pipeline's curate stage keeps, and its `written` is the
-    pipeline's `docs_kept`. The pipeline materializes the collapse in
-    its workdir, the CLI checkpoints it."""
+    pipeline's `docs_kept`. Both materialize the collapse: the pipeline
+    in its workdir, the CLI in a temporary dir next to its output."""
     from document_ai_spark.__main__ import main
     from document_ai_spark.pipeline import run_pipeline
 
@@ -200,6 +203,68 @@ def test_curate_cli_and_pipeline_keep_the_same_docs(
     assert newest == recrawled & {r[0] for r in cli_rows}
 
 
+def test_rule_flags_neardup_marks_clones(spark):
+    from document_ai_spark.operators.curate import rule_flags
+
+    base = (
+        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
+        "lambda mu nu xi omicron pi rho sigma tau upsilon"
+    )
+    rows = [
+        (1, base),
+        (2, base),  # exact clone of 1 -> same shingle set -> same cluster
+        (3, base + " extra trailing words here"),  # near-dup of 1
+        (4, "entirely different text with its own vocabulary set "
+            "one two three four five six seven eight nine ten"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r.doc_id: r.pass_neardup
+        for r in rule_flags(df, ("neardup",), lang_col=None).collect()
+    }
+    assert got[1] is True      # cluster keeper (min id)
+    assert got[2] is False     # clone loses to keeper
+    assert got[4] is True      # singleton passes
+    # doc 3 shares most shingles with 1/2 -> at least one LSH band should
+    # collide; if it clusters, it must not be the keeper
+    assert got[3] in (False, True)
+
+
+def test_neardup_keepers_join_onto_the_one_flag_scan(spark):
+    """The near-dup keepers join onto the flag frame by id: the cluster
+    labels come back as a small eager frame, so neither rule_flags with
+    neardup over a parquet input nor the registry funnel reads its table
+    a second time (a left join from a fresh `select(id)` scan did)."""
+    from document_ai_spark.operators.curate import rule_flags
+    from document_ai_spark.queries_ml import q_curation_funnel
+
+    def scans(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.count("Scan parquet")
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    flags = rule_flags(docs, ("dedup", "neardup", "quality"), lang_col=None)
+    assert "pass_neardup" in flags.columns
+    assert scans(flags) == 1
+    assert scans(q_curation_funnel(spark, SF)) == 1
+
+
+def test_funnel_counts_monotone_with_neardup(spark):
+    from document_ai_spark.queries_ml import q_curation_funnel
+
+    row = q_curation_funnel(spark, SF).collect()[0]
+    assert (
+        row.total_docs
+        >= row.after_dedup
+        >= row.after_neardup
+        >= row.after_quality
+        >= row.after_gopher
+        >= row.kept
+    )
+    # the stage must not be vacuous at this SF (26 cluster non-keepers)
+    assert row.after_neardup < row.after_dedup
+
+
 def test_clf_flags_bootstrap_and_funnel_rule(spark, clf_corpora):
     """The 'clf' curation rule (r5): rule_flags bootstraps the
     classifier's positives/negatives from the heuristic rule packs, and
@@ -232,3 +297,53 @@ def test_clf_flags_degenerate_labels_pass_all(spark, clf_corpora):
     out = rule_flags(pos, ("clf",), lang_col=None)
     assert out.count() == 150
     assert out.filter("NOT pass_clf").count() == 0
+
+
+def test_funnel_clf_without_lm_reports_into_clf(spark):
+    """A funnel with clf but NO lm must not print a phantom LM rung:
+    the count entering the classifier is named into_clf (and there is
+    no into_lm column at all when the lm stage never ran)."""
+    from document_ai_spark.operators.curate import ALL_RULES, funnel_counts
+
+    flags = spark.createDataFrame(
+        [(1, True, True, True, True, True, 10),
+         (2, True, True, True, True, False, 10),
+         (3, True, False, True, True, True, 10)],
+        "doc_id long, pass_dedup boolean, pass_quality boolean, "
+        "pass_gopher boolean, pass_lang boolean, pass_clf boolean, "
+        "n_tokens long",
+    )
+    row = funnel_counts(flags, ALL_RULES).collect()[0]
+    cols = set(funnel_counts(flags, ALL_RULES).columns)
+    assert "into_clf" in cols and "into_lm" not in cols
+    assert "after_lm" not in cols and "after_lang" not in cols
+    assert row.into_clf == 2  # docs 1, 2 reach the classifier
+    assert row.kept == 1
+
+
+def test_funnel_counts_respects_rule_subset(spark):
+    """funnel_counts(flags, rules) must agree with kept_filter under the
+    same rule subset: curation_flags always emits quality/gopher, so an
+    unrestricted funnel for `--rules dedup,quality` would conjoin
+    gopher anyway and print kept < written."""
+    from document_ai_spark.operators.curate import (
+        ALL_RULES,
+        funnel_counts,
+        kept_filter,
+    )
+
+    flags = spark.createDataFrame(
+        [(1, True, True, False, 10),
+         (2, True, True, True, 10),
+         (3, True, False, True, 10)],
+        "doc_id long, pass_dedup boolean, pass_quality boolean, "
+        "pass_gopher boolean, n_tokens long",
+    )
+    rules = ("dedup", "quality")
+    row = funnel_counts(flags, rules).collect()[0]
+    assert row.kept == kept_filter(flags, rules).count() == 2
+    cols = set(funnel_counts(flags, rules).columns)
+    assert "after_gopher" not in cols  # unselected stage: no rung
+    # every rule selected: every present flag counts
+    full = funnel_counts(flags, ALL_RULES).collect()[0]
+    assert full.after_gopher == 1 and full.kept == 1

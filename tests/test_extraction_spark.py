@@ -448,3 +448,31 @@ def test_lineage_mixed_writers_resume(spark, corpus_dir, tmp_path):
     )
     assert latest.count() == 4
     assert done_shards(spark, out) == {0, 1, 2, 3}
+
+
+def test_done_shards_reads_no_missing_local_lineage(spark, tmp_path,
+                                                    monkeypatch):
+    """A fresh local output has no lineage dir: done_shards answers from
+    the filesystem, without a Spark read that would raise and log a
+    FileNotFoundException stack trace on every fresh run. The spy counts
+    calls instead of raising, because done_shards' own `except
+    Exception` would swallow a raise."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from document_ai_spark.operators.lineage import _lineage_path
+
+    real = DataFrameReader.parquet
+    calls = []
+
+    def spy(self, *paths, **kw):
+        calls.append(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    assert done_shards(spark, str(tmp_path / "fresh")) == set()
+    assert calls == []
+    # control: an existing (here empty) lineage dir still goes to Spark
+    old = str(tmp_path / "old")
+    os.makedirs(_lineage_path(old))
+    assert done_shards(spark, old) == set()
+    assert calls == [(_lineage_path(old),)]

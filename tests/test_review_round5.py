@@ -1,7 +1,7 @@
 """Regression tests for the round-5 self-review (code-review skill)
-findings: the empty-vocab LM fallback, honest funnel predecessor-count
-names, and the shared winnowing position-cap constant. The
-`parquet_rows` path tests live in test_sources_and_plans.py."""
+findings: the empty-vocab LM fallback and the shared winnowing
+position-cap constant. The `parquet_rows` path tests live in
+test_sources_and_plans.py, the funnel rung tests in test_curate.py."""
 
 from __future__ import annotations
 
@@ -27,56 +27,6 @@ def test_lm_all_hapax_vocab_cut_falls_back(spark):
     # everything collapsed into the tail bucket
     assert all(r.bits_per_word is not None for r in scored)
     assert {r.lm_bucket for r in scored} != {"tail"}
-
-
-def test_funnel_clf_without_lm_reports_into_clf(spark):
-    """A funnel with clf but NO lm must not print a phantom LM rung:
-    the count entering the classifier is named into_clf (and there is
-    no into_lm column at all when the lm stage never ran)."""
-    from document_ai_spark.operators.curate import ALL_RULES, funnel_counts
-
-    flags = spark.createDataFrame(
-        [(1, True, True, True, True, True, 10),
-         (2, True, True, True, True, False, 10),
-         (3, True, False, True, True, True, 10)],
-        "doc_id long, pass_dedup boolean, pass_quality boolean, "
-        "pass_gopher boolean, pass_lang boolean, pass_clf boolean, "
-        "n_tokens long",
-    )
-    row = funnel_counts(flags, ALL_RULES).collect()[0]
-    cols = set(funnel_counts(flags, ALL_RULES).columns)
-    assert "into_clf" in cols and "into_lm" not in cols
-    assert "after_lm" not in cols and "after_lang" not in cols
-    assert row.into_clf == 2  # docs 1, 2 reach the classifier
-    assert row.kept == 1
-
-
-def test_funnel_counts_respects_rule_subset(spark):
-    """funnel_counts(flags, rules) must agree with kept_filter under the
-    same rule subset: curation_flags always emits quality/gopher, so an
-    unrestricted funnel for `--rules dedup,quality` would conjoin
-    gopher anyway and print kept < written."""
-    from document_ai_spark.operators.curate import (
-        ALL_RULES,
-        funnel_counts,
-        kept_filter,
-    )
-
-    flags = spark.createDataFrame(
-        [(1, True, True, False, 10),
-         (2, True, True, True, 10),
-         (3, True, False, True, 10)],
-        "doc_id long, pass_dedup boolean, pass_quality boolean, "
-        "pass_gopher boolean, n_tokens long",
-    )
-    rules = ("dedup", "quality")
-    row = funnel_counts(flags, rules).collect()[0]
-    assert row.kept == kept_filter(flags, rules).count() == 2
-    cols = set(funnel_counts(flags, rules).columns)
-    assert "after_gopher" not in cols  # unselected stage: no rung
-    # every rule selected: every present flag counts
-    full = funnel_counts(flags, ALL_RULES).collect()[0]
-    assert full.after_gopher == 1 and full.kept == 1
 
 
 def test_excision_cap_shares_pos_bits():

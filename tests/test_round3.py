@@ -1,6 +1,6 @@
 """Round-3 additions: approx-distinct error bound, deterministic IVF,
-near-dup curation stage (operator + funnel; the CLI rule is in
-test_curate.py), suite queries' internal consistency."""
+suite queries' internal consistency. The near-dup curation stage
+(operator, funnel and CLI rule) is tested in test_curate.py."""
 
 from __future__ import annotations
 
@@ -62,49 +62,6 @@ def test_ann_ivf_deterministic_and_sane(spark):
     )
     ivf = set(r.vec_id for r in by_probe[0])
     assert len(ivf & brute10) >= 2  # measured 4/10 at sf0.001
-
-
-def test_neardup_keeper_flags_marks_clones(spark):
-    from document_ai_spark.operators.curate import neardup_keeper_flags
-
-    base = (
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-        "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    )
-    rows = [
-        (1, base),
-        (2, base),  # exact clone of 1 -> same shingle set -> same cluster
-        (3, base + " extra trailing words here"),  # near-dup of 1
-        (4, "entirely different text with its own vocabulary set "
-            "one two three four five six seven eight nine ten"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc_id: r.pass_neardup
-        for r in neardup_keeper_flags(df).collect()
-    }
-    assert got[1] is True      # cluster keeper (min id)
-    assert got[2] is False     # clone loses to keeper
-    assert got[4] is True      # singleton passes
-    # doc 3 shares most shingles with 1/2 -> at least one LSH band should
-    # collide; if it clusters, it must not be the keeper
-    assert got[3] in (False, True)
-
-
-def test_funnel_counts_monotone_with_neardup(spark):
-    from document_ai_spark.queries_ml import q_curation_funnel
-
-    row = q_curation_funnel(spark, SF).collect()[0]
-    assert (
-        row.total_docs
-        >= row.after_dedup
-        >= row.after_neardup
-        >= row.after_quality
-        >= row.after_gopher
-        >= row.kept
-    )
-    # the stage must not be vacuous at this SF (26 cluster non-keepers)
-    assert row.after_neardup < row.after_dedup
 
 
 def test_suite_row_counts_match_members(spark):

@@ -99,28 +99,6 @@ def test_connected_components_total_on_null_endpoints(spark):
         assert cc == {1: 1, 2: 1, 7: 7, 8: 7}
 
 
-def test_collapse_recrawls_deterministic_tiebreak(spark):
-    """Equal timestamps pick the winner by content, never by partition
-    order."""
-    import datetime as dt
-
-    from document_ai_spark.operators.curate import collapse_recrawls
-
-    ts = dt.datetime(2026, 1, 1)
-    rows = [("u/1", ts, "bbb"), ("u/1", ts, "aaa"), ("u/2", ts, "zzz")]
-    results = set()
-    for nparts in (1, 2, 3):
-        df = spark.createDataFrame(
-            rows, "url string, warc_ts timestamp, main_text string"
-        ).repartition(nparts)
-        got = tuple(sorted(
-            (r.url, r.main_text)
-            for r in collapse_recrawls(df).collect()
-        ))
-        results.add(got)
-    assert results == {(("u/1", "aaa"), ("u/2", "zzz"))}
-
-
 def test_pack_sequences_rejects_bad_budget(spark):
     from document_ai_spark.operators.chunking import pack_sequences
 

@@ -49,6 +49,17 @@ def test_caller_extra_java_options_win(tmp_path):
     assert _warnings(out) == []
 
 
+def test_local_slots_parses_every_local_master_once():
+    """One parse of a local master backs both the default shuffle width
+    and the young cap: N of `local[N]` and `local[N, F]`, os.cpu_count()
+    for `local[*]`, one for bare `local`; None for other masters."""
+    assert session.local_slots("local[4]") == 4
+    assert session.local_slots("local[2, 3]") == 2
+    assert session.local_slots("local") == 1
+    assert session.local_slots("local[*]") == os.cpu_count()
+    assert session.local_slots("yarn") is None
+
+
 def test_young_cap_per_task_slot():
     """64 MiB per task slot of a local master; no cap for masters whose
     tasks run outside the driver JVM (or that Spark rejects)."""
